@@ -65,9 +65,8 @@ object Bench {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("source")).orderBy(col("doc_id"))))
       .localCheckpoint(true)
-    // (no unpersist: checkpoint blocks aren't CacheManager entries, so
-    // Dataset.unpersist would be a no-op — the 200-row blocks just age out)
-    warmed.count()
+    try { warmed.count(); () }
+    finally operators.DedupOps.releaseCheckpoint(warmed)
     // distributed-trainer codegen (micro frames, corpus-independent):
     // the forced-distributed stage lines otherwise absorb 2-3 s of
     // Janino/JIT on their first-and-only run, which the trend guard
@@ -94,17 +93,7 @@ object Bench {
     // stage cold, report it as its own line below, and let the
     // consumers keep their memo-warm per-query meaning. A regression in
     // a stage itself is then trend-guard-visible.
-    operators.DedupOps.resetWordSetLabels()
-    operators.DedupOps.resetLshPairs()
-    operators.TextOps.resetTokenizedDocs()
-    operators.TextOps.resetBpeMerges()
-    operators.VectorOps.resetKmeans()
-    operators.VectorOps.resetPca()
-    operators.TextOps.resetLr()
-    operators.VectorOps.resetPqAdc()
-    operators.ContractOps.resetContractsDump()
-    operators.KeyOps.resetEvmDataset()
-    etl.Dump.resetRawDay()
+    operators.StageMemo.resetAll()
     // a failing stage goes into the SAME errors map as a failing query —
     // the -1 sentinel alone made stage failures near-undiagnosable from
     // captured bench output

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.functions.{CallFlatten, Udfs}
+import graft.operators.{DedupOps, StageMemo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -722,32 +723,19 @@ object Dump {
     * window). Measured round-over-round as `stage:dump_day` so an ETL
     * regression (a lost pushed filter, a new shuffle in a projection)
     * surfaces in the trend guard, not just in specs. */
-  def warmDumpDay(s: SparkSession, d: String): Map[String, Long] = {
-    // the synthesized day memoizes (stage:dumpsynth_raw) so the
-    // stage:dump_day line times the ETL, not the corpus build; the
-    // memo is KEYED by the sf dir — a memo built for another corpus
-    // (or a standalone spec call with no memo at all) falls back to
-    // an inline build, which then measures synthesis+ETL again (the
-    // pre-split meaning; in the bench the synth stage always runs
-    // first, so the fallback only fires if that stage already failed
-    // — a red line of its own, not a silent dilution)
-    val raw = memoRawDay match {
-      case Some((`d`, frame)) => frame
-      case _ => synthesizeRawDay(s, d)
-    }
-    runDumpDay(s, raw)
-  }
+  def warmDumpDay(s: SparkSession, d: String): Map[String, Long] =
+    // the synthesized day memoizes (stage:dumpsynth_raw runs first) so
+    // the stage:dump_day line times the ETL, not the corpus build
+    runDumpDay(s, rawDayStage(s, d))
 
-  @volatile private var memoRawDay: Option[(String, DataFrame)] = None
-  def resetRawDay(): Unit = { memoRawDay = None }
+  private[graft] val rawDayStage = new StageMemo(
+    synthesizeRawDay(_, _).localCheckpoint(), DedupOps.releaseCheckpoint)
+  def resetRawDay(): Unit = rawDayStage.reset()
 
   /** Bench stage: build + materialize the synthetic nested raw day
     * (localCheckpoint) so [[warmDumpDay]] measures ONLY the dump. */
-  def warmRawDay(s: SparkSession, d: String): Long = {
-    val raw = synthesizeRawDay(s, d).localCheckpoint()
-    memoRawDay = Some((d, raw))
-    raw.count()
-  }
+  def warmRawDay(s: SparkSession, d: String): Long =
+    rawDayStage(s, d).count()
 
   /** Deterministic nested raw day synthesized from the events table
     * (~events/3 extrinsics across events/15 blocks, with reward
@@ -779,8 +767,9 @@ object Dump {
       (7L, 7L, "signup", 7.0), (15L, 8L, "view", 8.0),
       (20L, 9L, "purchase", 9.0), (21L, 10L, "click", 10.0))
       .toDF("event_id", "user_id", "event_type", "value")
-    runDumpDay(s, synthesizeRawDayFrom(ev, blocks = 2L).localCheckpoint())
-    ()
+    val raw = synthesizeRawDayFrom(ev, blocks = 2L).localCheckpoint()
+    try { runDumpDay(s, raw); () }
+    finally DedupOps.releaseCheckpoint(raw)
   }
 
   private def synthesizeRawDayFrom(ev: DataFrame,

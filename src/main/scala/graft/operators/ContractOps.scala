@@ -47,26 +47,15 @@ object ContractOps {
     * query re-synthesizes and re-writes all three tables, tripling the
     * dump cost across the gate run). Bench times the cold build +
     * writes as `stage:contracts_dump`; the queries read memo-warm. */
-  @volatile private var contractsDumpMemo
-      : Option[((SparkSession, String), Map[String, DataFrame])] = None
-
-  private def dumped(s: SparkSession, d: String)
-      : Map[String, DataFrame] = synchronized {
-    contractsDumpMemo match {
-      case Some(((ms, md), m)) if (ms eq s) && md == d => m
-      case _ =>
-        val m = buildContractsDump(s, d)
-        contractsDumpMemo = Some(((s, d), m))
-        m
-    }
-  }
+  private[graft] val contractsDumpStage =
+    new StageMemo(buildContractsDump(_, _))
 
   /** Bench hooks: build + write the shared contracts dump / drop the
     * memo so the bench times the stage cold (Bench.main resets). */
   def warmContractsDump(s: SparkSession, d: String): Unit = {
-    dumped(s, d); ()
+    contractsDumpStage(s, d); ()
   }
-  def resetContractsDump(): Unit = { contractsDumpMemo = None }
+  def resetContractsDump(): Unit = contractsDumpStage.reset()
 
   private def buildContractsDump(s: SparkSession, d: String)
       : Map[String, DataFrame] = {
@@ -168,7 +157,7 @@ object ContractOps {
   // K18 — contractscode: last store per code hash wins, storer from
   // the signer dim (null for the unsigned gap)
   private def k18(s: SparkSession, d: String): DataFrame =
-    dumped(s, d)("contractscode")
+    contractsDumpStage(s, d)("contractscode")
       .select(col("code_hash"), col("block_number"),
         col("extrinsic_id"), col("storer_pub_key"),
         us(col("code_stored_ts")).as("stored_us"))
@@ -193,7 +182,7 @@ object ContractOps {
   // K19 — contracts: state ⋈ latest Instantiated ⋈ code-store block;
   // uninstantiated state rows drop (the ref's blockTS gate)
   private def k19(s: SparkSession, d: String): DataFrame =
-    dumped(s, d)("contracts")
+    contractsDumpStage(s, d)("contracts")
       .select(col("address_pub_key"), col("code_hash"),
         col("deployer_pub_key"), col("block_number_stored"),
         col("block_number_instantiated"), col("storage_bytes"),
@@ -225,7 +214,7 @@ object ContractOps {
   // K20 — contractscall: every numeric gate + the selector decode,
   // unknown contracts dropped by the staging inner join
   private def k20(s: SparkSession, d: String): DataFrame =
-    dumped(s, d)("contractscall")
+    contractsDumpStage(s, d)("contractscall")
       .select(col("extrinsic_id"), col("gas_limit"),
         col("storage_deposit_limit"), col("value"), col("code_hash"),
         col("caller_pub_key"),

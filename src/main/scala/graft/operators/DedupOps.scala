@@ -53,6 +53,11 @@ object DedupOps {
     // previously re-planned its own scan+split subtree; the filter and
     // the distinct-explode run over the checkpointed arrays instead.
     // ts IS split(trim(text), '\s+') — the stage pins the identity.
+    // The cap filters AFTER the stage, so it loses scan pushdown: a
+    // capped standalone dedup call (no text consumer in the session)
+    // still tokenizes and checkpoints the FULL corpus, and the blocks
+    // stay for the whole session (until the memo is reset or a new
+    // session/sfDir evicts it).
     TextOps.tokenizedDocs(s, d).filter(col("doc_id") < cap)
       .select(col("doc_id"), col("source"),
         explode(array_distinct(col("ts"))).as("w"))
@@ -180,13 +185,14 @@ object DedupOps {
   private val bandKey = Seq("band", "s0", "s1", "s2", "s3")
 
   private def d3(s: SparkSession, d: String): DataFrame =
-    lshPairsShared(s, d).orderBy(col("da"), col("db"))
+    lshStage(s, d).orderBy(col("da"), col("db"))
 
   /** Memoized [[lshVerifiedPairs]] — d3 and d12 are two consumers of
     * ONE signature/band/verify stage (the d5/d6 shared-stage lesson:
     * without the memo each consumer re-runs the whole LSH pipeline).
     * Bench times it cold as `stage:lsh_pairs`. */
-  private val lshStage = new StageMemo(lshVerifiedPairs(_, _))
+  private[graft] val lshStage = new StageMemo(
+    lshVerifiedPairs(_, _).localCheckpoint(), releaseCheckpoint)
 
   /** Bench/test hook: drop the memoized LSH pair stage. */
   def resetLshPairs(): Unit = lshStage.reset()
@@ -195,9 +201,6 @@ object DedupOps {
   def warmLshPairs(s: SparkSession, d: String): Unit = {
     lshStage(s, d); ()
   }
-
-  private def lshPairsShared(s: SparkSession, d: String): DataFrame =
-    lshStage(s, d)
 
   /** The d3 engine as a reusable frame: LSH band candidates (hot
     * buckets as star edges) verified with exact Jaccard ≥ 0.5 —
@@ -294,7 +297,7 @@ object DedupOps {
     // later-batch partners (the da-side branch) would create mutual
     // dup_of cycles: two identical new docs each pointing at the other,
     // and a first-seen-wins consumer would drop every copy.
-    val directed = lshPairsShared(s, d)
+    val directed = lshStage(s, d)
       .filter(col("db") >= NewBatchFrom)
       .select(col("db").as("new_id"), col("da").as("partner"),
         col("jaccard"))
@@ -623,16 +626,16 @@ object DedupOps {
     * pair scan + iterative CC (round-4 bench: d6 at 6.0 s was 16 % of
     * the suite). Single slot keeps the cache bounded — a new (session,
     * dir) evicts the old entry. */
-  private val labelsStage = new StageMemo(
-    (s, d) => connectedComponents(
+  private[graft] val labelsStage = new StageMemo(
+    (s, d) => connectedComponents( // materializes its own labels
       d2Pairs(s, d).select(col("da"), col("db")), "da", "db"),
-    checkpoint = false) // CC already localCheckpoints internally
+    releaseCheckpoint)
 
   /** Free the checkpointed blocks behind a [[connectedComponents]]
     * result: the labels frame is a projection over a localCheckpoint'd
     * plan, so `df.unpersist()` would miss the cached RDD — the blocks
     * live on the LogicalRDD node(s) inside the analyzed plan. */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(false))
@@ -645,7 +648,7 @@ object DedupOps {
     * for (s, d). Callers time this to make the one-time stage cost a
     * visible bench line (min-of-reps hides it otherwise). */
   def warmWordSetLabels(s: SparkSession, d: String): Unit = {
-    wordSetLabels(s, d); ()
+    labelsStage(s, d); ()
   }
 
   /** Bench hook: the forced-DISTRIBUTED twin of [[warmWordSetLabels]].
@@ -661,9 +664,6 @@ object DedupOps {
     releaseCheckpoint(labels)
   }
 
-  private def wordSetLabels(s: SparkSession, d: String): DataFrame =
-    labelsStage(s, d)
-
   // D5 — near-dup cluster assignment: d2's Jaccard pairs → connected
   // components → per-cluster stats. Oracle = DuckDB transitive closure
   // (recursive CTE) over the identical pair set, so the component
@@ -672,7 +672,7 @@ object DedupOps {
   // plan audit of this query sees only the final groupBy over the
   // checkpointed labels — the pair-stage plan is audited via d2.
   private def d5(s: SparkSession, d: String): DataFrame =
-    wordSetLabels(s, d)
+    labelsStage(s, d)
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         max(col("node")).as("max_doc"))
@@ -742,7 +742,7 @@ object DedupOps {
   // source. Anti-join against the component labels; oracle = the same
   // closure in DuckDB.
   private def d6(s: SparkSession, d: String): DataFrame = {
-    val dropped = wordSetLabels(s, d)
+    val dropped = labelsStage(s, d)
       .filter(col("node") =!= col("label"))
       .select(col("node").as("doc_id"))
     Tables.documents(s, d).filter(col("doc_id") < 2000)
@@ -787,7 +787,7 @@ object DedupOps {
   // operands; the per-source effective-size sum runs through
   // DECIMAL(38,12) (order-independent).
   private def d10(s: SparkSession, d: String): DataFrame = {
-    val labels = wordSetLabels(s, d)
+    val labels = labelsStage(s, d)
     val sizes = labels.groupBy(col("label"))
       .agg(count(lit(1)).as("csize"))
     val labeled = labels.join(sizes, "label")

@@ -786,28 +786,15 @@ object KeyOps {
   // dump (the d3/d12 shared-stage lesson — without it each query
   // re-joins and re-writes all three tables). Bench times the cold
   // build + writes as `stage:evmds_dump`; the queries read memo-warm.
-  @volatile private var evmDsMemo
-      : Option[((SparkSession, String), Map[String, DataFrame])] = None
-
-  private def evmDatasetDump(s: SparkSession, d: String)
-      : Map[String, DataFrame] = synchronized {
-    evmDsMemo match {
-      case Some(((ms, md), m)) if (ms eq s) && md == d => m
-      case _ =>
-        val m = buildEvmDataset(s, d)
-        evmDsMemo = Some(((s, d), m))
-        m
-    }
-  }
+  private[graft] val evmDsStage = new StageMemo(buildEvmDataset(_, _))
 
   /** Bench hooks: build + write the shared evm.* dataset dump / drop
-    * the memo so the bench times the stage cold (Bench.main resets —
-    * the hook its contractsDump sibling always had; nothing cached to
-    * release, the memo holds parquet read-backs). */
+    * the memo so the bench times the stage cold (nothing cached to
+    * release: the memo holds parquet read-backs). */
   def warmEvmDataset(s: SparkSession, d: String): Unit = {
-    evmDatasetDump(s, d); ()
+    evmDsStage(s, d); ()
   }
-  def resetEvmDataset(): Unit = { evmDsMemo = None }
+  def resetEvmDataset(): Unit = evmDsStage.reset()
 
   private def buildEvmDataset(s: SparkSession, d: String)
       : Map[String, DataFrame] = {
@@ -884,7 +871,7 @@ object KeyOps {
   }
 
   private def k21(s: SparkSession, d: String): DataFrame =
-    evmDatasetDump(s, d)("logs")
+    evmDsStage(s, d)("logs")
       .select(col("id"), col("transaction_hash"),
         col("transaction_index"), col("log_index"), col("address"),
         col("data"), size(col("topics")).as("n_topics"),
@@ -918,7 +905,7 @@ object KeyOps {
        |FROM t ORDER BY transaction_hash""".stripMargin
 
   private def k22(s: SparkSession, d: String): DataFrame =
-    evmDatasetDump(s, d)("token_transfers")
+    evmDsStage(s, d)("token_transfers")
       .select(col("id"), col("token_address"), col("from_address"),
         col("to_address"), col("value"), col("transaction_hash"),
         col("log_index"), col("block_number"))
@@ -958,7 +945,7 @@ object KeyOps {
   private def k23(s: SparkSession, d: String): DataFrame = {
     val eth = lit(1.0e18)
     val gu = col("receipt_gas_used").cast("double")
-    evmDatasetDump(s, d)("transactions")
+    evmDsStage(s, d)("transactions")
       .groupBy(col("transaction_type"))
       .agg(
         count(lit(1)).as("n_txs"),

@@ -22,6 +22,19 @@ class BenchContractSpec extends AnyFunSuite {
       s"duplicate contract prefixes: ${dups.mkString(",")}")
   }
 
+  test("stage lines keep their names and order") {
+    // perfbench's read_mix pairs Bench.stages.take(8) with one consumer
+    // per stage BY POSITION, and tokdocs must run first so its line
+    // times the cold build: a reorder would quietly time the wrong stage
+    assert(Bench.stages.map(_._1) == Seq(
+      "stage:tokdocs_corpus", "stage:dedup_cc_labels", "stage:lsh_pairs",
+      "stage:bpe_merges", "stage:kmeans_train", "stage:pca_train",
+      "stage:lr_train", "stage:pqadc_codes", "stage:ccdist_labels",
+      "stage:bpedist_merges", "stage:kmeansdist_train",
+      "stage:pcadist_train", "stage:lrdist_train", "stage:dumpsynth_raw",
+      "stage:dump_day", "stage:evmds_dump", "stage:contracts_dump"))
+  }
+
   test("contract line fits the 2000-byte tail for the full inventory") {
     // worst-plausible widths: every query slow (3-digit seconds), negative
     // error sentinel mixed in

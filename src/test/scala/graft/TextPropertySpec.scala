@@ -82,7 +82,7 @@ class TextPropertySpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = refBpe(words, 16)
     val got = operators.TextOps.bpeMerges(SparkTestBase.spark,
-      SparkTestBase.sf, 16)
+      SparkTestBase.sf)
       .collect().map(r => (r.getString(1), r.getString(2), r.getLong(4)))
       .toSeq
     assert(got == expected)
@@ -104,7 +104,7 @@ class TextPropertySpec extends AnyFunSuite {
   test("x13 encode counts equal the reference trainer's segmentation") {
     import org.apache.spark.sql.functions.{explode, expr}
     val s = SparkTestBase.spark
-    val merges = operators.TextOps.trainedMerges(s, SparkTestBase.sf, 16)
+    val merges = operators.TextOps.trainedMerges(s, SparkTestBase.sf)
       .map(m => (m._2, m._3))
     // reference encode: replay merges in rank order, each a greedy
     // non-overlapping left-to-right pass
