@@ -267,15 +267,15 @@ object Bench {
   }
 
   /** Tightest-rung key compression — first `_` segment with "stage:"
-    * → "s:" (BenchTrend.pfx and bench_diff normalize the same way;
-    * this MUST stay byte-identical to both). */
-  private def contractKey(k: String): String =
+    * → "s:". [[BenchTrend]] normalizes both compared files with this
+    * same function, so old/new files line up whatever rung wrote them. */
+  private[graft] def contractKey(k: String): String =
     k.split('_')(0).replace("stage:", "s:")
 
   def renderContract(results: Seq[(String, Double)], total: Double,
                      sfDir: String): String = {
     // marker: 0 = full "query_name_prefix" note, 1 = short "prefix",
-    // 2 = none (last resort; bench_diff/BenchTrend never read the
+    // 2 = none (last resort; BenchTrend never reads the
     // marker — it is documentation for a human reading the line)
     def render(dec: Int, sf: String, prefixKeys: Boolean,
         marker: Int = 0): String = {
@@ -317,7 +317,7 @@ object Bench {
       sf: String): String = {
     val num = contractNum(-1) _
     val key = contractKey _
-    val isCanary = (k: String) => BenchTrend.CanaryPrefixes.contains(key(k))
+    val isCanary = (k: String) => BenchTrend.CanaryCleanBand.contains(key(k))
     // canaries first, then slowest-first (throw sentinels -1 sort with
     // the canaries: a thrown query must always surface)
     val ordered = results.sortBy { case (k, v) =>
@@ -335,7 +335,10 @@ object Bench {
   }
 }
 
-/** Round-over-round bench comparison, storm-aware.
+/** Round-over-round bench comparison, storm-aware — the repo's one
+  * trend guard: BenchContractSpec runs it over the two newest committed
+  * driver benches, and `tools/dev.sh graft.BenchTrend <old> <new>`
+  * ([[BenchTrend.main]]) runs it over any two bench files.
   *
   * The driver's bench host suffers multi-minute hypervisor CPU-steal
   * storms (BENCH_r05: steal_ticks 30 225 vs 21 the round before; every
@@ -355,33 +358,30 @@ object Bench {
   *  - CANARY normalization (round-9 lesson): /proc/stat steal is blind
   *    to whole-host slowdowns that aren't hypervisor steal (BENCH_r09:
   *    steal_ticks 75, yet 11 untouched queries read 3-6x high, among
-  *    them the frozen scan+agg canary x1). If any
-  *    [[BenchTrend.CanaryPrefixes]] query — code that never changes —
-  *    inflates >= [[BenchTrend.CanaryStormFactor]] vs its ABSOLUTE
-  *    pinned clean band ([[BenchTrend.CanaryCleanBand]] — never the
-  *    previous artifact, which round 11 showed can itself be inflated
-  *    and mask the next storm), the run is host-contaminated and
-  *    slowdowns demote to "suspect, re-measure locally" exactly like a
-  *    steal storm.
+  *    them the frozen scan+agg canary x1). If any canary query — code
+  *    that never changes — inflates >= [[BenchTrend.CanaryStormFactor]]
+  *    vs its ABSOLUTE pinned clean band ([[BenchTrend.CanaryCleanBand]]
+  *    — never the previous artifact, which round 11 showed can itself
+  *    be inflated and mask the next storm), the run is
+  *    host-contaminated and slowdowns demote to "suspect, re-measure
+  *    locally" exactly like a steal storm.
   *
-  * The flag rule matches tools/bench_diff.py exactly — `new > floor
-  * AND new > factor×old` — closing the old spec's `old ≥ 0.5 s` arming
-  * blind band (a 0.3 s → 10 s regression must not pass).
+  * The flag rule is `new > floor AND new > factor×old` — closing the
+  * old spec's `old ≥ 0.5 s` arming blind band (a 0.3 s → 10 s
+  * regression must not pass).
   */
 object BenchTrend {
+  import Bench.contractKey
+
+  /** A query regresses when its newer time exceeds [[FloorSeconds]]
+    * AND [[RegressionFactor]] × its older time (sub-floor times are
+    * noise-class on local[32]); it improves on the mirror rule. */
+  val RegressionFactor = 3.0
+  val FloorSeconds = 0.3
+
   /** Whole-run steal above this = the run itself is storm-contaminated
     * (idle rounds measure ~20-70 ticks; the r05 storm run hit 30 225). */
   val StormRunTicks = 500L
-
-  /** Canary queries: frozen-trivial shapes (one pushed-filter scan + one
-    * agg / point lookup / exact-dedup groupBy) untouched since round 1.
-    * Their code has no dependency on anything that lands round to round,
-    * so a canary inflating can only mean the HOST was slow while it ran —
-    * the round-9 lesson: a steal-INVISIBLE whole-host slowdown (steal
-    * ticks 75, well under [[StormRunTicks]]) inflated 11 untouched
-    * queries 3-6x including canary x1 (0.15 -> 0.51 s), while /proc/stat
-    * steal saw nothing. Prefix-normalized keys. */
-  val CanaryPrefixes: Seq[String] = Seq("p0", "x1", "d1")
 
   /** Any canary at or beyond this ratio vs its ABSOLUTE pinned clean
     * band marks the newer run host-contaminated (max-of-canaries, not
@@ -392,19 +392,29 @@ object BenchTrend {
     * regardless. */
   val CanaryStormFactor = 2.0
 
-  /** ABSOLUTE clean-host canary band (seconds), pinned from the
-    * committed clean-round data — BENCH_r03/r04/r08 (steal ≤ 207) read
-    * p0 0.15–0.18 / x1 0.13–0.18 / d1 0.10–0.11; every storm round
-    * reads above. The ratio in [[compare]] is measured against THIS,
-    * never against the previous artifact: round 11 proved the relative
-    * form has a masking blind spot — BENCH_r10's canaries were
-    * themselves storm-inflated (p0 0.40), so BENCH_r11's p0 0.37 read
-    * 1.14× "clean" relatively while sitting ~2.1× the true band, and a
-    * 13× storm-absorbed stage line (s:lrdist 3.65→47.8) went HARD
-    * instead of demoting. Consecutive storm artifacts must not be able
-    * to vouch for each other; a fixed band cannot be dragged upward by
-    * a contaminated prior round. Re-pin only from a multi-run idle-host
-    * record (steal < 2k, documented in docs/BENCH.md). */
+  /** The canary queries (prefix-normalized keys) and their ABSOLUTE
+    * clean-host band (seconds). Canaries are frozen-trivial shapes (one
+    * pushed-filter scan + one agg / point lookup / exact-dedup groupBy)
+    * untouched since round 1: their code has no dependency on anything
+    * that lands round to round, so a canary inflating can only mean the
+    * HOST was slow while it ran — the round-9 lesson: a steal-INVISIBLE
+    * whole-host slowdown (steal ticks 75, well under [[StormRunTicks]])
+    * inflated 11 untouched queries 3-6x including canary x1 (0.15 ->
+    * 0.51 s), while /proc/stat steal saw nothing.
+    *
+    * The band is pinned from the committed clean-round data —
+    * BENCH_r03/r04/r08 (steal ≤ 207) read p0 0.15–0.18 / x1 0.13–0.18 /
+    * d1 0.10–0.11; every storm round reads above. The ratio in
+    * [[compare]] is measured against THIS, never against the previous
+    * artifact: round 11 proved the relative form has a masking blind
+    * spot — BENCH_r10's canaries were themselves storm-inflated (p0
+    * 0.40), so BENCH_r11's p0 0.37 read 1.14× "clean" relatively while
+    * sitting ~2.1× the true band, and a 13× storm-absorbed stage line
+    * (s:lrdist 3.65→47.8) went HARD instead of demoting. Consecutive
+    * storm artifacts must not be able to vouch for each other; a fixed
+    * band cannot be dragged upward by a contaminated prior round.
+    * Re-pin only from a multi-run idle-host record (steal < 2k,
+    * documented in docs/BENCH.md). */
   val CanaryCleanBand: Map[String, Double] =
     Map("p0" -> 0.18, "x1" -> 0.15, "d1" -> 0.11)
 
@@ -455,14 +465,15 @@ object BenchTrend {
     "s:dedup" -> 2.5,
     "s:lrdist" -> 2.7)
 
+  /** One comparison's findings, each row "key: old -> new …". */
   final case class Trend(
       regressions: Seq[String], // hard failures (clean-run slowdowns, throws)
       stormExempt: Seq[String], // slowdowns excused by storm/canary evidence
       stealTicks: Long,
-      /** No overlapping query keys — e.g. the newer file is a driver
+      /** No overlapping query keys — e.g. one file is a driver
         * `parsed: null` capture failure (rounds 1-2 lost their numbers
         * exactly this way). An empty comparison must be an ERROR, not
-        * a green "no regressions" (bench_diff.py exits the same way). */
+        * a green "no regressions". */
       vacuous: Boolean,
       /** Worst canary inflation ratio of the NEWER run: against the
         * absolute [[CanaryCleanBand]] when the run measured the band's
@@ -472,23 +483,30 @@ object BenchTrend {
         * band and the guard would demote every real regression; at
         * sf0.01 a genuine storm reads under-band and its inflated
         * lines would go hard). 1.0 when no canary is measurable. */
-      canaryFactor: Double = 1.0,
+      canaryFactor: Double,
       /** Slowdowns excused by a committed, human-reviewed entry in the
         * adjudications ledger ([[adjudicatedFor]]) — reported as info,
         * never red. Throws are NEVER adjudicable: an adjudication
         * records "this artifact's TIMING is a host burst", and steal
         * makes queries slow, not wrong. */
-      adjudicated: Seq[String] = Nil,
+      adjudicated: Seq[String],
       /** Long-stage lines that tripped the ratio rule but sit inside
         * their pinned clean band ([[StageCleanBand]]) — info, not
         * red: the stage is performing exactly as its committed clean
         * record says. */
-      inCleanBand: Seq[String] = Nil)
+      inCleanBand: Seq[String],
+      improved: Seq[String],
+      /** Queries absent from the older file that ran (a brand-new
+        * query that threw is a regression instead). */
+      added: Seq[String],
+      /** Newer-file query count and the (older, newer) run totals. */
+      queries: Int,
+      totals: (Double, Double))
 
-  private def pfx(k: String): String =
-    // "stage:" compresses to "s:" on the tightest contract rung —
-    // normalize both spellings so old/new files line up
-    k.split('_')(0).replace("stage:", "s:")
+  // E-notation matters: bench_detail writes raw Double.toString, which
+  // renders sub-millisecond times as 9.5E-4 — a mantissa-only parse
+  // would inflate them ~1000x into phantom regressions
+  private val Num = """(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)"""
 
   /** First "queries" map in the file — the driver's `parsed` contract
     * object, or the bench_detail line of raw `graft.Bench` output.
@@ -497,20 +515,24 @@ object BenchTrend {
   def queryTimes(txt: String): Map[String, Double] = {
     val q = """"queries"\s*:\s*\{([^}]*)\}""".r
       .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-    // E-notation matters: bench_detail writes raw Double.toString,
-    // which renders sub-millisecond times as 9.5E-4 — a mantissa-only
-    // parse would inflate them ~1000x into phantom regressions
-    val raw =
-      """"([^"]+)"\s*:\s*(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)""".r
-        .findAllMatchIn(q)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val raw = (""""([^"]+)"\s*:\s*""" + Num).r
+      .findAllMatchIn(q)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
     // normalize to the contract's unique-prefix keys when collision-free
     // so full-name files and prefix-keyed driver files line up
-    val counts = raw.keys.groupBy(pfx).map { case (p, ks) => p -> ks.size }
+    val counts =
+      raw.keys.groupBy(contractKey).map { case (p, ks) => p -> ks.size }
     raw.map { case (k, v) =>
-      (if (counts(pfx(k)) == 1) pfx(k) else k) -> v
+      (if (counts(contractKey(k)) == 1) contractKey(k) else k) -> v
     }
   }
+
+  /** The run total: the first unescaped `"value"` — the same object
+    * [[queryTimes]] reads (the driver's `parsed` contract or the raw
+    * bench_detail line). 0 when absent. */
+  def totalOf(txt: String): Double =
+    (""""value"\s*:\s*""" + Num).r.findFirstMatchIn(txt)
+      .fold(0.0)(_.group(1).toDouble)
 
   /** Whole-run steal ticks; matches both raw (`"steal_ticks":N`) and
     * the escaped copy inside a driver file's "tail" string
@@ -532,13 +554,12 @@ object BenchTrend {
   /** Storm-marked query names from the newer bench, prefix-normalized.
     * The token class includes ':' so a stage key ("stage:ccdist_labels")
     * survives tokenization whole and prefix-normalizes to the same
-    * "s:ccdist" that pfx() yields (the stage:→s: compression) — without
-    * it a storm-marked stage line could never match the exemption
-    * set. */
+    * "s:ccdist" that [[Bench.contractKey]] yields — without it a
+    * storm-marked stage line could never match the exemption set. */
   def stormyOf(txt: String): Set[String] =
     """stormy\\?"\s*:\s*\[([^\]]*)\]""".r.findAllMatchIn(txt)
       .flatMap(m => """[A-Za-z0-9_:]+""".r.findAllIn(m.group(1)))
-      .map(pfx).toSet
+      .map(contractKey).toSet
 
   /** The committed adjudications ledger (the round-12 judge's loop
     * fix: four consecutive rounds opened with a red suite on a
@@ -553,41 +574,30 @@ object BenchTrend {
     *    the next round's artifact or a sibling query;
     *  - throws (-1) are never adjudicable (steal makes queries slow,
     *    not wrong);
-    *  - the ledger is committed and review-gated like any code change;
-    *    tools/bench_diff.py reads the same file. */
+    *  - the ledger is committed and review-gated like any code change. */
   val AdjudicationsFile = "BENCH_ADJUDICATIONS.json"
 
   /** Prefix-normalized query names adjudicated for `benchFileName`
-    * (e.g. "BENCH_r12.json"). Zero-dep field extraction that stays
-    * correct when an entry's evidence prose contains braces or
-    * escaped quotes (a blob-split regex would shear such an entry in
-    * half and silently skip it while bench_diff.py's json.load reads
-    * it — re-opening the exact red-suite loop the ledger closes):
-    * scan the `"file"`/`"query"` fields in document order and pair
-    * each file with its following query. Ledger contract, validated
-    * loudly: every entry carries `file` then `query`, and evidence
-    * text never embeds those literal field spellings. */
+    * (e.g. "BENCH_r12.json") in the ledger under `ledgerDir`; empty
+    * when there is no ledger. The ledger is a JSON array of objects;
+    * an entry without a string `file` and `query` fails loudly rather
+    * than being skipped (a silently dropped entry would re-open the
+    * red-suite loop the ledger closes). */
   def adjudicatedFor(benchFileName: String,
       ledgerDir: String = "."): Set[String] = {
+    import scala.jdk.CollectionConverters._
     val f = new java.io.File(ledgerDir, AdjudicationsFile)
     if (!f.isFile) Set.empty
     else {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val fields =
-        """"(file|query)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2)).toList
-      val pairs = fields.sliding(2).collect {
-        case List(("file", fl), ("query", q)) => fl -> q
-      }.toList
-      val (files, queries) =
-        (fields.count(_._1 == "file"), fields.count(_._1 == "query"))
-      require(pairs.size == files && pairs.size == queries,
-        s"$AdjudicationsFile: malformed — expected adjacent " +
-          s"file/query per entry, saw $files file / $queries query " +
-          s"fields pairing to ${pairs.size}")
-      pairs.collect { case (fl, q) if fl == benchFileName => pfx(q) }
+      val entries = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(f)
+      require(entries.isArray, s"$AdjudicationsFile: expected an array")
+      entries.elements().asScala.map { e =>
+        val (fl, q) = (e.path("file"), e.path("query"))
+        require(fl.isTextual && q.isTextual,
+          s"$AdjudicationsFile: entry without a string file/query: $e")
+        fl.asText -> q.asText
+      }.collect { case (fl, q) if fl == benchFileName => contractKey(q) }
         .toSet
     }
   }
@@ -605,8 +615,7 @@ object BenchTrend {
   val SubSecondBand = 1.0
   val MaxIsolatedSubSecond = 2
 
-  def compare(prevTxt: String, currTxt: String, factor: Double = 3.0,
-              floor: Double = 0.3,
+  def compare(prevTxt: String, currTxt: String,
               adjudicatedQs: Set[String] = Set.empty): Trend = {
     val prev = queryTimes(prevTxt)
     val curr = queryTimes(currTxt)
@@ -626,39 +635,99 @@ object BenchTrend {
       if (bandScale)
         CanaryCleanBand.flatMap { case (k, band) =>
           for (c <- curr.get(k); if c >= 0) yield c / band
-        }.foldLeft(1.0)(math.max)
+        }.maxOption.getOrElse(1.0)
       else
-        CanaryPrefixes.flatMap { k =>
+        CanaryCleanBand.keys.flatMap { k =>
           for (p <- prev.get(k); c <- curr.get(k);
                if p >= 0.02 && c >= 0) yield c / p
-        }.foldLeft(1.0)(math.max)
+        }.maxOption.getOrElse(1.0)
     val canaryRun = canaryFactor >= CanaryStormFactor
     val hard = scala.collection.mutable.ArrayBuffer[String]()
     val soft = scala.collection.mutable.ArrayBuffer[String]()
     val adj = scala.collection.mutable.ArrayBuffer[String]()
     val inBand = scala.collection.mutable.ArrayBuffer[String]()
     val slowSub = scala.collection.mutable.ArrayBuffer[String]()
-    for ((name, p) <- prev.toSeq.sortBy(_._1); c <- curr.get(name)) {
-      if (c < 0 && p >= 0)
-        // a throw is NEVER adjudicable — see [[AdjudicationsFile]]
+    val improved = scala.collection.mutable.ArrayBuffer[String]()
+    val added = scala.collection.mutable.ArrayBuffer[String]()
+    for ((name, c) <- curr.toSeq.sortBy(_._1)) prev.get(name) match {
+      // a throw is NEVER adjudicable — see [[AdjudicationsFile]] — and
+      // a brand-new query that already throws is no "new" info row
+      case None if c < 0 => hard += s"$name: NEW -> FAILED (-1)"
+      case None => added += f"$name: $c%.2f s"
+      case Some(p) if c < 0 && p >= 0 =>
         hard += f"$name: $p%.2f s -> FAILED (-1)"
-      else if (c > floor && p >= 0 && c > factor * p) {
-        val line = f"$name: $p%.2f s -> $c%.2f s (x${c / math.max(p, 1e-9)}%.1f)"
-        if (adjudicatedQs.contains(pfx(name))) adj += line
-        else if (bandScale &&
-          StageCleanBand.get(pfx(name)).exists(c <= _))
-          inBand += line
-        else if (stormySet.contains(pfx(name)) || stormRun || canaryRun)
-          soft += line
+      case Some(p) if c > FloorSeconds && p >= 0 &&
+          c > RegressionFactor * p =>
+        val line =
+          f"$name: $p%.2f s -> $c%.2f s (x${c / math.max(p, 1e-9)}%.1f)"
+        val band = StageCleanBand.get(contractKey(name))
+        if (adjudicatedQs.contains(contractKey(name)))
+          adj += s"$line [reviewed disposition in $AdjudicationsFile]"
+        else if (bandScale && band.exists(c <= _))
+          inBand += s"$line [inside the pinned clean band ${band.get} s]"
+        else if (stormySet.contains(contractKey(name)))
+          soft += s"$line [stormy-marked]"
+        else if (stormRun) soft += s"$line [storm-contaminated run]"
+        else if (canaryRun)
+          soft += f"$line [canary-inflated run (x$canaryFactor%.1f)]"
         else if (c < SubSecondBand) slowSub += line
         else hard += line
-      }
+      case Some(p) if p > FloorSeconds && c >= 0 &&
+          p > RegressionFactor * c =>
+        improved += f"$name: $p%.2f s -> $c%.2f s"
+      case _ =>
     }
-    if (slowSub.length <= MaxIsolatedSubSecond) soft ++= slowSub
+    if (slowSub.length <= MaxIsolatedSubSecond)
+      soft ++= slowSub.map(_ + " [isolated sub-second swing]")
     else hard ++= slowSub
     Trend(hard.toSeq, soft.toSeq, ticks,
       vacuous = (prev.keySet & curr.keySet).isEmpty,
       canaryFactor = canaryFactor, adjudicated = adj.toSeq,
-      inCleanBand = inBand.toSeq)
+      inCleanBand = inBand.toSeq, improved = improved.toSeq,
+      added = added.toSeq, queries = curr.size,
+      totals = (totalOf(prevTxt), totalOf(currTxt)))
+  }
+
+  /** Compares bench file `newPath` against `oldPath` (each a driver
+    * BENCH_r{N}.json or raw `graft.Bench` stdout saved to a file) with
+    * the adjudications read from the working directory's ledger, prints
+    * a header and one row per finding, and returns the exit status:
+    * 1 on a hard regression or a vacuous comparison, else 0. */
+  def run(oldPath: String, newPath: String): Int = {
+    def read(p: String) =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p)), "UTF-8")
+    val t = compare(read(oldPath), read(newPath),
+      adjudicatedFor(new java.io.File(newPath).getName))
+    if (t.vacuous) {
+      Console.err.println(s"ERROR: no overlapping query keys between " +
+        s"$oldPath and $newPath — refusing to report 'no regressions' " +
+        "on a vacuous comparison")
+      return 1
+    }
+    println(f"total: ${t.totals._1}%.2f s -> ${t.totals._2}%.2f s " +
+      f"(${t.queries} queries, ${t.added.size} new, newer " +
+      f"steal_ticks=${t.stealTicks}, canary_factor=${t.canaryFactor}%.2f)")
+    for ((kind, rows) <- Seq("REGRESSION" -> t.regressions,
+        "SUSPECT" -> t.stormExempt, "ADJUDICATED" -> t.adjudicated,
+        "INBAND" -> t.inCleanBand, "improved" -> t.improved,
+        "new" -> t.added); row <- rows)
+      println(f"$kind%-11s $row")
+    println("== " + (
+      if (t.regressions.nonEmpty) s"${t.regressions.size} regression(s) " +
+        s"over factor $RegressionFactor"
+      else if (t.stormExempt.nonEmpty) s"no hard regressions; " +
+        s"${t.stormExempt.size} storm-suspect slowdown(s) need a clean " +
+        "local re-measure: tools/dev.sh graft.Bench"
+      else "no regressions") + " ==")
+    if (t.regressions.nonEmpty) 1 else 0
+  }
+
+  /** `tools/dev.sh graft.BenchTrend <old> <new>` — see [[run]]. */
+  def main(args: Array[String]): Unit = args match {
+    case Array(oldPath, newPath) => sys.exit(run(oldPath, newPath))
+    case _ =>
+      Console.err.println("usage: tools/dev.sh graft.BenchTrend <old> <new>")
+      sys.exit(2)
   }
 }

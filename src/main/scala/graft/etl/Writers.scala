@@ -17,19 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Writers {
 
-  /** Run independent Spark actions CONCURRENTLY from a bounded driver
-    * thread pool — the idle-capacity overlap shape (spark_optimization
-    * guide §2.6): a multi-table dump's writes are independent jobs to
-    * distinct paths, and submitting them from a small pool lets the
-    * next write's tasks back-fill executors freed by the current
-    * write's straggler tail instead of leaving the cluster idle. The
-    * pool is deliberately small — 2-4 jobs in flight fills the tail
-    * without the jobs fighting for executors — and parameterised via
-    * `spark.graft.write.parallelism` (sequential at 1, e.g. for a
-    * memory-tight cluster where two shuffling writes must not
-    * coexist). Results come back in `items` order; the first failure
-    * rethrows its ORIGINAL exception after the pool drains, so error
-    * semantics match the sequential loop this replaces. */
   /** Materialize a persisted frame BEFORE submitting concurrent jobs
     * over it. A persisted frame whose lineage crosses a SHUFFLE (a
     * join or aggregation) must not meet its first readers
@@ -45,14 +32,23 @@ object Writers {
     * scan — so the barrier is opt-in, not part of [[concurrently]]. */
   def materialize(df: DataFrame): DataFrame = { df.count(); df }
 
+  /** Run independent Spark actions CONCURRENTLY from a bounded driver
+    * thread pool — the idle-capacity overlap shape (spark_optimization
+    * guide §2.6): a multi-table dump's writes are independent jobs to
+    * distinct paths, and submitting them from a small pool lets the
+    * next write's tasks back-fill executors freed by the current
+    * write's straggler tail instead of leaving the cluster idle. The
+    * pool is deliberately small — 2-4 jobs in flight fills the tail
+    * without the jobs fighting for executors. Results come back in
+    * `items` order; the first failure rethrows its ORIGINAL exception
+    * after the pool drains, so error semantics match the sequential
+    * loop this replaces. */
   def concurrently[A, B](spark: SparkSession, items: Seq[A])(
-      f: A => B): Seq[B] = {
-    val par = math.min(
-      spark.conf.get("spark.graft.write.parallelism", "4").toInt,
-      math.max(items.size, 1))
-    if (par <= 1 || items.size <= 1) items.map(f)
+      f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(4, items.size))
       try {
         val fs = items.map(it =>
           pool.submit(new java.util.concurrent.Callable[B] {
@@ -78,7 +74,6 @@ object Writers {
         results.map(_.toOption.get)
       } finally pool.shutdown()
     }
-  }
 
   /** S7 — write `df` partitioned by `partitionCols`, replacing only the
     * partitions contained in the batch. `format` covers the S8

@@ -83,8 +83,9 @@ class BenchContractSpec extends AnyFunSuite {
     * and a per-query `stormy` list — the comparator in [[BenchTrend]]
     * reads those, so a noisy driver run demands a clean local
     * re-measure instead of turning the suite red on zero code change.
-    * The flag rule is bench_diff.py's `new > 0.3 s AND new > 3×old`
-    * (no more `old ≥ 0.5 s` arming blind band). */
+    * The flag rule is `new > 0.3 s AND new > 3×old` (no more
+    * `old ≥ 0.5 s` arming blind band); `tools/dev.sh graft.BenchTrend`
+    * runs the same comparator over any two bench files. */
   test("no per-query regression beyond 3x vs the previous round bench") {
     val dir = new java.io.File(".")
     val benches = Option(dir.listFiles()).getOrElse(Array.empty)
@@ -313,6 +314,33 @@ class BenchContractSpec extends AnyFunSuite {
       s"adjudicated a1 demotes, unadjudicated twin w2 stays hard: $t")
   }
 
+  test("adjudications ledger: entries parse as JSON whatever their " +
+      "evidence quotes or their key order") {
+    // evidence may cite another bench file in structured form, and an
+    // entry's keys may come in any order: only each entry's own
+    // top-level file/query pair binds
+    val dir = java.nio.file.Files.createTempDirectory("ledger")
+    val ledger = dir.resolve(BenchTrend.AdjudicationsFile)
+    try {
+      java.nio.file.Files.writeString(ledger,
+        """[{"file": "BENCH_r98.json", "query": "a1_order_stats",
+          |  "evidence": {"file": "BENCH_r99.json", "note": "see \"file\": \"BENCH_r99.json\" {x}"}},
+          | {"query": "w2", "evidence": "x", "file": "BENCH_r99.json"}]""".stripMargin)
+      assert(BenchTrend.adjudicatedFor("BENCH_r98.json", dir.toString) ==
+        Set("a1"))
+      assert(BenchTrend.adjudicatedFor("BENCH_r99.json", dir.toString) ==
+        Set("w2"))
+      // an entry without a string query fails loudly, never skipped
+      java.nio.file.Files.writeString(ledger,
+        """[{"file": "BENCH_r98.json", "query": 7}]""")
+      intercept[IllegalArgumentException](
+        BenchTrend.adjudicatedFor("BENCH_r98.json", dir.toString))
+    } finally {
+      java.nio.file.Files.deleteIfExists(ledger)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("adjudications ledger: a throw is never adjudicable") {
     val curr = """{"queries":{"a1":-1.0,"w2":0.11},"steal_ticks":0}"""
     val t = BenchTrend.compare(cleanOld, curr, adjudicatedQs = Set("a1"))
@@ -331,6 +359,15 @@ class BenchContractSpec extends AnyFunSuite {
     assert(BenchTrend.adjudicatedFor("BENCH_r99.json",
       ledgerDir = "/nonexistent").isEmpty,
       "missing ledger reads as empty, never throws")
+  }
+
+  test("trend guard: a brand-new query that THROWS is a hard failure, " +
+      "not a new row") {
+    val curr =
+      """{"queries":{"a1":0.50,"w2":0.11,"q9":0.14,"z7_new_query":-1.0},"steal_ticks":0}"""
+    val t = BenchTrend.compare(cleanOld, curr)
+    assert(t.regressions.exists(r => r.startsWith("z7") &&
+      r.contains("FAILED")), s"a new query that throws must be hard: $t")
   }
 
   test("trend guard: a THROWING query is a hard failure even in a storm") {
@@ -370,5 +407,33 @@ class BenchContractSpec extends AnyFunSuite {
     // queryTimes must take the parsed contract map, not the tail copy
     assert(BenchTrend.queryTimes(driverFile) ==
       Map("a1" -> 2.20, "w2" -> 0.11))
+  }
+
+  /** `tools/dev.sh graft.BenchTrend` on two committed driver files:
+    * the exit status and the keys of each row kind it prints. */
+  private def trendCli(oldF: String, newF: String)
+      : (Int, Map[String, Set[String]], String) = {
+    val (out, err) =
+      (new java.io.ByteArrayOutputStream, new java.io.ByteArrayOutputStream)
+    val code = Console.withOut(out)(Console.withErr(err)(
+      BenchTrend.run(oldF, newF)))
+    val row = """^(REGRESSION|SUSPECT|ADJUDICATED|INBAND|improved|new)\s+(\S+):.*""".r
+    val rows = out.toString("UTF-8").linesIterator.collect {
+      case row(kind, key) => kind -> key
+    }.toSeq.groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }
+    (code, rows, err.toString("UTF-8"))
+  }
+
+  test("BenchTrend main on committed driver files (escaped-tail format)") {
+    val (hardCode, hard, _) = trendCli("BENCH_r03.json", "BENCH_r04.json")
+    assert(hardCode == 1 && hard("REGRESSION") ==
+      Set("a16", "j11", "a6", "a8", "m2", "p6", "x2"), s"$hard")
+    assert(!hard.contains("SUSPECT") && hard("new").size == 8)
+    val (okCode, ok, _) = trendCli("BENCH_r18.json", "BENCH_r19.json")
+    assert(okCode == 0 && !ok.contains("REGRESSION") &&
+      ok("SUSPECT") == Set("a15") && ok("ADJUDICATED") == Set("k7"), s"$ok")
+    // BENCH_r01.json is a `parsed: null` capture failure
+    val (vacCode, vac, err) = trendCli("BENCH_r01.json", "BENCH_r02.json")
+    assert(vacCode == 1 && vac.isEmpty && err.contains("vacuous"), err)
   }
 }
