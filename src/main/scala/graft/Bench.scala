@@ -84,7 +84,12 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = benchSession(sfDir, cpus)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the warm itself is untimed by every line, so its wall time rides
+    // the bench_detail line: a warm that grows (or stops covering a
+    // stage's codegen) shows there, not as unexplained stage drift
+    val w0 = System.nanoTime()
     warmup(spark, sfDir)
+    val warmupS = (System.nanoTime() - w0) / 1e9
     val steal0 = stealTicks()
     // Shared-stage accounting: d5/d6 consume ONE memoized pairs→CC
     // labels stage, and x12/x13 one memoized BPE training stage. Under
@@ -152,7 +157,7 @@ object Bench {
     // output, and sbt appends its own ~74-byte "[success]" trailer.
     val detailQs = all.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val detailLine = s"""{"metric":"bench_detail","value":$total,"unit":"sec","queries":$detailQs,"sf":"$sfDir","runs_per_query":$reps,"shuffle_partitions":$parts,"steal_ticks":$stealDelta$stormyJson$errJson}"""
+    val detailLine = s"""{"metric":"bench_detail","value":$total,"unit":"sec","queries":$detailQs,"sf":"$sfDir","runs_per_query":$reps,"shuffle_partitions":$parts,"warmup_s":$warmupS,"steal_ticks":$stealDelta$stormyJson$errJson}"""
     println(detailLine)
     // the contract line below is byte-budgeted (≤1900 for the driver's
     // 2000-byte tail capture) and truncates the fastest lines on a

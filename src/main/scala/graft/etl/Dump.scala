@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.functions.{CallFlatten, Udfs}
 import graft.operators.{DedupOps, StageMemo}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The core batch ETL entry point — SURVEY §3.2 (`substrate-etl dump`,
@@ -148,7 +148,14 @@ object Dump {
   /** transfers projection: classification, dedup of duplicated emits,
     * decimal scaling, address normalization (P6/P12,
     * ref indexer.js:4228 map_feedTransfers_to_transfers; dedup note
-    * docs/DEFINITIONS.md:255-258). */
+    * docs/DEFINITIONS.md:255-258).
+    *
+    * Precondition: the day holds each finalized block ONCE. The dedup
+    * is per extrinsic (a transfer emitted twice inside one extrinsic
+    * lands once; the same transfer in two extrinsics lands twice), so a
+    * block delivered twice would land its transfers twice, like every
+    * other table. The streaming path removes re-deliveries before the
+    * dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def transfers(raw: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame =
     transfersOf(dayBlocks(raw, logDT), logDT, usd)
@@ -162,9 +169,9 @@ object Dump {
       .select(col("chain_id"), col("number"), col("block_time"),
         col("block_hash"), col("ex.idx").as("ext_idx"),
         col("ex.hash").as("extrinsic_hash"),
-        explode(col("ex.transfers")).as("t"))
-      // duplicate-emit dedup on the transfer identity
-      .dropDuplicates("chain_id", "number", "ext_idx", "t")
+        // duplicate-emit dedup on the transfer identity, inside the
+        // extrinsic that emitted it: row-local, no shuffle
+        explode(array_distinct(col("ex.transfers"))).as("t"))
       .select(
         col("chain_id"),
         concat(col("number"), lit("-"), col("ext_idx")).as("extrinsic_id"),
@@ -264,9 +271,8 @@ object Dump {
     dim
   }
 
-  /** Flat event grain shared by the events/rewards/crowdloan
-    * projections: one row per event with block + extrinsic identity
-    * and the raw `event_idx` ordering [[Rewards]] windows over. */
+  /** Flat event grain of the events projection: one row per event
+    * with block + extrinsic identity and the raw `event_idx`. */
   private def eventGrain(day: DataFrame): DataFrame =
     day
       .select(col("chain_id"), col("number"), col("block_time"),
@@ -283,7 +289,18 @@ object Dump {
         col("ev.method").as("method"),
         col("ev.data").as("data"))
 
-  private val grainKeys = Seq("chain_id", "number", "ext_idx")
+  /** Extrinsic grain of the rewards/crowdloan projections: one row
+    * per extrinsic with its block identity and nested `events`; the
+    * [[Rewards]] walks run row-locally over it. */
+  private def extrinsicGrain(day: DataFrame, extra: Column*): DataFrame =
+    day
+      .select(col("chain_id"), col("number"), col("block_time"),
+        col("hash").as("block_hash"),
+        explode(col("extrinsics")).as("ex"))
+      .select(Seq(col("chain_id"), col("number"), col("block_time"),
+        col("block_hash"), col("ex.idx").as("ext_idx"),
+        col("ex.hash").as("extrinsic_hash"),
+        col("ex.events").as("events")) ++ extra: _*)
 
   /** rewards projection (P7 — ref indexer.js:3941 processRawFeedRewards;
     * schema shape schema/substrateetl rewards export): era-attached
@@ -295,20 +312,21 @@ object Dump {
   private def rewardsOf(day: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame = {
     val base =
-    // prune BEFORE the double explode: most blocks carry no staking
-    // payout, and at fleet scale skipping them here means the explode
-    // never materializes their event rows (markers live in the same
+    // prune BEFORE the explode: most blocks carry no staking payout,
+    // and at fleet scale skipping them here means the explode never
+    // materializes their extrinsic rows (markers live in the same
     // extrinsic as their rewards, so block-level pruning cannot lose
     // an era attach)
     // the prune set mirrors Rewards.isRewardEvent exactly (incl.
-    // staking.Slashed — those rows negate and drop inside rewardRows,
-    // but the prune must never contradict the predicate seam)
-    Rewards.rewardRows(eventGrain(day.filter(expr(
+    // staking.Slashed — those rows negate and drop inside
+    // extrinsicRewards, but the prune must never contradict the
+    // predicate seam)
+    Rewards.extrinsicRewards(extrinsicGrain(day.filter(expr(
         """exists(extrinsics, x -> exists(x.events, e ->
           |  (e.section = 'staking' AND
           |     (e.method = 'Rewarded' OR e.method = 'Slashed')) OR
           |  (e.section = 'dappsStaking' AND e.method = 'Reward')))"""
-          .stripMargin))), grainKeys)
+          .stripMargin))), "events")
       .select(
         col("chain_id"),
         concat(col("number"), lit("-"), col("ext_idx"), lit("-"),
@@ -354,50 +372,30 @@ object Dump {
 
   /** crowdloan projection (P7 — ref indexer.js:4018
     * processRawFeedCrowdLoans): Contributed⊕MemoUpdated pairs per
-    * (extrinsic, account, fund). */
+    * (extrinsic, account, fund), memo-less pairs taking the extrinsic's
+    * `system.remark` texts positionally.
+    *
+    * Precondition: the day holds each finalized block ONCE. Pairing is
+    * per extrinsic, so a block delivered twice would land its pairs
+    * twice, like every other table. The streaming path removes
+    * re-deliveries before the dump
+    * ([[graft.streaming.EventStream.dedupExactStream]]). */
   def crowdloan(raw: DataFrame, logDT: String): DataFrame =
     crowdloanOf(dayBlocks(raw, logDT), logDT)
 
-  /** system.remark texts per extrinsic, in call-flatten order — the
-    * remark feed for the crowdloan pairing (ref indexer.js:4043-4055).
-    * Suppression is DISABLED here: system:remark is noise for the
-    * calls table but the payload of the remark-contribution branch. */
-  private def remarksOf(day: DataFrame): DataFrame = {
-    val spark = day.sparkSession
-    import spark.implicits._
-    day
-      .select(col("chain_id"), col("number"), col("block_time"),
-        col("hash").as("block_hash"), explode(col("extrinsics")).as("ex"))
-      .select(col("chain_id"), col("number"), col("block_time"),
-        col("block_hash"), col("ex.idx").as("ext_idx"),
-        col("ex.hash").as("extrinsic_hash"), col("ex.params"))
-      .as[(Int, Long, java.sql.Timestamp, String, Int, String, String)]
-      .flatMap { case (cid, bn, bt, bh, ei, eh, params) =>
-        CallFlatten.flatten(params, None, suppressed = Set.empty)
-          .zipWithIndex.collect {
-            case (fc, i) if fc.call_section == "system" &&
-                fc.call_method == "remark" =>
-              (cid, bn, bt, bh, ei, eh, i, fc.call_args)
-          }
-      }.toDF("chain_id", "number", "block_time", "block_hash",
-        "ext_idx", "extrinsic_hash", "remark_idx", "call_args")
-      .withColumn("remark", coalesce(
-        get_json_object(col("call_args"), "$.remark"), col("call_args")))
-      .drop("call_args")
-  }
-
-  private def crowdloanOf(day: DataFrame, logDT: String): DataFrame = {
-    // block/extrinsic context columns ride the groupBy as keys — they
-    // are functionally dependent on (chain_id, number, ext_idx);
-    // crowdloan-less blocks prune before BOTH the event explode and
-    // the remark call-flatten (remarks only ever join pairs, and pairs
-    // only exist in blocks that pass this filter)
-    val clDay = day.filter(expr(
-      "exists(extrinsics, x -> exists(x.events, " +
-        "e -> e.section = 'crowdloan'))"))
-    Rewards.crowdloanRows(eventGrain(clDay),
-        grainKeys ++ Seq("block_time", "block_hash", "extrinsic_hash"),
-        remarks = Some(remarksOf(clDay)))
+  private def crowdloanOf(day: DataFrame, logDT: String): DataFrame =
+    // crowdloan-less blocks prune before the extrinsic explode, and
+    // crowdloan-less extrinsics before the remark call-flatten (remarks
+    // only ever attach to pairs)
+    Rewards.extrinsicCrowdloans(
+        extrinsicGrain(day.filter(expr(
+            "exists(extrinsics, x -> exists(x.events, " +
+              "e -> e.section = 'crowdloan'))")),
+            col("ex.params").as("params"))
+          .filter(expr("exists(events, e -> e.section = 'crowdloan')"))
+          .withColumn("remarks", Rewards.remarkTexts(col("params")))
+          .drop("params"),
+        "events", remarks = Some("remarks"))
       .select(
         col("chain_id"),
         concat(col("number"), lit("-"), col("ext_idx"), lit("-"),
@@ -410,7 +408,6 @@ object Dump {
         col("fund_id").as("para_id"), col("amount_raw"), col("memo"),
         col("remark"),
         lit(logDT).as("log_dt"))
-  }
 
   /** Relay-level crowdloan day repackaging (E22 — ref
     * substrateetl.js:4766-4860 dump_relaychain_crowdloan): the relay
@@ -678,7 +675,14 @@ object Dump {
     *
     * The day-filtered raw scan is persisted for the duration of the eight
     * writes — each write is its own job, and without the persist the
-    * (at scale, enormous) raw table would be re-scanned eight times. */
+    * (at scale, enormous) raw table would be re-scanned eight times.
+    *
+    * Precondition: `raw` holds each finalized block of the day ONCE.
+    * Every projection is row-local per block (transfers dedup and
+    * crowdloan pairing group inside the extrinsic, not across the day),
+    * so no table shuffles, and a block delivered twice would land in
+    * all eight tables twice. The streaming path removes re-deliveries
+    * before the dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def dumpDay(raw: DataFrame, logDT: String, outRoot: String,
       usd: Option[UsdDims] = None): Map[String, DataFrame] = {
     Udfs.register(raw.sparkSession)
@@ -715,12 +719,12 @@ object Dump {
     "crowdloan" -> crowdloanOf(day, logDT))
 
   /** Bench stage: the reference's core daily workload — a full
-    * 8-table [[dumpDay]] (explode/flatten/window/write) over a nested
+    * 8-table [[dumpDay]] (explode/flatten/walk/write) over a nested
     * raw day synthesized DETERMINISTICALLY from the events table
     * (~events/3 extrinsics across events/15 blocks, with reward
     * markers, crowdloan events, transfers and digest logs so every
     * projection does real work incl. the ss58/asset UDFs and the era
-    * window). Measured round-over-round as `stage:dump_day` so an ETL
+    * carry). Measured round-over-round as `stage:dump_day` so an ETL
     * regression (a lost pushed filter, a new shuffle in a projection)
     * surfaces in the trend guard, not just in specs. */
   def warmDumpDay(s: SparkSession, d: String): Map[String, Long] =
@@ -741,7 +745,7 @@ object Dump {
     * (~events/3 extrinsics across events/15 blocks, with reward
     * markers, crowdloan events, transfers and digest logs so every
     * projection does real work incl. the ss58/asset UDFs and the era
-    * window). */
+    * carry). */
   private def synthesizeRawDay(s: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
     // ~15 events per block; the count is one cheap pre-job, NOT a

@@ -187,8 +187,9 @@ object FlattenOps {
   // to each subsequent reward, zero payouts skipped). A flat event
   // grain is synthesized from the events table — each user is one
   // extrinsic, event_idx = event_id — with JSON data the REAL operator
-  // (graft.etl.Rewards.rewardRows: window + json extraction + filter)
-  // parses; the rollup is per-era exact sums. The marker duality is
+  // (graft.etl.Rewards.rewardRows: grouped per extrinsic, then the
+  // dump's row-local era carry + json extraction + filter) parses; the
+  // rollup is per-era exact sums. The marker duality is
   // exercised: dappsStaking.Reward is both a marker AND a reward, so
   // later staking.Rewarded rows inherit ITS era — the oracle replays
   // the same running marker with last_value(... IGNORE NULLS).
@@ -256,8 +257,9 @@ object FlattenOps {
   // synthesized on overlapping (user, fund) keys — some funds get
   // multiple Contributed (last wins), some get a memo with no
   // contribution (amount 0) — and the REAL operator
-  // (graft.etl.Rewards.crowdloanRows: groupBy + max_by) pairs them;
-  // the oracle replays it with arg_max.
+  // (graft.etl.Rewards.crowdloanRows: grouped per extrinsic, then the
+  // dump's row-local accountParaID map walk) pairs them; the oracle
+  // replays its last-write-wins with arg_max.
   private def p7b(s: SparkSession, d: String): DataFrame = {
     val grain = Tables.events(s, d)
       .filter(col("event_type").isin("purchase", "view"))

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's accountParaID map walk (indexer.js:4018-4090 —
   * insertion-ordered map, last-write-wins amount/memo, then the
   * remarkIndex walk over memo-less entries) must equal the Spark
-  * groupBy + max_by + positional-remark form on the same corpus. */
+  * pairing on the same corpus — both the flat-grain `crowdloanRows`
+  * and `Dump.crowdloan` over the corpus wrapped as raw blocks. */
 class CrowdloanPropertySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -108,5 +109,68 @@ class CrowdloanPropertySpec extends AnyFunSuite {
     assert(expected.exists(e => e._5 == null && e._6 == null),
       "no leftover memo-less pair")
     assert(expected.exists(_._4 == 0L), "no memo-only (amount 0) pair")
+  }
+
+  test("Dump.crowdloan over the same walk wrapped as raw blocks == " +
+      "the reference map walk") {
+    import spark.implicits._
+    import graft.model.{RawBlock, RawEvent, RawExtrinsic}
+    val params = Gen.Parameters.default.withSize(60)
+    val corpus = (0 until 150).map { i =>
+      val (evs, remarks) = genExtrinsic
+        .apply(params, org.scalacheck.rng.Seed(11L + i)).get
+      (i, evs, remarks)
+    }
+    val expected = corpus.flatMap { case (i, evs, rs) =>
+      sequentialReplay(i, evs, rs)
+    }.toSet
+    // the remarks ride the extrinsic's call tree as system.remark calls
+    // (one with a non-remark call between them); events are stored
+    // REVERSED so the walk must order them by event_idx itself
+    def batch(remarks: List[String]): String = {
+      val calls = remarks.map(r =>
+        s"""{"section":"system","method":"remark","args":{"remark":"$r"}}""")
+      val withNoise = calls.take(1) ++
+        Seq("""{"section":"crowdloan","method":"contribute","args":{}}""") ++
+        calls.drop(1)
+      s"""{"section":"utility","method":"batch","args":{},"calls":[${withNoise.mkString(",")}]}"""
+    }
+    val blocks = corpus.grouped(5).map { exs =>
+      val number = exs.head._1 / 5
+      RawBlock(0, number.toLong, s"0xb$number", s"0xp$number",
+        java.sql.Timestamp.valueOf("2024-03-01 12:00:00"), 1, null,
+        finalized = true,
+        extrinsics = exs.map { case (i, evs, rs) =>
+          RawExtrinsic(i % 5, s"0xe$i", "utility", "batch", batch(rs),
+            signed = false, null, 0.0, evs.zipWithIndex.map {
+              case (ev, idx) =>
+                val data = ev.method match {
+                  case "Contributed" =>
+                    s"""{"who":"u${ev.who}","fundIndex":${ev.fund},"amount":${ev.amount}}"""
+                  case _ =>
+                    s"""{"who":"u${ev.who}","paraId":${ev.fund},"memo":"${ev.memo}"}"""
+                }
+                RawEvent(idx, "crowdloan", ev.method, data)
+            }.reverse, Nil)
+        }, logs = Nil)
+    }.toSeq
+    val got = graft.etl.Dump.crowdloan(blocks.toDF(), "2024-03-01")
+      .collect()
+      .map { r =>
+        val Array(number, ext) =
+          r.getAs[String]("extrinsic_id").split("-").map(_.toInt)
+        (number * 5 + ext, r.getAs[String]("account_pub_key"),
+          r.getAs[Long]("para_id"),
+          r.getAs[java.math.BigDecimal]("amount_raw").longValueExact,
+          r.getAs[String]("memo"), r.getAs[String]("remark"))
+      }.toSet
+    assert(got == expected)
+    assert(expected.exists(_._6 != null), "no remark assigned")
+    assert(expected.exists(e => e._5 == null && e._6 == null),
+      "no leftover memo-less pair")
+    assert(expected.exists(_._4 == 0L), "no memo-only (amount 0) pair")
+    assert(corpus.exists { case (i, evs, rs) =>
+      sequentialReplay(i, evs, rs).count(_._5 == null) < rs.size
+    }, "no leftover remark")
   }
 }

@@ -193,7 +193,7 @@ class DumpSpec extends AnyFunSuite {
       c(1).getAs[java.math.BigDecimal]("amount_raw").longValueExact == 888L &&
       c(1).getAs[String]("memo") == null)
     // the memo-LESS pair takes the extrinsic's system.remark call text
-    // positionally (production wiring through Dump.remarksOf)
+    // positionally (production wiring through Rewards.remarkTexts)
     assert(c(1).getAs[String]("remark") == "0x6d32")
     assert(c(0).getAs[String]("account_ss58") ==
       "5GrwvaEF5zXb26Fz9rcQpDWS57CtERHpNehXCPcNoHGKutQY")
@@ -513,5 +513,62 @@ class DumpSpec extends AnyFunSuite {
     val back = spark.read.parquet(s"$dir/crowdloan")
     assert(back.count() == 2)
     assert(back.columns.contains("log_dt"))
+  }
+
+  // ---- row-local per-extrinsic tables: transfers, rewards and
+  // crowdloan group by the extrinsic the raw block already nests ----
+
+  test("transfers: a duplicate emit collapses inside its extrinsic, the " +
+      "same transfer in two extrinsics of one block stays twice") {
+    val twoExt = Seq(RawBlock(0, 300L, "0xb300", "0xb299",
+      ts("2024-03-01 09:00:00"), 100, alice, finalized = true,
+      extrinsics = Seq(
+        RawExtrinsic(0, "0xt0", "balances", "transfer",
+          """{"section":"balances","method":"transfer","args":{}}""",
+          signed = true, alice, 0.1, okEvents, Seq(xfer, xfer)),
+        RawExtrinsic(1, "0xt1", "balances", "transfer",
+          """{"section":"balances","method":"transfer","args":{}}""",
+          signed = true, alice, 0.1, okEvents, Seq(xfer))),
+      logs = Nil)).toDF()
+    val t = Dump.transfers(twoExt, "2024-03-01")
+      .select("extrinsic_id", "amount").collect()
+      .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
+    assert(t == Seq(("300-0", 1.0), ("300-1", 1.0)))
+  }
+
+  test("transfers, rewards and crowdloan plan without a shuffle, window " +
+      "or sort-merge join, with and without USD dims") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // every operator of the FINAL (post-AQE) plan, query stages and
+    // subqueries included
+    def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+      case q: QueryStageExec => q +: operators(q.plan)
+      case other => other +: (other.children ++ other.subqueries)
+          .flatMap(operators)
+    }
+    val dims = Dump.UsdDims(
+      Seq(("DOT~0", 0, ts("2024-03-01 00:00:00"), 7.0))
+        .toDF("asset", "chain_id", "index_ts", "price_usd"),
+      Seq((0, "DOT~0", 10)).toDF("chain_id", "native_asset", "decimals"))
+    val day = raw.unionByName(rewardRaw)
+    for (usd <- Seq(None, Some(dims));
+         (name, df) <- Seq(
+           "transfers" -> Dump.transfers(day, "2024-03-01", usd),
+           "rewards" -> Dump.rewards(day, "2024-03-01", usd),
+           "crowdloan" -> Dump.crowdloan(day, "2024-03-01"))) {
+      assert(df.collect().nonEmpty, s"$name: empty, the plan is vacuous")
+      val bad = operators(df.queryExecution.executedPlan).collect {
+        case s: ShuffleExchangeLike => s.nodeName
+        case w: WindowExec => w.nodeName
+        case j: SortMergeJoinExec => j.nodeName
+      }
+      assert(bad.isEmpty, s"$name (usd=${usd.isDefined}): $bad in\n" +
+        df.queryExecution.executedPlan)
+    }
   }
 }

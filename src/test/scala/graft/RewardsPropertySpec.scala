@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * their own era, zero payouts, interleaved noise), a driver-side
   * SEQUENTIAL replay of the reference's imperative loop
   * (indexer.js:3941 processRawFeedRewards — a mutable `era` variable
-  * walked down the event list) must equal the Spark window form on the
-  * same corpus. The oracle query (p7_reward_era) proves one fixed
+  * walked down the event list) must equal the Spark era carry on the
+  * same corpus — both the flat-grain `rewardRows` and `Dump.rewards`
+  * over the corpus wrapped as raw blocks. The oracle query (p7_reward_era) proves one fixed
   * synthesis; this proves the operator over the space of orderings —
   * markers after rewards, repeated markers, marker-less extrinsics,
   * dApp rewards that re-point the running era mid-list. */
@@ -49,6 +50,16 @@ class RewardsPropertySpec extends AnyFunSuite {
   private val genExtrinsic: Gen[List[Ev]] =
     Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, genEvent))
 
+  /** [[genEvent]] plus markers whose era does not parse. */
+  private val genNestedExtrinsic: Gen[List[Ev]] =
+    Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      9 -> genEvent,
+      1 -> Gen.oneOf(
+        Ev("staking", "PayoutStarted", """{"eraIndex":"n/a"}"""),
+        Ev("staking", "PayoutStarted", """{"validatorStash":"v"}"""),
+        Ev("dappsStaking", "Reward",
+          """{"account":"d1","era":"n/a","amount":3}""")))))
+
   /** The reference loop, verbatim semantics: walk events in order,
     * markers update `era`, positive rewards emit with the era value AT
     * that point (None before any marker). */
@@ -63,10 +74,12 @@ class RewardsPropertySpec extends AnyFunSuite {
           m.findFirstMatchIn(ev.data).map(_.group(1).stripPrefix("\"")
             .stripSuffix("\""))
         }
+        // a marker whose era does not parse as a number leaves the
+        // running era as it was
         if (ev.section == "staking" && ev.method == "PayoutStarted")
-          era = field("eraIndex").map(_.toLong)
+          era = field("eraIndex").flatMap(_.toLongOption).orElse(era)
         val isDapp = ev.section == "dappsStaking" && ev.method == "Reward"
-        if (isDapp) era = field("era").map(_.toLong)
+        if (isDapp) era = field("era").flatMap(_.toLongOption).orElse(era)
         val isSlash = ev.section == "staking" && ev.method == "Slashed"
         val isReward = isDapp || isSlash ||
           (ev.section == "staking" && ev.method == "Rewarded")
@@ -113,6 +126,49 @@ class RewardsPropertySpec extends AnyFunSuite {
     assert(expected.nonEmpty)
     // slashes were drawn AND none emitted (they negate, then the
     // value>0 skip drops them — the reference's end-to-end behavior)
+    assert(corpus.exists(_._2.exists(e =>
+      e.section == "staking" && e.method == "Slashed" &&
+        !e.data.contains("\"amount\":0"))), "no positive slash drawn")
+  }
+
+  test("Dump.rewards over the same walk wrapped as raw blocks == " +
+      "sequential replay") {
+    import spark.implicits._
+    import graft.model.{RawBlock, RawEvent, RawExtrinsic}
+    val corpus = Gen.listOfN(120, genNestedExtrinsic)
+      .apply(Gen.Parameters.default.withSize(100),
+        org.scalacheck.rng.Seed(43L)).get
+      .zipWithIndex.map { case (evs, i) => (i, evs) }
+    val expected = sequentialReplay(corpus)
+    // four extrinsics per block; each extrinsic's events are stored
+    // REVERSED so the walk must order them by event_idx itself
+    val blocks = corpus.grouped(4).map { exs =>
+      val number = exs.head._1 / 4
+      RawBlock(0, number.toLong, s"0xb$number", s"0xp$number",
+        java.sql.Timestamp.valueOf("2024-03-01 12:00:00"), 1, null,
+        finalized = true,
+        extrinsics = exs.map { case (extId, evs) =>
+          RawExtrinsic(extId % 4, s"0xe$extId", "staking",
+            "payoutStakers", """{"section":"staking"}""", signed = false,
+            null, 0.0, evs.zipWithIndex.map { case (ev, idx) =>
+              RawEvent(idx, ev.section, ev.method, ev.data) }.reverse,
+            Nil)
+        }, logs = Nil)
+    }.toSeq
+    val got = graft.etl.Dump.rewards(blocks.toDF(), "2024-03-01")
+      .select("event_id", "era", "account_pub_key", "amount_raw")
+      .collect()
+      .map { r =>
+        val Array(number, ext, idx) = r.getString(0).split("-").map(_.toInt)
+        (number * 4 + ext, idx,
+          if (r.isNullAt(1)) None else Some(r.getLong(1)),
+          r.getString(2), r.getDecimal(3).longValueExact)
+      }.toSet
+    assert(got == expected)
+    assert(expected.exists(_._3.isEmpty), "no marker-less reward drawn")
+    assert(expected.exists(_._3.exists(_ >= 100)), "no dApp era drawn")
+    assert(corpus.exists(_._2.exists(_.data.contains("n/a"))),
+      "no unparseable marker era drawn")
     assert(corpus.exists(_._2.exists(e =>
       e.section == "staking" && e.method == "Slashed" &&
         !e.data.contains("\"amount\":0"))), "no positive slash drawn")
