@@ -317,16 +317,13 @@ object Dump {
     // materializes their extrinsic rows (markers live in the same
     // extrinsic as their rewards, so block-level pruning cannot lose
     // an era attach)
-    // the prune set mirrors Rewards.isRewardEvent exactly (incl.
-    // staking.Slashed — those rows negate and drop inside
-    // extrinsicRewards, but the prune must never contradict the
-    // predicate seam)
-    Rewards.extrinsicRewards(extrinsicGrain(day.filter(expr(
-        """exists(extrinsics, x -> exists(x.events, e ->
-          |  (e.section = 'staking' AND
-          |     (e.method = 'Rewarded' OR e.method = 'Slashed')) OR
-          |  (e.section = 'dappsStaking' AND e.method = 'Reward')))"""
-          .stripMargin))), "events")
+    // the prune is Rewards.isRewardEvent itself (incl. staking.Slashed
+    // — those rows negate and drop inside extrinsicRewards), so it can
+    // never contradict the predicate seam
+    Rewards.extrinsicRewards(extrinsicGrain(day.filter(
+        exists(col("extrinsics"), x => exists(x("events"),
+          e => Rewards.isRewardEvent(e("section"), e("method")))))),
+      "events")
       .select(
         col("chain_id"),
         concat(col("number"), lit("-"), col("ext_idx"), lit("-"),

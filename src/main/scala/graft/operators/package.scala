@@ -144,8 +144,10 @@ package object operators {
   def us(ts: Column): Column = unix_micros(ts)
 
   // ---- Oracle-side (DuckDB SQL) twins of the helpers above ----
-  /** events.ts is TIMESTAMP_NS in DuckDB; CAST truncates to micros exactly
-    * like our `timestamp_micros(ts div 1000)` load path. */
+  /** events.ts is a timezone-less microsecond TIMESTAMP in DuckDB, as in
+    * the parquet file; the CAST is the oracle twin of the
+    * `cast("timestamp")` in `Tables.load` and leaves the values as they
+    * are. */
   val TS = "CAST(ts AS TIMESTAMP)"
   def sqlDsum(x: String): String = s"sum(CAST($x AS DECIMAL(38,6)))"
 
