@@ -1,53 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.plans.{AsOfStrategy, CompactDecode, CosineSimilarity, DotProduct}
+import graft.functions.Udfs
+import graft.plans.AsOfStrategy
 
 /** Cluster-installable entry point for everything this library injects
   * into Catalyst — set
   * `spark.sql.extensions=graft.GraftExtensions`
   * on any session (including Connect / Thrift / notebook deployments
-  * where driver code can't call our register helpers) and the custom
-  * physical strategy plus the native expressions are present from the
-  * first query:
+  * where driver code can't call our helpers) and the engine surface is
+  * present from the first query:
   *
   *  - the as-of join planner strategy (AsOfJoinPlan → sorted-merge
   *    AsOfJoinExec);
-  *  - `cosine_sim` / `dot_product` (fused vector kernels);
-  *  - `compact_decode` (SCALE compact, codegen'd).
+  *  - every function of [[graft.functions.Udfs.functions]], the one
+  *    list of the engine's SQL functions (the fused vector kernels, the
+  *    codegen'd SCALE and codec kernels, the sketch aggregate and the
+  *    Scala UDFs).
   *
-  * The in-code helpers ([[graft.plans.AsOfJoin.asof]],
-  * [[graft.functions.Udfs.register]], …) remain and are idempotent
-  * alongside this, so library users who never touch Spark conf lose
-  * nothing. The StaticInvoke-based scalar surface still needs
-  * `Udfs.register` (it carries per-chain parser state, a session-level
-  * concern, not a Catalyst one).
+  * Without the extension, a session gets the same list from its first
+  * [[Tables.load]] (or an explicit [[Tables.configure]]), which
+  * installs it once per session. That install adds only what a session
+  * lacks, so on a session built with this extension it writes nothing.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def fn(name: String, usage: String,
-      builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo(getClass.getName, "", name, usage, "", "", "",
-        "", "", "", "built-in"),
-      builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfStrategy)
-    ext.injectFunction(fn("cosine_sim",
-      "cosine_sim(a, b) - fused float64 cosine over two float arrays",
-      exprs => CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectFunction(fn("dot_product",
-      "dot_product(a, b) - fused float64 dot over two float arrays",
-      exprs => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction(fn("compact_decode",
-      "compact_decode(hex) - leading SCALE-compact value, null on bad input",
-      exprs => CompactDecode(exprs.head)))
-    ext.injectFunction(fn("bottom_k_hv",
-      "bottom_k_hv(h, v, k) - deterministic bottom-k-by-hash sketch " +
-        "(array<struct<h,v>> ascending)",
-      graft.plans.SketchExpressions.build))
+    Udfs.functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
   }
 }

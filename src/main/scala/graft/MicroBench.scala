@@ -29,7 +29,7 @@ object MicroBench {
       else try java.lang.Double.valueOf(
         Codec.toBaseUnit(BigInt(1, Codec.hexToBytes(rawHex)), decimals))
       catch { case _: IllegalArgumentException => null })
-    graft.functions.Udfs.register(spark) // the StaticInvoke forms
+    Tables.configure(spark) // the StaticInvoke forms
 
     val src = spark.range(n)
       .select(col("id"),

@@ -68,21 +68,34 @@ object Tables {
     "embeddings" -> cols("vec_id" -> LongType,
       "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
 
-  /** Session settings every entry point applies. Mirrors the reference's
-    * fixed-UTC date logic (ref docs/DEFINITIONS.md:23-26). */
+  /** The sessions [[configure]] has set up; weak keys, so a session
+    * nothing else holds is collected. */
+  private val configured = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
+
+  /** The session bootstrap, run once per session (every [[load]] calls
+    * it, so a session is set up at its first load): installs the
+    * engine's functions ([[graft.functions.Udfs.functions]]) and the
+    * as-of planner strategy, adding only what the session lacks, and
+    * sets the session settings below, which mirror the reference's
+    * fixed-UTC date logic (ref docs/DEFINITIONS.md:23-26). Later calls
+    * on the same session return at once, so a setting changed after
+    * the first load stays. */
   def configure(spark: SparkSession): SparkSession = {
-    graft.plans.VectorExpressions.register(spark)
-    graft.plans.SketchExpressions.register(spark)
-    val c = spark.conf
-    c.set("spark.sql.session.timeZone", "UTC")
-    c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    c.set("spark.sql.adaptive.enabled", "true")
-    c.set("spark.sql.parquet.aggregatePushdown", "true")
-    // Wrapping 64-bit arithmetic for the hash families (MinHash affine
-    // transforms, SimHash bit mixing) — ANSI overflow checking would
-    // throw on intentional wraparound. Division-by-zero etc. are guarded
-    // explicitly in the operators (see operators.dstd).
-    c.set("spark.sql.ansi.enabled", "false")
+    configured.synchronized {
+      if (configured.add(spark)) {
+        graft.functions.Udfs.register(spark)
+        val c = spark.conf
+        c.set("spark.sql.session.timeZone", "UTC")
+        c.set("spark.sql.adaptive.enabled", "true")
+        c.set("spark.sql.parquet.aggregatePushdown", "true")
+        // Wrapping 64-bit arithmetic for the hash families (MinHash
+        // affine transforms, SimHash bit mixing) — ANSI overflow checking
+        // would throw on intentional wraparound. Division-by-zero etc.
+        // are guarded explicitly in the operators (see operators.dstd).
+        c.set("spark.sql.ansi.enabled", "false")
+      }
+    }
     spark
   }
 

@@ -15,7 +15,6 @@ object X10Gen {
       .master("local[16]")
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -56,7 +56,6 @@ object TraceDecode {
     * resolve+decode projection stays inside one WholeStageCodegen
     * pipeline at scale. */
   def decodeTraces(traces: DataFrame, dim: DataFrame): DataFrame = {
-    graft.plans.CodecExpressions.register(traces.sparkSession)
     traces
       .withColumn("prefix",
         lower(regexp_replace(substring(col("k"), 1, 66), "^0x", "")))
@@ -193,7 +192,6 @@ object TraceDecode {
     * quarantine out, like every decode tier here. */
   def balances(traces: DataFrame, dim: DataFrame, decimals: Int = 10,
       ss58Network: Int = 42): DataFrame = {
-    graft.functions.Udfs.register(traces.sparkSession)
     val ai = udf((hex: String) => {
       try {
         val i = BlockDecode.decodeAccountInfo(hex)

@@ -194,8 +194,8 @@ object Accounts {
     * into a raw-rendering distinct (map-side partial dedup before the
     * decode kernel) then a post-normalization distinct over the
     * already-unique accounts; the union is a plan-level concat with no
-    * extra shuffle. Callers must have `Udfs.register`ed the session
-    * (the ss58 decode kernel). */
+    * extra shuffle. The session must be set up
+    * ([[graft.Tables.configure]], which its first `Tables.load` runs). */
   def accountLabels(roleFrames: Seq[(String, DataFrame)]): DataFrame = {
     require(roleFrames.nonEmpty,
       "accountLabels needs at least one role frame")

@@ -347,7 +347,6 @@ object Assets {
       blockHash: String, tsSec: Long, ss58Prefix: Int = 0,
       targetMaxHolders: Long = 5000, minShare: Double = 0.0025,
       track: String = "stablecoin"): DataFrame = {
-    graft.functions.Udfs.register(holdings.sparkSession)
     val totals = assetState.select(col("currency_id"),
       col("supply").cast("double").as("t_supply"),
       col("accounts").cast("long").as("t_holders"))
@@ -432,7 +431,6 @@ object Assets {
       trackVal: String, chainName: String, source: String,
       blockNumber: Long, blockHash: String, tsSec: Long,
       ss58Prefix: Int = 63): DataFrame = {
-    graft.functions.Udfs.register(balances.sparkSession)
     val s = intStr _
     val shaped = balances
       .join(broadcast(registry.select(col("asset_id"),
@@ -525,7 +523,6 @@ object Assets {
   def xykPoolSnapshots(pools: DataFrame, chainName: String,
       source: String, blockNumber: Long, blockHash: String,
       tsSec: Long, ss58Prefix: Int = 63): DataFrame = {
-    graft.functions.Udfs.register(pools.sparkSession)
     val s = intStr _
     def pos(asset: String, free: String) = struct(
       col(asset).cast("string").as("assetId"), s(free).as("free"))
@@ -560,7 +557,6 @@ object Assets {
   def uniquesAssetSnapshots(nfts: DataFrame, chainName: String,
       source: String, blockNumber: Long, blockHash: String,
       tsSec: Long, ss58Prefix: Int = 63): DataFrame = {
-    graft.functions.Udfs.register(nfts.sparkSession)
     val shaped = nfts
       .withColumn("kvj", to_json(struct(
         col("collection_id").cast("string").as("id"),

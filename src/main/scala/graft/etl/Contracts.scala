@@ -393,7 +393,6 @@ object Contracts {
       outRoot: String, specs: Option[DataFrame] = None,
       verified: Option[DataFrame] = None): Map[String, DataFrame] = {
     val spark = events.sparkSession
-    graft.functions.Udfs.register(spark)
     val dim = chainDimOf(chains)
     // both frames cross shuffles (the latest-wins groupBys) and feed
     // the three writes both as scan inputs AND as broadcast builds —

@@ -115,7 +115,6 @@ object Democracy {
       chainName: String, source: String, blockNumber: Long,
       blockHash: String, tsSec: Long, ss58Prefix: Int = 42)
       : Seq[DataFrame] = {
-    graft.functions.Udfs.register(casting.sparkSession)
     def recsOf(state: DataFrame, sectionStorage: String,
         track: String) =
       Snapshot.snapshotRecs(state, sectionStorage,
@@ -172,7 +171,6 @@ object Democracy {
   def referendaSnapshots(referenda: DataFrame, chainName: String,
       source: String, blockNumber: Long, blockHash: String,
       tsSec: Long): DataFrame = {
-    graft.functions.Udfs.register(referenda.sparkSession)
     Snapshot.snapshotRecs(
       referenda.withColumn("pvj", to_json(struct(
         col("ref_id"), col("status"),
@@ -203,7 +201,6 @@ object Democracy {
       source: String, blockNumber: Long, blockHash: String,
       tsSec: Long, ss58Prefix: Int = 42,
       blacklist: Seq[Long] = Nil): DataFrame = {
-    graft.functions.Udfs.register(proposals.sparkSession)
     val kept =
       if (blacklist.isEmpty) proposals
       else proposals.filter(!col("proposal_id").isin(blacklist: _*))
@@ -234,7 +231,6 @@ object Democracy {
   def bountySnapshots(bounties: DataFrame, chainName: String,
       source: String, blockNumber: Long, blockHash: String,
       tsSec: Long, ss58Prefix: Int = 42): DataFrame = {
-    graft.functions.Udfs.register(bounties.sparkSession)
     Snapshot.snapshotRecs(
       bounties
         .withColumn("pub", pubkeyOf(col("proposer")))

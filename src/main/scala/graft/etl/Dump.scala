@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.functions.{CallFlatten, Udfs}
+import graft.functions.CallFlatten
 import graft.operators.{DedupOps, StageMemo}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,7 +69,6 @@ object Dump {
     * the public projections call it on raw input; dumpDay applies it
     * once, persists, and feeds the day frame to the *Of variants. */
   private def dayBlocks(raw: DataFrame, logDT: String): DataFrame = {
-    Udfs.register(raw.sparkSession) // idempotent; projections use the UDFs
     raw.filter(col("finalized") &&
       date_format(col("block_time"), "yyyy-MM-dd") === logDT)
   }
@@ -431,7 +430,6 @@ object Dump {
   def relayCrowdloan(raw: DataFrame, logDT: String,
       relayChainId: Int = 0, usd: Option[UsdDims] = None,
       projects: Option[DataFrame] = None): DataFrame = {
-    Udfs.register(raw.sparkSession)
     val day = dayBlocks(raw, logDT)
       .filter(col("chain_id") === relayChainId)
       .filter(expr(
@@ -575,7 +573,6 @@ object Dump {
 
   private def tracesOf(day: DataFrame, dim: DataFrame,
       logDT: String): DataFrame = {
-    graft.plans.CodecExpressions.register(day.sparkSession)
     graft.decode.TraceDecode.extractKeyComponents(day, dim)
       .select(
         col("chain_id"),
@@ -682,7 +679,6 @@ object Dump {
     * before the dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def dumpDay(raw: DataFrame, logDT: String, outRoot: String,
       usd: Option[UsdDims] = None): Map[String, DataFrame] = {
-    Udfs.register(raw.sparkSession)
     val day = dayBlocks(raw, logDT)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -912,7 +908,6 @@ object Dump {
     * (StreamingParitySpec pins all eight tables frame-equal). */
   def dumpMicroBatch(raw: DataFrame, batchId: Long, logDT: String,
       outRoot: String, usd: Option[UsdDims] = None): Unit = {
-    Udfs.register(raw.sparkSession)
     val day = dayBlocks(raw, logDT)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the USD decoration commutes with micro-batching like the

@@ -109,8 +109,9 @@ object Identity {
 
   /** The full identity dimension: any account with an identity, a
     * sub-identity, or a judgement — decorated with both ss58 forms
-    * (identityManager.js:70-71 getAddress(pubkey, 0/2)). Callers must
-    * have `Udfs.register`ed the session. */
+    * (identityManager.js:70-71 getAddress(pubkey, 0/2)). The session
+    * must be set up ([[graft.Tables.configure]], which its first
+    * `Tables.load` runs). */
   def identities(calls: DataFrame, extrinsics: DataFrame,
       events: DataFrame): DataFrame = {
     val info = identityInfo(calls, extrinsics)
@@ -202,9 +203,6 @@ object Identity {
     * deduplicated dimension joins without fanout. */
   def identityExport(polkadot: DataFrame, kusama: DataFrame)
       : DataFrame = {
-    // defensive registration like the sibling entry points — the
-    // ss58_encode expr below fails unresolved on a fresh session
-    graft.functions.Udfs.register(polkadot.sparkSession)
     relayGroup(polkadot, "polkadot")
       .join(relayGroup(kusama, "kusama"), Seq("pubkey"), "full_outer")
       .select(Seq(
@@ -222,7 +220,6 @@ object Identity {
     * pubkey (rows whose address fails to decode drop, the `if (pubkey)`
     * gate), nickname = "label kind", account_type = kind. */
   def attributedAccounts(labels: DataFrame): DataFrame = {
-    graft.functions.Udfs.register(labels.sparkSession)
     labels.select(
       expr("ss58_pubkey(address)").as("address_pubkey"),
       concat(col("label"), lit(" "), col("kind"))

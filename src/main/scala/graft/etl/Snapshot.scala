@@ -168,7 +168,6 @@ object Snapshot {
     require(pieces.length == 2,
       s"invalid section_storage=$sectionStorage — want 'section.storage'" +
         " (the reference's setRecSnapShotInfo guard)")
-    graft.functions.Udfs.register(state.sparkSession)
     def jsonOf(cols: Seq[String]) =
       if (cols.isEmpty) lit(null).cast("string")
       else to_json(struct(cols.map(col): _*))
@@ -240,7 +239,6 @@ object Snapshot {
     * try/catch-per-line. Row-wise projection; no shuffle. */
   def transformBalancesFeed(feed: DataFrame, outDir: String,
       format: String = "csv", ss58Prefix: Int = 0): DataFrame = {
-    graft.functions.Udfs.register(feed.sparkSession)
     val out = feed.select(
       pubkeyOf(col("AccountId")).as("address_pubkey"),
       col("Free").as("free"), col("Locked").as("locked"),

@@ -129,7 +129,6 @@ object Stakings {
       chainName: String, source: String, blockNumber: Long,
       blockHash: String, tsSec: Long, ss58Prefix: Int = 5)
       : DataFrame = {
-    graft.functions.Udfs.register(stakerInfo.sparkSession)
     Snapshot.snapshotRecs(
       stakerInfo
         .withColumn("pub", pubkeyOf(col("staker")))

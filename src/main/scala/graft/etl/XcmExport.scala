@@ -32,7 +32,6 @@ object XcmExport {
     * or anything was received, else "unknown". */
   def xcmTransfers(transfers: DataFrame, matched: DataFrame,
       logDT: String, usd: Option[Dump.UsdDims] = None): DataFrame = {
-    graft.functions.Udfs.register(transfers.sparkSession)
     val m = matched
       // the source side re-joins by identity — drop the copies the
       // matcher carried through so no column is ambiguous
@@ -153,7 +152,6 @@ object XcmExport {
     * matches and exports. */
   def duneXcmTransfers(transfers: DataFrame,
       ss58Prefix: Int = 0): DataFrame = {
-    graft.functions.Udfs.register(transfers.sparkSession)
     def render(c: Column): Column =
       when(c.isNotNull && length(c) > 42,
         call_udf("ss58_encode", c, lit(ss58Prefix))).otherwise(c)

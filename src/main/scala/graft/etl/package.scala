@@ -26,7 +26,8 @@ package object etl {
     * the engine's decode tier renders AccountId args as 0x pubkey hex
     * already, while reference-shaped JSON carries ss58 strings — accept
     * both; malformed input → null (the ss58_pubkey kernel guard).
-    * Callers must have `Udfs.register`ed the session. */
+    * The session must be set up
+    * ([[graft.Tables.configure]], which its first `Tables.load` runs). */
   def pubkeyOf(c: Column): Column =
     when(c.startsWith("0x"), lower(c))
       .otherwise(call_udf("ss58_pubkey", c))

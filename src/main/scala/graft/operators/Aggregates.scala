@@ -1211,7 +1211,6 @@ object Aggregates {
   // votes ∪ delegation union. The query reads the WRITTEN dim back
   // and rolls up per label; DuckDB re-derives members and bounds.
   private def a27(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     // every role's account expression is a function of user_id alone,
     // so the fact table collapses to the DISTINCT (event_type, user_id)
     // dim ONCE before any branch work (round 18, guide §1.2: the

@@ -85,7 +85,6 @@ object ContractOps {
   private def buildContractsDumpFrom(s: SparkSession, e: DataFrame,
       outRoot: String): Map[String, DataFrame] = {
     import s.implicits._
-    graft.functions.Udfs.register(s)
     val bt = (lit(1709251200L) + col("event_id")).cast("timestamp")
     val exId = concat(col("event_id"), lit("-0"))
     val common = Seq(

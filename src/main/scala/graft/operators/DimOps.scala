@@ -25,7 +25,6 @@ object DimOps {
   // one legal-only — the "/sub" fullname with inherited info — and
   // some unidentified misses), kusama subs at mod-120 parents.
   private def i1(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     val ev = Tables.events(s, d).select(col("event_id").as("e"))
     val pName = (c: Column) => concat(lit("p"), str(c))
     val polkadot = ev.filter(col("e") < 600).select(
@@ -179,7 +178,6 @@ object DimOps {
   /** Shared attribution-label synthesis: mod-5 account types, every
     * 11th address malformed (drops at the pubkey gate). */
   private def labelsOf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     Tables.events(s, d).filter(col("event_id") < 600)
       .select(col("event_id").as("e"))
       .select(
@@ -244,7 +242,6 @@ object DimOps {
   // cross-engine; the ss58 text column itself is pinned by
   // JsonFeedSpec.
   private def i4(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     val dir = queryDumpDir("graft_users_csv") + "/users"
     Tables.events(s, d).filter(col("event_id") < 700)
       .select(col("user_id").as("u")).distinct()

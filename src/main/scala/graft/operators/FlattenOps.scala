@@ -417,7 +417,6 @@ object FlattenOps {
   // contribution/contribution_usd are single IEEE ops off exact
   // integers, bit-identical cross-engine (the p9 template).
   private def b16(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     val ev = Tables.events(s, d)
     val base = 1709251200L // 2024-03-01T00:00:00Z
     val sid = col("event_id")

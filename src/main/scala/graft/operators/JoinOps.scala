@@ -1223,7 +1223,6 @@ object JoinOps {
   // n_prefix0 = n_from_rendered. Timestamps truncate to seconds at
   // synthesis so the CSV round trip is exact.
   private def b15(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s)
     val sid = col("event_id")
     val sidS = sid.cast("string")
     val transfers = Tables.events(s, d)

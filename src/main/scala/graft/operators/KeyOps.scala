@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Udfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,7 +30,6 @@ object KeyOps {
   // K1 — sovereign-account derivation per synthetic "parachain"
   // (n_nationkey + 1000), relay and sibling forms.
   private def k1(s: SparkSession, d: String): DataFrame = {
-    Udfs.register(s)
     Tables.nation(s, d)
       .select(col("n_nationkey"),
         (col("n_nationkey") + 1000).cast("long").as("para_id"))
@@ -51,7 +49,6 @@ object KeyOps {
   // sovereign address from their own nation key and join ON the derived
   // key (the J10 shape the XCM-fee pipeline uses, ref xcmmanager.js:950).
   private def k2(s: SparkSession, d: String): DataFrame = {
-    Udfs.register(s)
     val dim = Tables.nation(s, d)
       .selectExpr("n_name",
         "sovereign_account(CAST(n_nationkey + 1000 AS BIGINT), false) AS addr")
@@ -267,7 +264,6 @@ object KeyOps {
   // Moonbeam-class address normalization (P12, ref paraTool.js:517) is
   // verified under the hash gate, not just by golden vectors.
   private def k6(s: SparkSession, d: String): DataFrame = {
-    Udfs.register(s)
     def pubkey(key: String) =
       s"concat('0x', md5(CAST($key AS STRING)), " +
         s"md5(concat(CAST($key AS STRING), 'x')))"

@@ -1504,7 +1504,6 @@ object TextOps {
   // vocabulary and the whole engine sits under the hash gate. Canonical
   // form = the higher-frequency side (ties: lexicographic min).
   private def x22(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Udfs.register(s) // levenshtein_le
     val tokens = tokenizedDocs(s, d).filter(col("doc_id") < 2000)
       .select(col("doc_id"), explode(col("ts")).as("w"))
     val noisy = tokens

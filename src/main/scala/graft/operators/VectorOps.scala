@@ -60,7 +60,7 @@ object VectorOps {
   def cosineFold(a: String, b: String): Column =
     dotFold(a, b) / sqrt(dotFold(a, a) * dotFold(b, b))
 
-  /** Fused single-pass kernels (graft.plans.VectorExpressions) —
+  /** Fused single-pass kernels (plans/VectorExpressions.scala) —
     * arithmetic-identical to the fold form, ~4× fewer array walks. */
   private def dot(a: String, b: String): Column =
     expr(s"dot_product($a, $b)")

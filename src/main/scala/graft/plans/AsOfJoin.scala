@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -170,12 +170,6 @@ object AsOfStrategy extends SparkStrategy {
 /** DataFrame-level API. */
 object AsOfJoin {
 
-  private def ensureRegistered(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfStrategy
-  }
-
   private def attr(plan: LogicalPlan, name: String): Attribute =
     plan.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
@@ -183,12 +177,13 @@ object AsOfJoin {
 
   /** `asof(left, right, keys, "l_ts", "r_ts", Some(micros))`: time
     * columns must be TimestampType or LongType micros; right column
-    * names should be pre-renamed to avoid clashes. */
+    * names should be pre-renamed to avoid clashes. The session plans
+    * it through [[AsOfStrategy]], which the session bootstrap installs
+    * ([[graft.Tables.configure]] or [[graft.GraftExtensions]]). */
   def asof(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTimeCol: String, rightTimeCol: String,
       toleranceUs: Option[Long] = None): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     // self-join safety: if the sides share attribute ids (both derived

@@ -69,8 +69,6 @@ case class CompactDecode(child: Expression) extends UnaryExpression {
 }
 
 object CodecExpressions {
-  /** Register `compact_decode` for SQL + `expr(...)` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "compact_decode", exprs => CompactDecode(exprs.head), "scala_udf")
+  /** Install the engine's functions, `compact_decode` among them. */
+  def register(spark: SparkSession): Unit = graft.functions.Udfs.register(spark)
 }

@@ -4,7 +4,7 @@ import graft.functions.{Codec, XcmLocation}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Null-guarded scalar kernels behind the codegen'd SQL function
-  * surface: [[graft.functions.Udfs.register]] exposes these through
+  * surface: [[graft.functions.Udfs.functions]] exposes these through
   * Catalyst `StaticInvoke` expressions instead of Scala UDFs, so the
   * per-row conversions Dump's six projections run on EVERY exported
   * row (address render, decimal scaling, asset canonicalization)

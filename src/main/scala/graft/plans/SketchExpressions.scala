@@ -2,7 +2,6 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
@@ -146,9 +145,4 @@ object SketchExpressions {
     val k = exprs(2).eval().asInstanceOf[Number].intValue()
     BottomKByHash(exprs(0), exprs(1), k).toAggregateExpression()
   }
-
-  /** Register `bottom_k_hv` for SQL + `expr(...)` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k_hv", build, "scala_udf")
 }

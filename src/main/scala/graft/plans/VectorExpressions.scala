@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -144,15 +143,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorExpressions {
-  /** Register `cosine_sim` / `dot_product` for SQL + `expr(...)` use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
-  }
 }

@@ -289,10 +289,11 @@ object Serve {
     * on the given networks, and the truncated H160 an AccountId20
     * chain sees (ref paraTool.js:517 pubkey_to_evm_ss58) — as one
     * dimension row per network, computed entirely by the registered
-    * codec UDFs (no data scan at all). */
+    * codec UDFs (no data scan at all), so `spark` must already be set
+    * up ([[graft.Tables.configure]], which its first `Tables.load`
+    * runs). */
   def addressForms(spark: org.apache.spark.sql.SparkSession,
       pubkey: String, networks: Seq[Int] = Seq(0, 2, 42)): DataFrame = {
-    graft.functions.Udfs.register(spark)
     import spark.implicits._
     networks.toDF("network")
       .withColumn("pubkey", lit(pubkey))

@@ -49,9 +49,9 @@ object JsonFeed {
     * substrateetl/users.json; ref tools/createAudience.js: the
     * id,evmAddress,substrateAddress,… export with the pubkey derived
     * from the ss58 column; rows keep whichever address side they
-    * have — the reference emits the fields conditionally). */
-  def userAudience(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.Udfs.register(spark)
+    * have — the reference emits the fields conditionally). `spark`
+    * must be set up ([[graft.Tables.configure]]). */
+  def userAudience(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true")
       .schema("id STRING, evmAddress STRING, substrateAddress STRING," +
         " twitterHandle STRING, username STRING, twitterUrl STRING")
@@ -62,5 +62,4 @@ object JsonFeed {
         call_udf("ss58_pubkey", col("substrateAddress"))
           .as("account_pubkey"))
       .filter(col("id").isNotNull)
-  }
 }

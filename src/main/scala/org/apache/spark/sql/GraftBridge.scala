@@ -17,8 +17,10 @@ object GraftBridge {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** Converted at once rather than wrapped for the analyzer, so the
+    * result can also be what a SQL function builder returns. */
   def expression(c: Column): Expression =
-    classic.ExpressionUtils.expression(c)
+    classic.ColumnNodeToExpressionConverter(c.node)
 
   /** Type equality that ignores nullability, at every nesting level. */
   def sameType(a: types.DataType, b: types.DataType): Boolean =
