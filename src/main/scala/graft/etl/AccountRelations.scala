@@ -97,9 +97,7 @@ object AccountRelations {
     val tables = Map(
       "proxyaccount" -> proxyAccounts(calls, extrinsics),
       "multisigaccount" -> multisigAccounts(calls, extrinsics))
-    tables.foreach { case (name, df) =>
-      Writers.overwritePartitions(df, s"$outRoot/$name", Seq("chain_id"))
-    }
+    Writers.publish(outRoot, Seq("chain_id"), None, tables)
     tables
   }
 

@@ -86,7 +86,6 @@ object Accounts {
       transfers: DataFrame, balancesToday: DataFrame,
       balancesPrev: DataFrame, logDT: String,
       outRoot: String): Map[String, DataFrame] = {
-    val spark = extrinsics.sparkSession
     // materialized BEFORE the concurrent writes: the aggregation in
     // active's lineage must not be first-computed by racing jobs
     // (Writers.materialize — the round-19 anti-scaling rule; two of
@@ -99,16 +98,9 @@ object Accounts {
         "accountspassive" -> passiveAccounts(transfers, active),
         "accountsnew" -> newAccounts(balancesToday, balancesPrev),
         "accountsreaped" -> reapedAccounts(balancesToday, balancesPrev))
-      // four independent date-partition writes — concurrent submission
-      // back-fills each write's straggler tail (guide §2.6, the
-      // dumpDay pattern)
-      Writers.concurrently(spark, tables.toSeq) { case (name, df) =>
-        val written = df.withColumn("log_dt", lit(logDT))
-        Writers.overwritePartitions(written, s"$outRoot/$name",
-          Seq("log_dt"))
-        name -> spark.read.schema(written.schema)
-          .parquet(s"$outRoot/$name")
-      }.toMap
+        .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
+      Writers.publish(outRoot, Seq("log_dt"), None, tables)
+      Writers.readBack(outRoot, tables)
     } finally active.unpersist(): Unit
   }
 
@@ -221,10 +213,8 @@ object Accounts {
     * is the batch-equivalent). */
   def dumpAccountLabels(roleFrames: Seq[(String, DataFrame)],
       outRoot: String): DataFrame = {
-    val out = accountLabels(roleFrames)
-    out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outRoot/account_labels")
-    roleFrames.head._2.sparkSession.read.schema(out.schema)
-      .parquet(s"$outRoot/account_labels")
+    val table = Seq("account_labels" -> accountLabels(roleFrames))
+    Writers.publish(outRoot, Nil, None, table)
+    Writers.readBack(outRoot, table)("account_labels")
   }
 }

@@ -223,15 +223,11 @@ object Assets {
     * written layout. */
   def dumpAssets(chainAssets: DataFrame, registry: DataFrame,
       relayChain: String, outRoot: String): Map[String, DataFrame] = {
-    val spark = chainAssets.sparkSession
-    Map(
+    val tables = Map(
       "assets" -> assets(chainAssets, registry, relayChain),
       "xcmassets" -> xcmassets(registry, relayChain))
-      .map { case (name, df) =>
-        Writers.overwritePartitions(df, s"$outRoot/$name",
-          Seq("relay_chain"))
-        name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-      }
+    Writers.publish(outRoot, Seq("relay_chain"), None, tables)
+    Writers.readBack(outRoot, tables)
   }
 
   /** Per-token `totalIssuance` snapshot recs — the shared shape of the

@@ -415,12 +415,9 @@ object Contracts {
           contractCallRows(calls, extrinsics), contract, code, dim,
           specs, verified))
       // three independent whole-table writes off the two persisted
-      // frames — concurrent submission back-fills each write's tail
-      Writers.concurrently(spark, tables.toSeq) { case (name, df) =>
-        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outRoot/$name")
-        name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-      }.toMap
+      // frames
+      Writers.publish(outRoot, Nil, None, tables)
+      Writers.readBack(outRoot, tables)
     } finally {
       code.unpersist(); contract.unpersist(): Unit
     }

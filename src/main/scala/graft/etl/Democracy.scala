@@ -253,14 +253,10 @@ object Democracy {
     * {chainID}` with full-value replace — same semantics, one table). */
   def dumpDemocracy(casting: DataFrame, delegating: DataFrame,
       outRoot: String, decimals: Int = 10): Map[String, DataFrame] = {
-    val spark = casting.sparkSession
     val tables = Map(
       "votes" -> votes(casting, decimals),
       "delegation" -> delegations(delegating, decimals))
-    tables.map { case (name, df) =>
-      Writers.overwritePartitions(df, s"$outRoot/$name",
-        Seq("chain_id"))
-      name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-    }
+    Writers.publish(outRoot, Seq("chain_id"), None, tables)
+    Writers.readBack(outRoot, tables)
   }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *   raw (nested) blocks for a UTC day
   *     → 8 entity projections: blocks, extrinsics, events, transfers,
   *       calls, logs, rewards, crowdloan
-  *     → idempotent date-partitioned parquet (Writers.overwritePartitions
-  *       = the `bq load $date --replace` semantics)
+  *     → idempotent date-partitioned parquet (Writers.publish = the
+  *       `bq load $date --replace` semantics)
   *
   * where the reference runs nested per-block/per-extrinsic JS loops, each
   * output here is a declarative explode/flatten that Catalyst pipelines —
@@ -266,7 +266,7 @@ object Dump {
     * dimension is tiny and cumulative, ref substrateetl.js:148). */
   def dumpSpecVersions(raw: DataFrame, outRoot: String): DataFrame = {
     val dim = specVersions(raw)
-    dim.write.mode("overwrite").parquet(s"$outRoot/specversions")
+    Writers.publish(outRoot, Nil, None, Seq("specversions" -> dim))
     dim
   }
 
@@ -526,8 +526,7 @@ object Dump {
       usd: Option[UsdDims] = None,
       projects: Option[DataFrame] = None): DataFrame = {
     val out = relayCrowdloan(raw, logDT, relayChainId, usd, projects)
-    Writers.overwritePartitions(out, s"$outRoot/crowdloan",
-      Seq("log_dt"))
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("crowdloan" -> out))
     out
   }
 
@@ -616,51 +615,35 @@ object Dump {
     * persisted day slice feeds both writes, like dumpDay's. */
   def dumpTracesDay(rawTraces: DataFrame, dim: DataFrame, logDT: String,
       outRoot: String, decimals: Int = 10,
-      ss58Network: Int = 42): Map[String, DataFrame] = {
+      ss58Network: Int = 42): Map[String, DataFrame] =
+    publishTraces(rawTraces, dim, logDT, outRoot, decimals, ss58Network,
+      None)
+
+  /** Streaming twin of [[dumpTracesDay]] — one micro-batch of raw
+    * trace cells landed into the same date-partitioned layout (drive
+    * from `foreachBatch` like [[dumpMicroBatch]]), exactly-once under
+    * replay by the micro-batch rule of [[Writers.publish]]. Both
+    * projections are row-wise against the broadcast storage-key dim —
+    * no cross-trace state — so micro-batching commutes with the batch
+    * plan exactly as the block-side tables do. */
+  def dumpTracesMicroBatch(rawTraces: DataFrame, dim: DataFrame,
+      batchId: Long, logDT: String, outRoot: String, decimals: Int = 10,
+      ss58Network: Int = 42): Unit =
+    publishTraces(rawTraces, dim, logDT, outRoot, decimals, ss58Network,
+      Some(batchId)): Unit
+
+  private def publishTraces(rawTraces: DataFrame, dim: DataFrame,
+      logDT: String, outRoot: String, decimals: Int, ss58Network: Int,
+      batchId: Option[Long]): Map[String, DataFrame] = {
     val day = dayTraces(rawTraces, logDT)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val tables = Map(
         "traces" -> tracesOf(day, dim, logDT),
         "balances" -> balancesOf(day, dim, logDT, decimals, ss58Network))
-      // both writes are independent jobs to distinct paths — submit
-      // them concurrently so the second back-fills the first's tail
-      Writers.concurrently(rawTraces.sparkSession, tables.toSeq) {
-        case (name, df) =>
-          Writers.overwritePartitions(df, s"$outRoot/$name", Seq("log_dt"))
-      }
+      Writers.publish(outRoot, Seq("log_dt"), batchId, tables)
       tables
     } finally day.unpersist()
-  }
-
-  /** Streaming twin of [[dumpTracesDay]] — one micro-batch of raw
-    * trace cells landed into the same date-partitioned layout (drive
-    * from `foreachBatch` like [[dumpMicroBatch]]). Both projections
-    * are row-wise against the broadcast storage-key dim — no
-    * cross-trace state — so micro-batching commutes with the batch
-    * plan exactly as the block-side tables do.
-    *
-    * Exactly-once: `foreachBatch` is at-least-once — a restart re-runs
-    * the last uncommitted micro-batch — so each write lands as a
-    * (log_dt, batch_id) DYNAMIC-OVERWRITE partition keyed by the
-    * harness's batchId: a replay replaces its own partition instead of
-    * appending duplicate trace/balance rows (the same contract as
-    * [[EvmDump.dumpEvmMicroBatch]]). Readers see the same day
-    * regardless of batching — drop batch_id or read the directory
-    * whole. */
-  def dumpTracesMicroBatch(rawTraces: DataFrame, dim: DataFrame,
-      batchId: Long, logDT: String, outRoot: String, decimals: Int = 10,
-      ss58Network: Int = 42): Unit = {
-    val day = dayTraces(rawTraces, logDT)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Writers.concurrently(rawTraces.sparkSession, Map(
-      "traces" -> tracesOf(day, dim, logDT),
-      "balances" -> balancesOf(day, dim, logDT, decimals, ss58Network)
-    ).toSeq) { case (name, df) =>
-      Writers.overwritePartitions(
-        df.withColumn("batch_id", lit(batchId)),
-        s"$outRoot/$name", Seq("log_dt", "batch_id"))
-    } finally day.unpersist(): Unit
   }
 
   /** The whole §3.2 entry point: validate (timestamp-presence check,
@@ -678,7 +661,11 @@ object Dump {
     * all eight tables twice. The streaming path removes re-deliveries
     * before the dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def dumpDay(raw: DataFrame, logDT: String, outRoot: String,
-      usd: Option[UsdDims] = None): Map[String, DataFrame] = {
+      usd: Option[UsdDims] = None): Map[String, DataFrame] =
+    publishDay(raw, logDT, outRoot, usd, None)
+
+  private def publishDay(raw: DataFrame, logDT: String, outRoot: String,
+      usd: Option[UsdDims], batchId: Option[Long]): Map[String, DataFrame] = {
     val day = dayBlocks(raw, logDT)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -688,10 +675,7 @@ object Dump {
       // tail back-fills with the next table's tasks instead of idling
       // the cluster eight times; cache-block locks keep the persisted
       // day computed once even under concurrent first readers
-      Writers.concurrently(raw.sparkSession, tables.toSeq) {
-        case (name, df) =>
-          Writers.overwritePartitions(df, s"$outRoot/$name", Seq("log_dt"))
-      }
+      Writers.publish(outRoot, Seq("log_dt"), batchId, tables)
       tables
     } finally day.unpersist()
   }
@@ -886,7 +870,7 @@ object Dump {
 
   /** Streaming twin of [[dumpDay]] — the ST end-to-end face: the SAME
     * day filter and eight projections applied to ONE micro-batch of raw
-    * candidate blocks, APPENDED into the same date-partitioned layout.
+    * candidate blocks, landed into the same date-partitioned layout.
     * Drive it from `foreachBatch` over the candidate stream:
     *
     * {{{
@@ -895,29 +879,15 @@ object Dump {
     * }}}
     *
     * Exactly-once: the stream checkpoint's source tracking makes a
-    * clean stop→restart admit only new files (FileStreamSpec), but
-    * `foreachBatch` itself is at-least-once — a crash after the write
-    * but before the checkpoint commit REPLAYS the batch — so each
-    * write lands as a (log_dt, batch_id) DYNAMIC-OVERWRITE partition
-    * keyed by the harness's batchId: the replay replaces its own
-    * partition instead of appending duplicates (the same contract as
-    * [[EvmDump.dumpEvmMicroBatch]]; readers drop batch_id or read the
-    * directory whole). Every projection is row-wise per raw block — no
-    * cross-block state — so micro-batching commutes with the batch
-    * plan and stream output ≡ batch output on the same corpus
-    * (StreamingParitySpec pins all eight tables frame-equal). */
+    * clean stop→restart admit only new files (FileStreamSpec), and a
+    * replayed batch replaces its own partition by the micro-batch rule
+    * of [[Writers.publish]]. Every projection, the USD decoration
+    * included (row-wise against STATIC broadcast dims), is row-wise
+    * per raw block with no cross-block state, so micro-batching
+    * commutes with the batch plan and stream output ≡ batch output on
+    * the same corpus (StreamingParitySpec pins all eight tables
+    * frame-equal). */
   def dumpMicroBatch(raw: DataFrame, batchId: Long, logDT: String,
-      outRoot: String, usd: Option[UsdDims] = None): Unit = {
-    val day = dayBlocks(raw, logDT)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the USD decoration commutes with micro-batching like the
-    // projections themselves: it is row-wise against STATIC broadcast
-    // dims (price intervals, chain registry), no cross-block state
-    try Writers.concurrently(raw.sparkSession,
-      projections(day, logDT, usd).toSeq) { case (name, df) =>
-      Writers.overwritePartitions(
-        df.withColumn("batch_id", lit(batchId)),
-        s"$outRoot/$name", Seq("log_dt", "batch_id"))
-    } finally day.unpersist()
-  }
+      outRoot: String, usd: Option[UsdDims] = None): Unit =
+    publishDay(raw, logDT, outRoot, usd, Some(batchId)): Unit
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Composition, not new decode: the projections are
   * [[graft.decode.EvmDecode]]'s tx⋈receipt merge and ERC-20/721/1155
   * log extractors routed through the same
-  * [[Writers.overwritePartitions]] date-partition contract as the
+  * [[Writers.publish]] date-partition contract as the
   * substrate-side dump, with schema-supplied read-backs so a day with
   * no token transfers stays readable (the Accounts convention).
   *
@@ -434,7 +434,6 @@ object EvmDump {
       chains: Option[DataFrame] = None,
       eventSigs: Option[DataFrame] = None,
       signatures: Option[DataFrame] = None): Map[String, DataFrame] = {
-    val spark = txs.sparkSession
     require(receipts.columns.contains("logs"),
       "dumpEvmDataset needs receipt logs — both tables project them")
     // materialize BEFORE the concurrent writes: the join in the
@@ -443,15 +442,15 @@ object EvmDump {
     val combined = Writers.materialize(
       EvmDecode.combineTxReceipt(txs, receipts)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try Writers.concurrently(spark, Map(
-      "transactions" -> evmTransactionsOf(combined, logDT, chains,
-        signatures),
-      "logs" -> evmLogsOf(combined, logDT, chains, eventSigs),
-      "token_transfers" -> evmTokenTransfersOf(combined, logDT, chains)
-    ).toSeq) { case (name, df) =>
-      Writers.overwritePartitions(df, s"$outRoot/$name", Seq("log_dt"))
-      name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-    }.toMap finally combined.unpersist(): Unit
+    try {
+      val tables = Map(
+        "transactions" -> evmTransactionsOf(combined, logDT, chains,
+          signatures),
+        "logs" -> evmLogsOf(combined, logDT, chains, eventSigs),
+        "token_transfers" -> evmTokenTransfersOf(combined, logDT, chains))
+      Writers.publish(outRoot, Seq("log_dt"), None, tables)
+      Writers.readBack(outRoot, tables)
+    } finally combined.unpersist(): Unit
   }
 
   /** The day's two projections off ONE combined frame — the single
@@ -469,7 +468,6 @@ object EvmDump {
       outRoot: String, usd: Option[Dump.UsdDims] = None,
       tokenDecimals: Option[DataFrame] = None,
       signatures: Option[DataFrame] = None): Map[String, DataFrame] = {
-    val spark = txs.sparkSession
     // a receipts frame without logs would null the column through
     // combineTxReceipt's slim-frame tolerance and write an EMPTY
     // evmtransfers partition with no error — the day dump demands the
@@ -484,14 +482,12 @@ object EvmDump {
     val combined = Writers.materialize(
       EvmDecode.combineTxReceipt(txs, receipts)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try Writers.concurrently(spark,
-      evmProjections(combined, logDT, usd, tokenDecimals, signatures)
-        .toSeq) { case (name, df) =>
-          Writers.overwritePartitions(df, s"$outRoot/$name",
-            Seq("log_dt"))
-          name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-        }.toMap
-    finally combined.unpersist(): Unit
+    try {
+      val tables =
+        evmProjections(combined, logDT, usd, tokenDecimals, signatures)
+      Writers.publish(outRoot, Seq("log_dt"), None, tables)
+      Writers.readBack(outRoot, tables)
+    } finally combined.unpersist(): Unit
   }
 
   /** Streaming twin of [[dumpEvmDay]] for `foreachBatch`: the realtime
@@ -502,17 +498,12 @@ object EvmDump {
     * by [[EvmDecode.combineNested]] — NO join: a split-and-rejoin on
     * the hash would fan one receipt across a pending re-emission of
     * the same tx, and it costs an exchange on every trigger. The
-    * projections are the same [[evmProjections]] the batch dump uses.
-    *
-    * Exactly-once: `foreachBatch` is at-least-once — a restart re-runs
-    * the last uncommitted micro-batch — so each write lands as a
-    * (log_dt, batch_id) DYNAMIC-OVERWRITE partition keyed by the
-    * harness's batchId: a replay replaces its own partition instead of
-    * appending a duplicate. Readers see the same day regardless of
-    * batching (drop batch_id or read the directory whole); a re-emitted
-    * tx (pending in one batch, mined in a later one) is one row per
-    * emission — dedupe at read with the Q9 latest-per-key pattern, the
-    * realtime-table semantics.
+    * projections are the same [[evmProjections]] the batch dump uses,
+    * published through the same call under the micro-batch rule of
+    * [[Writers.publish]], so a replayed batch replaces its own
+    * partition. A re-emitted tx (pending in one batch, mined in a later
+    * one) is one row per emission — dedupe at read with the Q9
+    * latest-per-key pattern, the realtime-table semantics.
     *
     * `receipt` struct fields: status, gas_used, cumulative_gas_used,
     * effective_gas_price, contract_address, logs. */
@@ -523,13 +514,8 @@ object EvmDump {
       signatures: Option[DataFrame] = None): Unit = {
     val combined = EvmDecode.combineNested(txsWithReceipt)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Writers.concurrently(txsWithReceipt.sparkSession,
-      evmProjections(combined, logDT, usd, tokenDecimals, signatures)
-        .toSeq) { case (name, df) =>
-          Writers.overwritePartitions(
-            df.withColumn("batch_id", lit(batchId)),
-            s"$outRoot/$name", Seq("log_dt", "batch_id"))
-        }
+    try Writers.publish(outRoot, Seq("log_dt"), Some(batchId),
+      evmProjections(combined, logDT, usd, tokenDecimals, signatures))
     finally combined.unpersist(): Unit
   }
 
@@ -550,7 +536,6 @@ object EvmDump {
   def dumpEvmAccountsDay(evmtxs: DataFrame, evmtransfers: DataFrame,
       paraId: String, relayChain: String, logDT: String,
       outRoot: String): Map[String, DataFrame] = {
-    val spark = evmtxs.sparkSession
     val active = evmtxs
       .groupBy(col("from_address"))
       .agg(max(col("block_timestamp")).as("ts"),
@@ -563,13 +548,10 @@ object EvmDump {
         Seq("address"), "left_anti")
       .select(lit(paraId).as("para_id"),
         lit(relayChain).as("relay_chain"), col("address"), col("ts"))
-    Map("accountsevmactive" -> active, "accountsevmpassive" -> passive)
-      .map { case (name, df) =>
-        val written = df.withColumn("log_dt", lit(logDT))
-        Writers.overwritePartitions(written, s"$outRoot/$name",
-          Seq("log_dt"))
-        name -> spark.read.schema(written.schema)
-          .parquet(s"$outRoot/$name")
-      }
+    val tables = Map("accountsevmactive" -> active,
+      "accountsevmpassive" -> passive)
+      .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
+    Writers.publish(outRoot, Seq("log_dt"), None, tables)
+    Writers.readBack(outRoot, tables)
   }
 }

@@ -85,17 +85,15 @@ object Hourly {
     * (the reference's partitioned_table switch, :150-164). */
   def dumpDuneHour(tables: Map[String, DataFrame], logDT: String,
       hr: Int, outRoot: String,
-      tsCols: Map[String, String] = Map.empty): Map[String, DataFrame] =
-    tables.map { case (name, df) =>
-      val tsCol = tsCols.getOrElse(name, "block_time")
-      val hrKey = f"$logDT $hr%02d"
-      val out = df
-        .filter(hourKey(col(tsCol)) === hrKey)
+      tsCols: Map[String, String] = Map.empty): Map[String, DataFrame] = {
+    val hrKey = f"$logDT $hr%02d"
+    val outs = tables.map { case (name, df) =>
+      name -> df
+        .filter(hourKey(col(tsCols.getOrElse(name, "block_time"))) === hrKey)
         .withColumn("log_dt", lit(logDT))
         .withColumn("hr", lit(hr))
-      Writers.overwritePartitions(out, s"$outRoot/$name",
-        Seq("log_dt", "hr"))
-      name -> df.sparkSession.read.schema(out.schema)
-        .parquet(s"$outRoot/$name")
     }
+    Writers.publish(outRoot, Seq("log_dt", "hr"), None, outs)
+    Writers.readBack(outRoot, outs)
+  }
 }

@@ -250,16 +250,12 @@ object Identity {
     * is date-partitioned) and return the read-backs. */
   def dumpIdentityDims(identity: DataFrame, accounts: DataFrame,
       outRoot: String): Map[String, DataFrame] = {
-    val spark = identity.sparkSession
     val tables = Map(
       "identity" -> identity,
       "exchanges" -> exchanges(accounts),
       "knownpubs" -> knownpubs(accounts))
-    tables.map { case (name, df) =>
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$outRoot/$name")
-      name -> spark.read.schema(df.schema).parquet(s"$outRoot/$name")
-    }
+    Writers.publish(outRoot, Nil, None, tables)
+    Writers.readBack(outRoot, tables)
   }
 
   /** Serve-face decoration: left-join identity display/verified onto

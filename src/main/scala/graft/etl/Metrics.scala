@@ -56,11 +56,11 @@ object Metrics {
   def dumpBlocklogDay(blocks: DataFrame, extrinsics: DataFrame,
       events: DataFrame, transfers: DataFrame, active: DataFrame,
       logDT: String, outRoot: String): DataFrame = {
-    val out = blocklogDay(blocks, extrinsics, events, transfers, active)
-      .withColumn("log_dt", lit(logDT))
-    Writers.overwritePartitions(out, s"$outRoot/blocklog", Seq("log_dt"))
-    blocks.sparkSession.read.schema(out.schema)
-      .parquet(s"$outRoot/blocklog")
+    val table = Seq("blocklog" ->
+      blocklogDay(blocks, extrinsics, events, transfers, active)
+        .withColumn("log_dt", lit(logDT)))
+    Writers.publish(outRoot, Seq("log_dt"), None, table)
+    Writers.readBack(outRoot, table)("blocklog")
   }
 
   /** `blocklogstats` — the monthly descriptive-stats rollup over the
@@ -116,11 +116,9 @@ object Metrics {
     * a month replaces exactly that month). */
   def dumpBlocklogStats(blocklog: DataFrame, metrics: Seq[String],
       outRoot: String): DataFrame = {
-    val out = blocklogStats(blocklog, metrics)
-    Writers.overwritePartitions(out, s"$outRoot/blocklogstats",
-      Seq("month_dt"))
-    blocklog.sparkSession.read.schema(out.schema)
-      .parquet(s"$outRoot/blocklogstats")
+    val table = Seq("blocklogstats" -> blocklogStats(blocklog, metrics))
+    Writers.publish(outRoot, Seq("month_dt"), None, table)
+    Writers.readBack(outRoot, table)("blocklogstats")
   }
 
   /** The `chains` system table — one of the reference's two
@@ -142,11 +140,9 @@ object Metrics {
     * the other non-partitioned table, ships the same way off
     * XcmMatcher.specVersions). */
   def dumpChains(chainReg: DataFrame, outRoot: String): DataFrame = {
-    val out = chainsTable(chainReg)
-    out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outRoot/chains")
-    chainReg.sparkSession.read.schema(out.schema)
-      .parquet(s"$outRoot/chains")
+    val table = Seq("chains" -> chainsTable(chainReg))
+    Writers.publish(outRoot, Nil, None, table)
+    Writers.readBack(outRoot, table)("chains")
   }
 
   /** paraID → chainID under a relay (ref paraTool.js

@@ -221,10 +221,9 @@ object Snapshot {
       .withColumn("hr",
         (pmod(unix_timestamp(col("ts")), lit(86400L)) / 3600L)
           .cast("int"))
-    Writers.overwritePartitions(out, s"$outRoot/snapshots",
-      Seq("log_dt", "chain_name", "hr"))
-    out.sparkSession.read.schema(out.schema)
-      .parquet(s"$outRoot/snapshots")
+    val table = Seq("snapshots" -> out)
+    Writers.publish(outRoot, Seq("log_dt", "chain_name", "hr"), None, table)
+    Writers.readBack(outRoot, table)("snapshots")
   }
 
   /** The external balances-feed transform (ref substrateetl.js:544
@@ -258,17 +257,9 @@ object Snapshot {
     * partition overwrite — re-running a snapshot replaces exactly its
     * own partition and leaves every other block's snapshot untouched
     * (the reference's per-(chain, block) file overwrite, expressed as
-    * partition semantics). */
-  def writeSnapshot(state: DataFrame, outDir: String): Unit = {
-    val spark = state.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try state.write.mode("overwrite").partitionBy("snapshot_at")
-      .parquet(outDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * partition semantics). The mode is a per-write option, so the
+    * session conf and any overwrite running beside this one are
+    * untouched. */
+  def writeSnapshot(state: DataFrame, outDir: String): Unit =
+    Writers.overwritePartitions(state, outDir, Seq("snapshot_at"))
 }

@@ -323,7 +323,7 @@ object Stakings {
       logDT: String, outRoot: String): DataFrame = {
     val out = stakingsAtEras(updates, eraEnds)
       .withColumn("log_dt", lit(logDT))
-    Writers.overwritePartitions(out, s"$outRoot/stakings", Seq("log_dt"))
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("stakings" -> out))
     out
   }
 }

@@ -6,11 +6,24 @@ import org.apache.spark.sql.functions._
 
 /** Sink-side operators — SURVEY.md §2.1 (S7-S9):
   *
-  *  - S7: idempotent date-partition overwrite — the Spark twin of the
-  *    reference's `bq load … '$YYYYMMDD' --replace`
-  *    (ref substrateetl.js:5164-5176): dynamic partition overwrite only
-  *    replaces the partitions present in this batch, so daily re-runs
-  *    and backfills are replay-safe.
+  *  - S7/S8: ONE publish path, [[Writers.publish]] — the Spark twin of
+  *    the reference's `bq load … '$YYYYMMDD' --replace`
+  *    (ref substrateetl.js:5164-5176) and of its plain `--replace` for
+  *    system and dimension tables (:157-159, :2773). Table `name`
+  *    lands at `$outRoot/$name`. With partition columns, a dynamic
+  *    overwrite replaces only the partitions present in the frame, so
+  *    daily re-runs and backfills are replay-safe; with none, the
+  *    write falls back to a static overwrite and replaces the whole
+  *    table. A micro-batch publish is its day publish plus a batch id:
+  *    a `batch_id` column, appended to the partitions — (log_dt,
+  *    batch_id) for the day dumps — so a replayed `foreachBatch`
+  *    micro-batch (at-least-once) replaces its own partition instead
+  *    of appending duplicates; readers drop batch_id or read the
+  *    directory whole. Every etl table sink goes through it, bar
+  *    `Snapshot.writeSnapshot`, whose caller names the directory and
+  *    which calls the write under it, [[Writers.overwritePartitions]].
+  *    Only file exports (single-file CSV hand-offs) and [[Layout]]'s
+  *    bucketed and sorted rewrites write on their own.
   *  - S9: merge-style upsert (ref polkaholicDB.js `on duplicate key
   *    update`) expressed as a key-resolved union — the plain-parquet
   *    stand-in for Delta `MERGE INTO`.
@@ -75,10 +88,40 @@ object Writers {
       } finally pool.shutdown()
     }
 
+  /** The one table publish (S7/S8, the rules in the header): each
+    * `(name, df)` of `tables` lands as parquet at `$outRoot/$name`,
+    * overwriting the partitions of `partitionCols` it holds (the whole
+    * table when there are none); `batchId` makes it a micro-batch
+    * publish. Several tables are written [[concurrently]]. */
+  def publish(outRoot: String, partitionCols: Seq[String],
+      batchId: Option[Long], tables: Iterable[(String, DataFrame)]): Unit = {
+    val cols = partitionCols ++ batchId.map(_ => "batch_id")
+    eachTable(tables) { (name, df) =>
+      val out = batchId.fold(df)(id => df.withColumn("batch_id", lit(id)))
+      overwritePartitions(out, s"$outRoot/$name", cols)
+    }: Unit
+  }
+
+  /** Schema-supplied read-backs of tables [[publish]] wrote, so a table
+    * with no rows stays readable. Each lists its table's directory; the
+    * listings run concurrently, like the writes. */
+  def readBack(outRoot: String,
+      tables: Iterable[(String, DataFrame)]): Map[String, DataFrame] =
+    eachTable(tables) { (name, df) =>
+      name -> df.sparkSession.read.schema(df.schema)
+        .parquet(s"$outRoot/$name")
+    }.toMap
+
+  private def eachTable[B](tables: Iterable[(String, DataFrame)])(
+      f: (String, DataFrame) => B): Seq[B] =
+    tables.headOption.fold(Seq.empty[B])(first =>
+      concurrently(first._2.sparkSession, tables.toSeq)(f.tupled))
+
   /** S7 — write `df` partitioned by `partitionCols`, replacing only the
-    * partitions contained in the batch. `format` covers the S8
-    * object-store sink matrix: parquet (default), orc, json (NDJSON —
-    * the reference's `bq load` landing format), csv. */
+    * partitions contained in the batch; with no partition columns
+    * Spark falls back to a static overwrite of the whole path. `format`
+    * covers the S8 object-store sink matrix: parquet (default), orc,
+    * json (NDJSON — the reference's `bq load` landing format), csv. */
   def overwritePartitions(df: DataFrame, path: String,
       partitionCols: Seq[String], format: String = "parquet"): Unit =
     df.write

@@ -129,7 +129,7 @@ object XcmExport {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val out = xcmMessages(ms, XcmMatcher.matchMessages(ms), logDT)
-      Writers.overwritePartitions(out, s"$outRoot/xcm", Seq("log_dt"))
+      Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcm" -> out))
       out
     } finally ms.unpersist(): Unit
   }
@@ -199,8 +199,8 @@ object XcmExport {
     try {
       val matched = XcmMatcher.matchTransfers(tr, candidates)
       val out = xcmTransfers(tr, matched, logDT, usd)
-      Writers.overwritePartitions(out, s"$outRoot/xcmtransfers",
-        Seq("log_dt"))
+      Writers.publish(outRoot, Seq("log_dt"), None,
+        Seq("xcmtransfers" -> out))
       out
     } finally tr.unpersist(): Unit
   }

@@ -25,6 +25,47 @@ class EtlSpec extends AnyFunSuite {
     val out = spark.read.parquet(dir).select("log_dt", "id")
       .collect().map(r => (r.get(0).toString, r.getLong(1))).toSet
     assert(out == Set(("2024-01-01", 1L), ("2024-01-02", 3L)))
+
+    // the same sink through Writers.publish: with no partition columns
+    // Spark falls back to a STATIC overwrite, so a whole-table publish
+    // over a directory holding a stale layout leaves only the new rows
+    val root = java.nio.file.Files.createTempDirectory("graft_pub").toString
+    Writers.overwritePartitions(day1, s"$root/dim", Seq("log_dt"))
+    Writers.publish(root, Nil, None,
+      Seq("dim" -> Seq((9L, "z")).toDF("id", "v")))
+    assert(new java.io.File(s"$root/dim").list()
+      .forall(!_.startsWith("log_dt=")),
+      "a whole-table publish left stale partition directories")
+    assert(spark.read.parquet(s"$root/dim").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((9L, "z")))
+
+    // micro-batch rule: a replayed batch id replaces only its own
+    // (log_dt, batch_id) partition — the other batch and the other day
+    // survive
+    def batch(id: Long, rows: (String, Long, String)*): Unit =
+      Writers.publish(root, Seq("log_dt"), Some(id),
+        Seq("t" -> rows.toDF("log_dt", "id", "v")))
+    batch(0L, ("2024-01-01", 1L, "a"), ("2024-01-02", 2L, "b"))
+    batch(1L, ("2024-01-01", 3L, "c"))
+    batch(1L, ("2024-01-01", 4L, "d"))
+    val batches = spark.read.parquet(s"$root/t")
+      .select("log_dt", "batch_id", "id").collect()
+      .map(r => (r.get(0).toString, r.get(1).toString.toLong, r.getLong(2)))
+      .toSet
+    assert(batches == Set(("2024-01-01", 0L, 1L), ("2024-01-02", 0L, 2L),
+      ("2024-01-01", 1L, 4L)))
+
+    // writeSnapshot sets its overwrite mode per write: the session conf
+    // is left exactly as found (a session-wide set-and-restore would
+    // leak into overwrites running beside it, and leaves the key set)
+    val fresh = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = fresh.conf.getAll.get(key)
+    graft.etl.Snapshot.writeSnapshot(
+      fresh.range(2).toDF("account").withColumn("snapshot_at",
+        org.apache.spark.sql.functions.lit(7L)), s"$root/snap")
+    assert(fresh.conf.getAll.get(key) == before)
+    assert(fresh.read.parquet(s"$root/snap").count() == 2L)
   }
 
   test("snapshot-at-block: as-of argmax + idempotent partition rewrite") {

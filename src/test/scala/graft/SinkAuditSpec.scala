@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Sink audit, in PlanAudit's allow-list style: every etl table lands
+  * through `Writers.publish`, so no `graft/etl` source except the sink
+  * itself (Writers) and the layout policy (Layout's bucketed and sorted
+  * rewrites) may call `.write` — bar the two single-file CSV hand-offs,
+  * which are file exports, not tables. A new inline write fails here,
+  * naming its file, line and enclosing `def`. */
+class SinkAuditSpec extends AnyFunSuite {
+  private val etlDir = new java.io.File("src/main/scala/graft/etl")
+  private val SinkFiles = Set("Writers.scala", "Layout.scala")
+  private val FileExports = Set(
+    ("XcmExport.scala", "dumpDuneXcmTransfers"),
+    ("Snapshot.scala", "transformBalancesFeed"))
+
+  /** (file, line, enclosing def) of each `.write` call outside comments. */
+  private def writeSites(f: java.io.File): Seq[(String, Int, String)] = {
+    val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    // blank comments out character for character, so offsets and line
+    // numbers stay those of the source
+    val code = """(?s)/\*.*?\*/|//[^\n]*""".r.replaceAllIn(src, m =>
+      scala.util.matching.Regex.quoteReplacement(
+        m.matched.map(c => if (c == '\n') c else ' ')))
+    val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(code)
+      .map(m => (m.start, m.group(1))).toSeq
+    """\.write\b""".r.findAllMatchIn(code).map { m =>
+      (f.getName, code.take(m.start).count(_ == '\n') + 1,
+        defs.takeWhile(_._1 < m.start).lastOption.fold("")(_._2))
+    }.toSeq
+  }
+
+  test("only Writers and Layout write in graft/etl, bar the CSV hand-offs") {
+    val files = Option(etlDir.listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    assert(files.size > 10, s"no etl sources under ${etlDir.getAbsolutePath}")
+    val sites = files.filterNot(f => SinkFiles(f.getName))
+      .flatMap(writeSites)
+    val stray = sites.filterNot { case (f, _, d) => FileExports((f, d)) }
+    assert(stray.isEmpty, stray.map { case (f, l, d) => s"$f:$l in $d" }
+      .mkString("writes that bypass Writers.publish: ", ", ", ""))
+    // an exemption whose function no longer writes would let a later
+    // write under that name through unseen
+    assert(FileExports.forall(e => sites.exists(s => (s._1, s._3) == e)),
+      s"stale exemption: ${FileExports -- sites.map(s => (s._1, s._3))}")
+  }
+}
