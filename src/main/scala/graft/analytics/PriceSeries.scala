@@ -1,17 +1,26 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Price/OHLCV time series + as-of USD valuation — SURVEY M5 (A12, J16,
   * W4, Q6/Q7) on the domain `assetpricelog` schema (FIXTURES.md §11).
   *
   * Scale notes: resampling is a groupBy on (asset, chain_id, bucket);
-  * the as-of join is the union+last(ignoreNulls) window form — one
+  * [[decorateUsd]] is the union+last(ignoreNulls) window form — one
   * shuffle on the asset key, state bounded by the series length, no
   * range-join explosion. Both shapes hold at 10⁹-row price logs because
-  * the partition key carries the asset.
+  * the partition key carries the asset. The dump's as-of decoration
+  * ([[withAsOfIntervals]]) never moves the facts: each row probes a
+  * broadcast [[AsOfIndex]] in O(log points of its series).
   */
 object PriceSeries {
 
@@ -106,48 +115,120 @@ object PriceSeries {
     deduped.withColumn("px_until", lead(col("index_ts"), 1).over(w))
   }
 
+
   /** As-of USD price decoration of a FULL-WIDTH fact frame — the dump
     * wiring of J16 (ref substrateetl.js:6342-6372 exported-table
     * decoration via assetManager.js:1392 computePriceUSD): appends
     * `price_usd` (the last price at-or-before `tsCol` for the row's
     * (asset, chain_id)) to every row, preserving all columns.
     *
-    * Unlike [[decorateUsd]]'s union+window (which shuffles the facts on
-    * the asset key — a skew point when one asset dominates a day), this
-    * is the [[graft.decode.TraceDecode.withSpecVersion]] shape: the
-    * price log converts to validity intervals dim-side and BROADCASTS,
-    * so the (enormous) fact side flows through a broadcast hash join on
-    * (asset, chain_id) with the interval predicate as residual — no
-    * fact shuffle, no skew, codegen throughout. Intervals partition the
-    * time line, so each fact matches at most once; facts before the
-    * first point (or with an unpriced asset) keep a null price_usd.
-    * Probe cost is O(points per asset) per row — pass the day's (or
-    * window's) slice of the log, which is what the daily dump has. */
+    * Builds a one-shot [[AsOfIndex]] from `priceLog` and probes it
+    * ([[withAsOfIntervals]]): the facts are never shuffled or joined,
+    * and each row costs one hash lookup plus O(log points) of its
+    * series. Callers that price several tables off one log hold a
+    * [[graft.etl.Dump.UsdDims]], which builds the index once. */
   def withAsOfPrice(df: DataFrame, priceLog: DataFrame,
       tsCol: String = "block_time"): DataFrame =
-    withAsOfIntervals(df, asOfIntervals(priceLog), tsCol)
+    withAsOfIntervals(df, asOfIndex(asOfIntervals(priceLog)), tsCol)
 
-  /** [[withAsOfPrice]] over an ALREADY-BUILT intervals dim (the
-    * [[asOfIntervals]] output shape) — the multi-table dump path
-    * (round 19): a day dump decorates several tables off one price
-    * log, and deriving the intervals inside each write job re-ran the
-    * dedup+window subtree once per table; callers that hold a
-    * [[graft.etl.Dump.UsdDims]] pass its one materialized dim
-    * instead. */
-  def withAsOfIntervals(df: DataFrame, intervals: DataFrame,
+  /** The probe index of an [[asOfIntervals]] dim: the dim is collected
+    * to the driver once, grouped per (asset, chain_id) into sorted
+    * point times and their prices (null prices kept), and broadcast
+    * once. Rows with a null asset, chain_id or index_ts are left out:
+    * no fact can match them. `index_ts` must be a timestamp (LTZ or
+    * NTZ) or a bigint; `chain_id` is read as a bigint and `price_usd`
+    * as a double. */
+  def asOfIndex(intervals: DataFrame): AsOfIndex = {
+    val tsType = intervals.schema("index_ts").dataType
+    require(tsType == TimestampType || tsType == TimestampNTZType ||
+      tsType == LongType, s"index_ts must be a timestamp, got ${tsType.sql}")
+    val toMicros = CatalystTypeConverters.createToCatalystConverter(tsType)
+    val points = intervals
+      .select(col("asset").cast("string"), col("chain_id").cast("long"),
+        col("index_ts"), col("price_usd").cast("double"))
+      .where(col("asset").isNotNull && col("chain_id").isNotNull &&
+        col("index_ts").isNotNull)
+      .collect()
+    val series = new java.util.HashMap[UTF8String, mutable.LongMap[AsOfSeries]]()
+    for (((asset, chain), pts) <- points.groupBy(r => (r.getString(0), r.getLong(1)))) {
+      val sorted = pts.map(r => (toMicros(r.get(2)).asInstanceOf[Long],
+        if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3))))
+        .sortBy(_._1)
+      series.computeIfAbsent(UTF8String.fromString(asset),
+          _ => mutable.LongMap.empty[AsOfSeries])
+        .update(chain, AsOfSeries(sorted.map(_._1), sorted.map(_._2)))
+    }
+    new AsOfIndex(intervals.sparkSession.sparkContext.broadcast(series),
+      tsType, points.length)
+  }
+
+  /** Appends `price_usd` to every row of `df`: the price of the last
+    * point at or before `tsCol` in the row's (asset, chain_id) series
+    * of `index`. It is null when the series does not exist, when the
+    * time is before the series' first point, when that point's price is
+    * null, or when the row's asset, chain_id or time is null — the
+    * half-open interval semantics of the [[asOfIntervals]] dim the index
+    * was built from, duplicates already resolved there.
+    *
+    * Row-local: one `StaticInvoke` of [[AsOfKernels.priceAt]] inside
+    * whole-stage codegen, a hash lookup plus a binary search, O(log
+    * points) per row. No join, no shuffle, no per-plan broadcast: the
+    * index reached the executors once, when it was built. `tsCol` is
+    * cast to the index's `index_ts` type (the session runs in UTC, so
+    * LTZ and NTZ times compare on the same micros). */
+  def withAsOfIntervals(df: DataFrame, index: AsOfIndex,
       tsCol: String = "block_time"): DataFrame = {
     require(!df.columns.contains("price_usd"),
       "frame already carries price_usd — drop or rename it first")
-    val iv = intervals.select(
-      col("asset").as("_px_asset"), col("chain_id").as("_px_chain"),
-      col("index_ts").as("_px_from"), col("px_until").as("_px_until"),
-      col("price_usd"))
-    df.join(broadcast(iv),
-        col("asset") === col("_px_asset") &&
-          col("chain_id") === col("_px_chain") &&
-          col(tsCol) >= col("_px_from") &&
-          (col("_px_until").isNull || col(tsCol) < col("_px_until")),
-        "left")
-      .drop("_px_asset", "_px_chain", "_px_from", "_px_until")
+    df.withColumn("price_usd", AsOfKernels.priceAt(index,
+      col("asset").cast("string"), col("chain_id").cast("long"),
+      col(tsCol).cast(index.tsType)))
   }
+}
+
+/** One (asset, chain_id) series of an [[AsOfIndex]]: point times
+  * ascending and unique, `price(i)` the price from `ts(i)` on. */
+final case class AsOfSeries(ts: Array[Long], price: Array[java.lang.Double])
+
+/** A built as-of price index ([[PriceSeries.asOfIndex]]): the broadcast
+  * series per asset and chain, plus the `index_ts` type probes are cast
+  * to. Tasks receive this handle with the plan and read the broadcast
+  * value once per task. */
+final class AsOfIndex(
+    series: Broadcast[java.util.HashMap[UTF8String, mutable.LongMap[AsOfSeries]]],
+    val tsType: DataType, points: Int) extends Serializable {
+  @transient private lazy val local = series.value
+
+  def priceAt(asset: UTF8String, chain: Long, ts: Long): java.lang.Double = {
+    val byChain = local.get(asset)
+    if (byChain == null) return null
+    val s = byChain.getOrNull(chain)
+    if (s == null) return null
+    val i = java.util.Arrays.binarySearch(s.ts, ts)
+    val at = if (i >= 0) i else -i - 2 // the last point <= ts
+    if (at < 0) null else s.price(at)
+  }
+
+  override def toString: String =
+    s"AsOfIndex(broadcast ${series.id}, $points points)"
+}
+
+/** The as-of probe, called from generated code through `StaticInvoke`
+  * (like [[graft.etl.RewardKernels]]); null inputs give null without a
+  * call. */
+object AsOfKernels {
+
+  def priceAt(index: AsOfIndex, asset: Column, chain: Column,
+      ts: Column): Column =
+    GraftBridge.column(StaticInvoke(classOf[AsOfKernels.type], DoubleType,
+      "priceAt", Seq(Literal(index, ObjectType(classOf[AsOfIndex])),
+        GraftBridge.expression(asset), GraftBridge.expression(chain),
+        GraftBridge.expression(ts)),
+      inputTypes = Seq(ObjectType(classOf[AsOfIndex]), StringType,
+        LongType, index.tsType),
+      returnNullable = true))
+
+  def priceAt(index: AsOfIndex, asset: UTF8String, chain: Long,
+      ts: Long): java.lang.Double =
+    index.priceAt(asset, chain, ts)
 }

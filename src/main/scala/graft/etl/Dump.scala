@@ -28,40 +28,56 @@ object Dump {
     * computePriceUSD at block time):
     *
     *  - `priceLog` — the (asset, chain_id, index_ts, price_usd) series
-    *    slice covering the day (FIXTURES.md §11 shape); it broadcasts
-    *    as validity intervals, so pass the relevant slice, not the
-    *    full history;
+    *    slice covering the day (FIXTURES.md §11 shape); it is collected
+    *    to the driver and broadcast as an as-of index, so pass the
+    *    relevant slice, not the full history;
     *  - `chains` — the chain-registry slice
     *    (chain_id, native_asset, decimals) resolving each chain's fee/
     *    reward token to its price-log asset key and base-unit scale
     *    (ref getChainSymbol + getChainDecimal, indexer.js
     *    decorateFeedReward).
     *
-    * Both are bounded dimensions; the decoration never shuffles the
-    * fact side (see [[graft.analytics.PriceSeries.withAsOfPrice]]). */
+    * Both are bounded dimensions; the decoration never shuffles or
+    * joins the fact side against the prices (see
+    * [[graft.analytics.PriceSeries.withAsOfIntervals]]). */
   final case class UsdDims(priceLog: DataFrame, chains: DataFrame) {
-    /** The as-of validity-interval dim, built ONCE per dims instance
-      * and shared by every table write of the dump (round 19): the
-      * intervals are a bounded artifact (points per series), and the
-      * eager localCheckpoint stops each concurrent write job from
-      * re-running the log's dedup+window subtree. Lazy so a dump
-      * invoked without USD decoration never pays for it. */
+    /** The as-of validity-interval dim ([[graft.analytics.PriceSeries
+      * .asOfIntervals]]: duplicate points resolved, one row per
+      * point), built once per dims instance; the eager
+      * localCheckpoint runs the log's dedup+window subtree once. Lazy
+      * so a dump invoked without USD decoration never pays for it. */
     lazy val intervals: DataFrame =
       graft.analytics.PriceSeries.asOfIntervals(priceLog)
         .localCheckpoint(true)
+
+    /** The probe index of [[intervals]], built once per dims instance
+      * on the driver, at the first priced projection, and broadcast
+      * once: every priced table of every dump that shares these dims
+      * probes it row-locally, with no per-table job. */
+    lazy val index: graft.analytics.AsOfIndex =
+      graft.analytics.PriceSeries.asOfIndex(intervals)
   }
+
+  /** Price `df` in its chain's native token: look up the chain's
+    * `asset` and base-unit `decimals` in the registry (broadcast),
+    * append the as-of `price_usd` at `block_time`, apply the table's
+    * `decorate`, then drop `asset` and `decimals`. The shared step of
+    * the extrinsics, calls, rewards and relay crowdloan projections. */
+  private def withNativeUsd(df: DataFrame, usd: UsdDims)(
+      decorate: DataFrame => DataFrame): DataFrame =
+    decorate(graft.analytics.PriceSeries.withAsOfIntervals(
+        df.join(broadcast(usd.chains.select(col("chain_id"),
+            col("native_asset").as("asset"), col("decimals"))),
+          Seq("chain_id"), "left"),
+        usd.index))
+      .drop("asset", "decimals")
 
   /** Append `fee_usd` = fee × the chain's native-token as-of price —
     * the shared decoration of the extrinsics and calls projections. */
   private def withFeeUsd(df: DataFrame, usd: UsdDims): DataFrame =
-    graft.analytics.PriceSeries.withAsOfIntervals(
-        df.join(broadcast(
-            usd.chains.select(col("chain_id"),
-              col("native_asset").as("asset"))),
-          Seq("chain_id"), "left"),
-        usd.intervals)
-      .withColumn("fee_usd", col("fee") * col("price_usd"))
-      .drop("asset", "price_usd")
+    withNativeUsd(df, usd)(
+      _.withColumn("fee_usd", col("fee") * col("price_usd"))
+        .drop("price_usd"))
 
   /** Filter to the UTC day and flag rows like the reference's guards
     * (ref substrateetl.js:6271-6288: fork/date-mismatch checks —
@@ -185,15 +201,15 @@ object Dump {
         col("t.decimals"),
         expr("to_base_unit(t.raw_amount_hex, t.decimals)").as("amount"))
     // USD decoration (ref substrateetl.js:6342-6371: transfers export
-    // carries price_usd/amount_usd) — as-of against the broadcast
-    // price-interval dim; unpriced assets keep nulls, like the
+    // carries price_usd/amount_usd) — as-of probe of the broadcast
+    // price index; unpriced assets keep nulls, like the
     // reference's priceUSD-miss path. The columns EXIST either way:
     // a dims-less dump emits them as nulls so the table schema never
     // varies across partitions (a mixed-schema parquet table makes
     // footer-sampled reads nondeterministic about the USD columns).
     (usd match {
       case Some(u) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(base, u.intervals)
+        graft.analytics.PriceSeries.withAsOfIntervals(base, u.index)
           .withColumn("amount_usd", col("amount") * col("price_usd"))
       case None => base
         .withColumn("price_usd", lit(null).cast("double"))
@@ -340,23 +356,17 @@ object Dump {
     // base-unit scale through the registry dim; null-emitted without
     // dims so the schema stays partition-invariant
     val decorated = usd match {
-      case Some(u) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(
-            base.join(broadcast(u.chains.select(col("chain_id"),
-                col("native_asset").as("asset"), col("decimals"))),
-              Seq("chain_id"), "left"),
-            u.intervals)
-          .withColumn("amount",
+      case Some(u) => withNativeUsd(base, u)(
+        _.withColumn("amount",
             col("amount_raw").cast("double") /
               pow(lit(10.0), col("decimals")))
-          .withColumn("amount_usd", col("amount") * col("price_usd"))
-          .drop("asset", "decimals")
+          .withColumn("amount_usd", col("amount") * col("price_usd")))
       case None => base
         .withColumn("amount", lit(null).cast("double"))
         .withColumn("price_usd", lit(null).cast("double"))
         .withColumn("amount_usd", lit(null).cast("double"))
     }
-    // ONE column order for both branches (withAsOfPrice appends
+    // ONE column order for both branches (withAsOfIntervals appends
     // price_usd earlier than the None branch does): a positional
     // parquet reader over mixed partitions must never see two DOUBLE
     // columns swapped — the partition-invariant-schema contract is
@@ -467,7 +477,7 @@ object Dump {
           .as("para_id"),
         get_json_object(col("ev.data"), "$.amount")
           .cast("decimal(38,0)").as("amount_raw"),
-        // stays `block_time` through the as-of price join (its default
+        // stays `block_time` through the as-of price probe (its default
         // fact-side timestamp); the final select renames it `ts`
         col("block_time"))
     val named = projects match {
@@ -478,20 +488,15 @@ object Dump {
         base.withColumn("project_name", lit(null).cast("string"))
     }
     val decorated = usd match {
-      case Some(u) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(
-            named.join(broadcast(u.chains.select(col("chain_id"),
-                col("native_asset").as("asset"), col("decimals"))),
-              Seq("chain_id"), "left"),
-            u.intervals)
-          .withColumn("contribution",
+      case Some(u) => withNativeUsd(named, u)(
+        _.withColumn("contribution",
             col("amount_raw").cast("double") /
               pow(lit(10.0), col("decimals")))
           .withColumn("contribution_usd",
             col("contribution") * col("price_usd"))
           .withColumn("contribution_symbol",
             substring_index(col("asset"), "~", 1))
-          .drop("asset", "decimals", "price_usd")
+          .drop("price_usd"))
       case None => named
         .withColumn("contribution", lit(null).cast("double"))
         .withColumn("contribution_usd", lit(null).cast("double"))
@@ -841,8 +846,8 @@ object Dump {
       raw: DataFrame): Map[String, Long] = {
     // the USD dims ride the stage too (round 11): a 5-min price grid
     // for the native token + the one-chain registry slice, so the
-    // decoration path (interval build + broadcast as-of join on three
-    // projections) is part of the measured ETL workload
+    // decoration path (index build + as-of probe on five projections)
+    // is part of the measured ETL workload
     val priceLog = s.range(288).select(
       lit("DOT~0").as("asset"), lit(0).as("chain_id"),
       (lit(1709251200L) + col("id") * 300).cast("timestamp")

@@ -229,7 +229,7 @@ object EvmDump {
       case (Some(u), Some(toks)) =>
         graft.analytics.PriceSeries.withAsOfIntervals(
             unioned.withColumn("asset", col("token_address")),
-            u.intervals, tsCol = "block_timestamp")
+            u.index, tsCol = "block_timestamp")
           .join(broadcast(toks.select(col("token_address"),
             col("decimals"))), Seq("token_address"), "left")
           .withColumn("value_usd",

@@ -48,7 +48,7 @@ object XcmExport {
         graft.analytics.PriceSeries.withAsOfIntervals(
           joined.withColumn("asset",
             expr("asset_chain(symbol, chain_id)")),
-          u.intervals, tsCol = "source_ts").drop("asset")
+          u.index, tsCol = "source_ts").drop("asset")
       case None =>
         joined.withColumn("price_usd", lit(null).cast("double"))
     }

@@ -318,8 +318,8 @@ object FlattenOps {
   // price log from the view rows (duplicate bucket points on purpose:
   // the interval build dedupes to max, which the oracle replays). The
   // REAL pipeline runs end to end: Dump.transfers → asset_chain +
-  // to_base_unit UDFs → PriceSeries.withAsOfPrice broadcast-interval
-  // as-of → amount_usd; the rollup checks priced AND unpriced
+  // to_base_unit UDFs → PriceSeries.withAsOfIntervals as-of index
+  // probe → amount_usd; the rollup checks priced AND unpriced
   // (pre-first-point) rows per asset. Oracle = DuckDB's own ASOF JOIN.
   private def p9(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)

@@ -1011,7 +1011,7 @@ object JoinOps {
           .otherwise(0).as("reaped"))
     // USD dims: one 5-min price series for the (single) native asset
     // key the export derives via asset_chain(symbol, chain_id) — the
-    // as-of valuation rides the same broadcast-interval shape as the
+    // as-of valuation rides the same as-of index probe as the
     // transfers dump; duplicate bucket points dedupe inside
     // asOfIntervals (max branch), which the oracle replays
     val priceLog = Tables.events(s, d)

@@ -540,8 +540,8 @@ class DumpSpec extends AnyFunSuite {
       "or sort-merge join, with and without USD dims") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
     import org.apache.spark.sql.execution.window.WindowExec
     // every operator of the FINAL (post-AQE) plan, query stages and
     // subqueries included
@@ -551,6 +551,8 @@ class DumpSpec extends AnyFunSuite {
       case other => other +: (other.children ++ other.subqueries)
           .flatMap(operators)
     }
+    // the columns only the price-interval dim carries
+    val priceCols = Set("index_ts", "px_until", "_px_from", "_px_until")
     val dims = Dump.UsdDims(
       Seq(("DOT~0", 0, ts("2024-03-01 00:00:00"), 7.0))
         .toDF("asset", "chain_id", "index_ts", "price_usd"),
@@ -558,17 +560,39 @@ class DumpSpec extends AnyFunSuite {
     val day = raw.unionByName(rewardRaw)
     for (usd <- Seq(None, Some(dims));
          (name, df) <- Seq(
+           "extrinsics" -> Dump.extrinsics(day, "2024-03-01", usd),
            "transfers" -> Dump.transfers(day, "2024-03-01", usd),
+           "calls" -> Dump.calls(day, "2024-03-01", usd),
            "rewards" -> Dump.rewards(day, "2024-03-01", usd),
            "crowdloan" -> Dump.crowdloan(day, "2024-03-01"))) {
       assert(df.collect().nonEmpty, s"$name: empty, the plan is vacuous")
-      val bad = operators(df.queryExecution.executedPlan).collect {
+      val ops = operators(df.queryExecution.executedPlan)
+      val bad = ops.collect {
         case s: ShuffleExchangeLike => s.nodeName
         case w: WindowExec => w.nodeName
         case j: SortMergeJoinExec => j.nodeName
       }
       assert(bad.isEmpty, s"$name (usd=${usd.isDefined}): $bad in\n" +
         df.queryExecution.executedPlan)
+      // the as-of price is a row-local probe: no operator broadcasts
+      // the price intervals or joins against them; the chain-registry
+      // broadcast (native asset and decimals) stays
+      val priced = ops.collect {
+        case b: BroadcastExchangeLike
+            if b.output.exists(a => priceCols(a.name) || a.name == "price_usd") =>
+          b.nodeName
+        case j: BaseJoinExec
+            if (j.left.output ++ j.right.output).exists(a => priceCols(a.name)) =>
+          j.nodeName
+      }
+      assert(priced.isEmpty, s"$name (usd=${usd.isDefined}): $priced in\n" +
+        df.queryExecution.executedPlan)
+      if (usd.isDefined && Set("extrinsics", "calls", "rewards")(name))
+        assert(ops.exists {
+          case b: BroadcastExchangeLike => b.output.exists(_.name == "chain_id")
+          case _ => false
+        }, s"$name: no chain-registry broadcast in\n" +
+          df.queryExecution.executedPlan)
     }
   }
 }
