@@ -80,41 +80,24 @@ object PriceSeries {
         (col("amount") * col("asof_px")).as("amount_usd"))
   }
 
-  /** The price log as half-open validity intervals — one row per
-    * (asset, chain_id, index_ts) with `px_until` = the next point's
-    * timestamp (null for the latest). Duplicate points at one
-    * timestamp resolve by the reference's MOST-LIQUID convention when
-    * the log carries the `liquid` column ([[mostLiquid]], ref
-    * query.js:2080-2086 — a thin-router outlier must not win), and by
-    * max price otherwise (a deterministic tiebreak for bare
-    * (asset, chain_id, index_ts, price_usd) slices). Dim-only window:
-    * rows = price points, never facts. */
-  def asOfIntervals(priceLog: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("asset"), col("chain_id"))
-      .orderBy(col("index_ts"))
-    // ONE dim-side exchange (round 19, guide §2.4): hash(asset)
-    // clusters the per-point dedup (keys ⊇ asset) AND the interval
-    // lead window (partition ⊇ asset), so both ride this exchange
-    // instead of shuffling the log twice — every usd-decorated dump
-    // re-plans this subtree per write job, so the saving multiplies
-    // across the dump family. Deliberately asset ALONE: callers pass
-    // literal chain_ids that constant-fold, and a folded key in the
-    // repartition breaks the subset-satisfaction match that elides
-    // the downstream exchanges (measured: (asset, chain_id) ADDED an
-    // exchange on p9). Co-locating all chains of an asset is fine at
-    // dim scale — the log is bounded by series count × points.
-    val byKey = priceLog.repartition(col("asset"))
-    val deduped =
-      if (priceLog.columns.contains("liquid"))
-        mostLiquid(byKey)
-          .select(col("asset"), col("chain_id"), col("index_ts"),
-            col("price_usd"))
-      else byKey
-        .groupBy(col("asset"), col("chain_id"), col("index_ts"))
-        .agg(max(col("price_usd")).as("price_usd"))
-    deduped.withColumn("px_until", lead(col("index_ts"), 1).over(w))
-  }
-
+  /** The price log as as-of points — one row per (asset, chain_id,
+    * index_ts), the point's price holding from its `index_ts` until the
+    * series' next point (a half-open validity interval; the latest
+    * point holds on). Duplicate points at one timestamp resolve by the
+    * reference's MOST-LIQUID convention when the log carries the
+    * `liquid` column ([[mostLiquid]], ref query.js:2080-2086 — a
+    * thin-router outlier must not win), and by max price otherwise (a
+    * deterministic tiebreak for bare (asset, chain_id, index_ts,
+    * price_usd) slices). [[asOfIndex]] turns them into the probe
+    * index. */
+  def asOfIntervals(priceLog: DataFrame): DataFrame =
+    if (priceLog.columns.contains("liquid"))
+      mostLiquid(priceLog)
+        .select(col("asset"), col("chain_id"), col("index_ts"),
+          col("price_usd"))
+    else priceLog
+      .groupBy(col("asset"), col("chain_id"), col("index_ts"))
+      .agg(max(col("price_usd")).as("price_usd"))
 
   /** As-of USD price decoration of a FULL-WIDTH fact frame — the dump
     * wiring of J16 (ref substrateetl.js:6342-6372 exported-table

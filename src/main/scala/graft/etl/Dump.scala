@@ -41,11 +41,11 @@ object Dump {
     * joins the fact side against the prices (see
     * [[graft.analytics.PriceSeries.withAsOfIntervals]]). */
   final case class UsdDims(priceLog: DataFrame, chains: DataFrame) {
-    /** The as-of validity-interval dim ([[graft.analytics.PriceSeries
+    /** The as-of points of the log ([[graft.analytics.PriceSeries
       * .asOfIntervals]]: duplicate points resolved, one row per
       * point), built once per dims instance; the eager
-      * localCheckpoint runs the log's dedup+window subtree once. Lazy
-      * so a dump invoked without USD decoration never pays for it. */
+      * localCheckpoint runs the log's dedup once. Lazy so a dump
+      * invoked without USD decoration never pays for it. */
     lazy val intervals: DataFrame =
       graft.analytics.PriceSeries.asOfIntervals(priceLog)
         .localCheckpoint(true)

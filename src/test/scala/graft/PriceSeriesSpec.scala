@@ -73,11 +73,17 @@ class PriceSeriesSpec extends AnyFunSuite {
   // ---- as-of index probe == the broadcast-interval join ----
 
   /** The interval join `withAsOfIntervals` ran before the probe index:
-    * a left broadcast hash join on (asset, chain_id) with the half-open
-    * interval as residual. Kept here only as the reference. */
+    * each point's half-open validity interval (`px_until` = the next
+    * point's time), then a left broadcast hash join on (asset,
+    * chain_id) with the interval as residual. Kept here only as the
+    * reference. */
   private def referenceJoin(df: DataFrame, intervals: DataFrame,
       tsCol: String): DataFrame = {
-    val iv = intervals.select(
+    import org.apache.spark.sql.expressions.Window
+    val iv = intervals.withColumn("px_until", lead(col("index_ts"), 1)
+        .over(Window.partitionBy(col("asset"), col("chain_id"))
+          .orderBy(col("index_ts"))))
+      .select(
       col("asset").as("_px_asset"), col("chain_id").as("_px_chain"),
       col("index_ts").as("_px_from"), col("px_until").as("_px_until"),
       col("price_usd"))
