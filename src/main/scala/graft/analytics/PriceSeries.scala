@@ -132,10 +132,12 @@ object PriceSeries {
       .where(col("asset").isNotNull && col("chain_id").isNotNull &&
         col("index_ts").isNotNull)
       .collect()
-    val series = new java.util.HashMap[UTF8String, mutable.LongMap[AsOfSeries]]()
-    for (((asset, chain), pts) <- points.groupBy(r => (r.getString(0), r.getLong(1)))) {
+    val series = new AsOfIndex.Series()
+    for (((asset, chain), pts) <-
+        points.groupBy(r => (r.getString(0), r.getLong(1)))) {
       val sorted = pts.map(r => (toMicros(r.get(2)).asInstanceOf[Long],
-        if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3))))
+        if (r.isNullAt(3)) null
+        else java.lang.Double.valueOf(r.getDouble(3))))
         .sortBy(_._1)
       series.computeIfAbsent(UTF8String.fromString(asset),
           _ => mutable.LongMap.empty[AsOfSeries])
@@ -177,8 +179,7 @@ final case class AsOfSeries(ts: Array[Long], price: Array[java.lang.Double])
   * series per asset and chain, plus the `index_ts` type probes are cast
   * to. Tasks receive this handle with the plan and read the broadcast
   * value once per task. */
-final class AsOfIndex(
-    series: Broadcast[java.util.HashMap[UTF8String, mutable.LongMap[AsOfSeries]]],
+final class AsOfIndex(series: Broadcast[AsOfIndex.Series],
     val tsType: DataType, points: Int) extends Serializable {
   @transient private lazy val local = series.value
 
@@ -194,6 +195,11 @@ final class AsOfIndex(
 
   override def toString: String =
     s"AsOfIndex(broadcast ${series.id}, $points points)"
+}
+
+object AsOfIndex {
+  /** asset → chain_id → series */
+  type Series = java.util.HashMap[UTF8String, mutable.LongMap[AsOfSeries]]
 }
 
 /** The as-of probe, called from generated code through `StaticInvoke`
