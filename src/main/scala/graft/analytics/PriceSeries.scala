@@ -115,9 +115,8 @@ object PriceSeries {
     withAsOfIntervals(df, asOfIndex(asOfIntervals(priceLog)), tsCol)
 
   /** The probe index of an [[asOfIntervals]] dim: the dim is collected
-    * to the driver once, grouped per (asset, chain_id) into sorted
-    * point times and their prices (null prices kept), and broadcast
-    * once. Rows with a null asset, chain_id or index_ts are left out:
+    * once, grouped per (asset, chain_id) into sorted point times and
+    * their prices (null prices kept), and broadcast once. Rows with a null asset, chain_id or index_ts are left out:
     * no fact can match them. `index_ts` must be a timestamp (LTZ or
     * NTZ) or a bigint; `chain_id` is read as a bigint and `price_usd`
     * as a double. */

@@ -29,8 +29,8 @@ object Dump {
     *
     *  - `priceLog` — the (asset, chain_id, index_ts, price_usd) series
     *    slice covering the day (FIXTURES.md §11 shape); it is collected
-    *    to the driver and broadcast as an as-of index, so pass the
-    *    relevant slice, not the full history;
+    *    once and broadcast as an as-of index, so pass the relevant
+    *    slice, not the full history;
     *  - `chains` — the chain-registry slice
     *    (chain_id, native_asset, decimals) resolving each chain's fee/
     *    reward token to its price-log asset key and base-unit scale
@@ -51,9 +51,9 @@ object Dump {
         .localCheckpoint(true)
 
     /** The probe index of [[intervals]], built once per dims instance
-      * on the driver, at the first priced projection, and broadcast
-      * once: every priced table of every dump that shares these dims
-      * probes it row-locally, with no per-table job. */
+      * at the first priced projection and broadcast once: every priced
+      * table of every dump that shares these dims probes it
+      * row-locally, with no per-table job. */
     lazy val index: graft.analytics.AsOfIndex =
       graft.analytics.PriceSeries.asOfIndex(intervals)
   }
