@@ -14,13 +14,11 @@ import scala.collection.mutable
 /** Price/OHLCV time series + as-of USD valuation — SURVEY M5 (A12, J16,
   * W4, Q6/Q7) on the domain `assetpricelog` schema (FIXTURES.md §11).
   *
-  * Scale notes: resampling is a groupBy on (asset, chain_id, bucket);
-  * [[decorateUsd]] is the union+last(ignoreNulls) window form — one
-  * shuffle on the asset key, state bounded by the series length, no
-  * range-join explosion. Both shapes hold at 10⁹-row price logs because
-  * the partition key carries the asset. The dump's as-of decoration
-  * ([[withAsOfIntervals]]) never moves the facts: each row probes a
-  * broadcast [[AsOfIndex]] in O(log points of its series).
+  * Scale notes: resampling is a groupBy on (asset, chain_id, bucket),
+  * which holds at 10⁹-row price logs because the partition key carries
+  * the asset. The as-of USD decoration ([[withAsOfIntervals]]) never
+  * moves the facts: each row probes a broadcast [[AsOfIndex]] in
+  * O(log points of its series).
   */
 object PriceSeries {
 
@@ -51,35 +49,6 @@ object PriceSeries {
         sum(col("token1_volume")).as("token1_volume"),
         count(lit(1)).as("n_points"))
 
-  /** As-of USD decoration (ref assetManager.js:1392 computePriceUSD —
-    * J16): for each event row (asset, chain_id, ts, amount), attach the
-    * last price at-or-before ts and compute amount_usd. Union+window —
-    * the scalable as-of form. */
-  def decorateUsd(events: DataFrame, priceLog: DataFrame): DataFrame = {
-    val prices = priceLog.select(
-      col("asset"), col("chain_id"), col("index_ts").as("ts"),
-      lit(null).cast("string").as("event_id"),
-      lit(null).cast("double").as("amount"),
-      col("price_usd").as("px"), lit(0).as("is_event"))
-    val evs = events.select(
-      col("asset"), col("chain_id"), col("ts"),
-      col("event_id"), col("amount"),
-      lit(null).cast("double").as("px"), lit(1).as("is_event"))
-    // at equal ts the price sorts first (is_event 0 < 1) → an event picks
-    // up a price stamped at its own timestamp, like the reference's
-    // cache lookup
-    val wSelf = Window.partitionBy(col("asset"), col("chain_id"))
-      .orderBy(col("ts"), col("is_event"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    prices.unionByName(evs)
-      .withColumn("asof_px",
-        last(col("px"), ignoreNulls = true).over(wSelf))
-      .filter(col("is_event") === 1)
-      .select(col("asset"), col("chain_id"), col("ts"), col("event_id"),
-        col("amount"), col("asof_px").as("price_usd"),
-        (col("amount") * col("asof_px")).as("amount_usd"))
-  }
-
   /** The price log as as-of points — one row per (asset, chain_id,
     * index_ts), the point's price holding from its `index_ts` until the
     * series' next point (a half-open validity interval; the latest
@@ -98,21 +67,6 @@ object PriceSeries {
     else priceLog
       .groupBy(col("asset"), col("chain_id"), col("index_ts"))
       .agg(max(col("price_usd")).as("price_usd"))
-
-  /** As-of USD price decoration of a FULL-WIDTH fact frame — the dump
-    * wiring of J16 (ref substrateetl.js:6342-6372 exported-table
-    * decoration via assetManager.js:1392 computePriceUSD): appends
-    * `price_usd` (the last price at-or-before `tsCol` for the row's
-    * (asset, chain_id)) to every row, preserving all columns.
-    *
-    * Builds a one-shot [[AsOfIndex]] from `priceLog` and probes it
-    * ([[withAsOfIntervals]]): the facts are never shuffled or joined,
-    * and each row costs one hash lookup plus O(log points) of its
-    * series. Callers that price several tables off one log hold a
-    * [[graft.etl.Dump.UsdDims]], which builds the index once. */
-  def withAsOfPrice(df: DataFrame, priceLog: DataFrame,
-      tsCol: String = "block_time"): DataFrame =
-    withAsOfIntervals(df, asOfIndex(asOfIntervals(priceLog)), tsCol)
 
   /** The probe index of an [[asOfIntervals]] dim: the dim is collected
     * once, grouped per (asset, chain_id) into sorted point times and

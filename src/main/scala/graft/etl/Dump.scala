@@ -2,8 +2,10 @@ package graft.etl
 
 import graft.functions.CallFlatten
 import graft.operators.{DedupOps, StageMemo}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The core batch ETL entry point — SURVEY §3.2 (`substrate-etl dump`,
   * ref substrateetl.js:6171 dump_substrateetl) as ONE DataFrame job:
@@ -39,16 +41,23 @@ object Dump {
     *
     * Both are bounded dimensions; the decoration never shuffles or
     * joins the fact side against the prices (see
-    * [[graft.analytics.PriceSeries.withAsOfIntervals]]). */
+    * [[graft.analytics.PriceSeries.withAsOfIntervals]]). A dump called
+    * without dims prices against [[UsdDims.empty]], so every USD column
+    * exists either way, null when unpriced. */
   final case class UsdDims(priceLog: DataFrame, chains: DataFrame) {
     /** The as-of points of the log ([[graft.analytics.PriceSeries
       * .asOfIntervals]]: duplicate points resolved, one row per
       * point), built once per dims instance; the eager
-      * localCheckpoint runs the log's dedup once. Lazy so a dump
-      * invoked without USD decoration never pays for it. */
-    lazy val intervals: DataFrame =
-      graft.analytics.PriceSeries.asOfIntervals(priceLog)
-        .localCheckpoint(true)
+      * localCheckpoint runs the log's dedup once. Points that Catalyst
+      * folds to a local relation (the empty log) are already on the
+      * driver and are not checkpointed: that would run a job for no
+      * rows. */
+    lazy val intervals: DataFrame = {
+      val points = graft.analytics.PriceSeries.asOfIntervals(priceLog)
+      if (points.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        points
+      else points.localCheckpoint(true)
+    }
 
     /** The probe index of [[intervals]], built once per dims instance
       * at the first priced projection and broadcast once: every priced
@@ -57,6 +66,24 @@ object Dump {
     lazy val index: graft.analytics.AsOfIndex =
       graft.analytics.PriceSeries.asOfIndex(intervals)
   }
+
+  object UsdDims {
+    /** Dims with no price points and no chains: every USD column prices
+      * to null. Both frames are empty local relations, which Catalyst
+      * folds away (the registry join becomes null columns: no broadcast,
+      * no job). An RDD-backed empty frame would not fold, and AQE would
+      * run a broadcast stage per plan. */
+    private[graft] def empty(spark: SparkSession): UsdDims = UsdDims(
+      emptyFrame(spark,
+        "asset string, chain_id int, index_ts timestamp, price_usd double"),
+      emptyFrame(spark, "chain_id int, native_asset string, decimals int"))
+  }
+
+  /** An empty frame of the `ddl` schema as a local relation (see
+    * [[UsdDims.empty]]). */
+  private[etl] def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL(ddl))
 
   /** Price `df` in its chain's native token: look up the chain's
     * `asset` and base-unit `decimals` in the registry (broadcast),
@@ -112,10 +139,11 @@ object Dump {
     * ref indexer.js:3754 checkExtrinsicStatusAndFee). */
   def extrinsics(raw: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame =
-    extrinsicsOf(dayBlocks(raw, logDT), logDT, usd)
+    extrinsicsOf(dayBlocks(raw, logDT), logDT,
+      usd.getOrElse(UsdDims.empty(raw.sparkSession)))
 
   private def extrinsicsOf(day: DataFrame, logDT: String,
-      usd: Option[UsdDims] = None): DataFrame = {
+      usd: UsdDims): DataFrame = {
     val base = day
       .select(col("chain_id"), col("number"), col("block_time"),
         col("hash").as("block_hash"),
@@ -136,11 +164,8 @@ object Dump {
           .as("signer_ss58"))
     // fee_usd (ref substrateetl.js:6372 computeExtrinsicFeeUSD): the
     // fee is paid in the chain's native token — resolve it through the
-    // chain registry, then as-of-price at block time. Null-emitted
-    // without dims so the table schema stays partition-invariant.
-    usd.fold(base.withColumn("fee_usd", lit(null).cast("double")))(
-        withFeeUsd(base, _))
-      .withColumn("log_dt", lit(logDT))
+    // chain registry, then as-of-price at block time
+    withFeeUsd(base, usd).withColumn("log_dt", lit(logDT))
   }
 
   /** events projection with composite ids (P3,
@@ -173,10 +198,11 @@ object Dump {
     * dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def transfers(raw: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame =
-    transfersOf(dayBlocks(raw, logDT), logDT, usd)
+    transfersOf(dayBlocks(raw, logDT), logDT,
+      usd.getOrElse(UsdDims.empty(raw.sparkSession)))
 
   private def transfersOf(day: DataFrame, logDT: String,
-      usd: Option[UsdDims] = None): DataFrame = {
+      usd: UsdDims): DataFrame = {
     val base = day
       .select(col("chain_id"), col("number"), col("block_time"),
         col("hash").as("block_hash"),
@@ -203,18 +229,10 @@ object Dump {
     // USD decoration (ref substrateetl.js:6342-6371: transfers export
     // carries price_usd/amount_usd) — as-of probe of the broadcast
     // price index; unpriced assets keep nulls, like the
-    // reference's priceUSD-miss path. The columns EXIST either way:
-    // a dims-less dump emits them as nulls so the table schema never
-    // varies across partitions (a mixed-schema parquet table makes
-    // footer-sampled reads nondeterministic about the USD columns).
-    (usd match {
-      case Some(u) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(base, u.index)
-          .withColumn("amount_usd", col("amount") * col("price_usd"))
-      case None => base
-        .withColumn("price_usd", lit(null).cast("double"))
-        .withColumn("amount_usd", lit(null).cast("double"))
-    }).withColumn("log_dt", lit(logDT))
+    // reference's priceUSD-miss path
+    graft.analytics.PriceSeries.withAsOfIntervals(base, usd.index)
+      .withColumn("amount_usd", col("amount") * col("price_usd"))
+      .withColumn("log_dt", lit(logDT))
   }
 
   /** calls projection: recursive flatten with noise suppression, fee on
@@ -222,10 +240,11 @@ object Dump {
     * flatMap). */
   def calls(raw: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame =
-    callsOf(dayBlocks(raw, logDT), logDT, usd)
+    callsOf(dayBlocks(raw, logDT), logDT,
+      usd.getOrElse(UsdDims.empty(raw.sparkSession)))
 
   private def callsOf(day: DataFrame, logDT: String,
-      usd: Option[UsdDims] = None): DataFrame = {
+      usd: UsdDims): DataFrame = {
     val spark = day.sparkSession
     import spark.implicits._
     val src = day
@@ -253,11 +272,8 @@ object Dump {
         "call_id", "call_section", "call_method", "call_args",
         "root", "leaf", "fee", "signed")
     // fee_usd rides the root call only (the flattener keeps fee on the
-    // root — ref calls.json fee_usd; non-root null fee → null fee_usd);
-    // null-emitted without dims so the schema stays partition-invariant
-    usd.fold(flat.withColumn("fee_usd", lit(null).cast("double")))(
-        withFeeUsd(flat, _))
-      .withColumn("log_dt", lit(logDT))
+    // root — ref calls.json fee_usd; non-root null fee → null fee_usd)
+    withFeeUsd(flat, usd).withColumn("log_dt", lit(logDT))
   }
 
   /** specversions dimension: the FIRST block (number, hash, time) at
@@ -322,10 +338,11 @@ object Dump {
     * positive staking payouts, one row per Rewarded event. */
   def rewards(raw: DataFrame, logDT: String,
       usd: Option[UsdDims] = None): DataFrame =
-    rewardsOf(dayBlocks(raw, logDT), logDT, usd)
+    rewardsOf(dayBlocks(raw, logDT), logDT,
+      usd.getOrElse(UsdDims.empty(raw.sparkSession)))
 
   private def rewardsOf(day: DataFrame, logDT: String,
-      usd: Option[UsdDims] = None): DataFrame = {
+      usd: UsdDims): DataFrame = {
     val base =
     // prune BEFORE the explode: most blocks carry no staking payout,
     // and at fleet scale skipping them here means the explode never
@@ -353,25 +370,15 @@ object Dump {
     // USD valuation (ref indexer.js decorateFeedReward: amount =
     // rawAmount / 10^decimals, amountUSD = amount × price) — the
     // reward token is the chain's native token, resolved with its
-    // base-unit scale through the registry dim; null-emitted without
-    // dims so the schema stays partition-invariant
-    val decorated = usd match {
-      case Some(u) => withNativeUsd(base, u)(
+    // base-unit scale through the registry dim
+    withNativeUsd(base, usd)(
         _.withColumn("amount",
             col("amount_raw").cast("double") /
               pow(lit(10.0), col("decimals")))
           .withColumn("amount_usd", col("amount") * col("price_usd")))
-      case None => base
-        .withColumn("amount", lit(null).cast("double"))
-        .withColumn("price_usd", lit(null).cast("double"))
-        .withColumn("amount_usd", lit(null).cast("double"))
-    }
-    // ONE column order for both branches (withAsOfIntervals appends
-    // price_usd earlier than the None branch does): a positional
-    // parquet reader over mixed partitions must never see two DOUBLE
-    // columns swapped — the partition-invariant-schema contract is
-    // order-included
-    decorated.select(base.columns.map(col) ++
+      // the table's column order has amount before price_usd, which
+      // the probe appends first
+      .select(base.columns.map(col) ++
         Seq(col("amount"), col("price_usd"), col("amount_usd")): _*)
       .withColumn("log_dt", lit(logDT))
   }
@@ -433,8 +440,7 @@ object Dump {
     *
     * USD decoration mirrors [[rewards]]: the contribution is in the
     * relay's native token, resolved through the chains registry dim
-    * (broadcast) and as-of-priced at block time; null-emitted without
-    * dims so the table schema stays partition-invariant.
+    * (broadcast) and as-of-priced at block time.
     * `projects` is an optional broadcast dim (para_id, project_name)
     * standing in for the reference's decorated projectName. */
   def relayCrowdloan(raw: DataFrame, logDT: String,
@@ -487,8 +493,7 @@ object Dump {
       case None =>
         base.withColumn("project_name", lit(null).cast("string"))
     }
-    val decorated = usd match {
-      case Some(u) => withNativeUsd(named, u)(
+    withNativeUsd(named, usd.getOrElse(UsdDims.empty(raw.sparkSession)))(
         _.withColumn("contribution",
             col("amount_raw").cast("double") /
               pow(lit(10.0), col("decimals")))
@@ -497,12 +502,7 @@ object Dump {
           .withColumn("contribution_symbol",
             substring_index(col("asset"), "~", 1))
           .drop("price_usd"))
-      case None => named
-        .withColumn("contribution", lit(null).cast("double"))
-        .withColumn("contribution_usd", lit(null).cast("double"))
-        .withColumn("contribution_symbol", lit(null).cast("string"))
-    }
-    decorated.select(
+      .select(
         col("event_id"), col("extrinsic_id"), col("extrinsic_hash"),
         col("extrinsic_section_method"), col("event_section_method"),
         col("contributor_pubkey"), col("contributor"),
@@ -674,7 +674,8 @@ object Dump {
     val day = dayBlocks(raw, logDT)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val tables = projections(day, logDT, usd)
+      val tables = projections(day, logDT,
+        usd.getOrElse(UsdDims.empty(raw.sparkSession)))
       // the eight writes are independent jobs off the ONE persisted day
       // scan — submitted concurrently (guide §2.6) each write's task
       // tail back-fills with the next table's tasks instead of idling
@@ -686,11 +687,12 @@ object Dump {
   }
 
   /** The eight entity projections over an already-day-filtered frame
-    * (six core + the P7 rewards/crowdloan extraction tables). With
-    * `usd`, transfers carry price_usd/amount_usd and extrinsics/calls
-    * carry fee_usd (ref substrateetl.js:6342-6372). */
+    * (six core + the P7 rewards/crowdloan extraction tables), priced
+    * with `usd`: transfers carry price_usd/amount_usd, extrinsics/calls
+    * fee_usd and rewards amount/price_usd/amount_usd (ref
+    * substrateetl.js:6342-6372). */
   private def projections(day: DataFrame, logDT: String,
-      usd: Option[UsdDims] = None): Map[String, DataFrame] = Map(
+      usd: UsdDims): Map[String, DataFrame] = Map(
     "blocks" -> blocksOf(day, logDT),
     "extrinsics" -> extrinsicsOf(day, logDT, usd),
     "events" -> eventsOf(day, logDT),

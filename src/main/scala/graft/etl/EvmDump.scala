@@ -160,11 +160,11 @@ object EvmDump {
     * log (asset = token contract address) and the token-decimals
     * dimension are supplied: value_usd = value ÷ 10^decimals ×
     * as-of price (ref assetManager computePriceUSD on xcContract
-    * assets). Both dimensions broadcast; unpriced tokens keep null.
-    * The columns exist either way so the table schema never varies
-    * across partitions. Block/chain metadata rides THROUGH the log
-    * explode (the extractors' passthrough columns), not a join back
-    * onto the tx frame — no second exchange. */
+    * assets). Both dimensions broadcast; unpriced tokens keep null. A
+    * missing dimension is an empty one ([[Dump.UsdDims.empty]]), so
+    * value_usd exists either way, null. Block/chain metadata rides
+    * THROUGH the log explode (the extractors' passthrough columns),
+    * not a join back onto the tx frame — no second exchange. */
   def evmtransfersOf(txs: DataFrame, receipts: DataFrame, logDT: String,
       usd: Option[Dump.UsdDims] = None,
       tokenDecimals: Option[DataFrame] = None): DataFrame =
@@ -225,47 +225,31 @@ object EvmDump {
           lit("]")).as("token_values"),
         lit("ERC1155").as("transfer_type")) ++ meta: _*)
     val unioned = erc20.unionByName(erc721).unionByName(erc1155)
-    val decorated = (usd, tokenDecimals) match {
-      case (Some(u), Some(toks)) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(
-            unioned.withColumn("asset", col("token_address")),
-            u.index, tsCol = "block_timestamp")
-          .join(broadcast(toks.select(col("token_address"),
-            col("decimals"))), Seq("token_address"), "left")
-          .withColumn("value_usd",
-            when(col("transfer_type") === "ERC20",
-              col("raw_value").cast("double") /
-                pow(lit(10.0), col("decimals")) * col("price_usd")))
-          .drop("asset", "decimals", "price_usd")
-      case _ => unioned
-        .withColumn("value_usd", lit(null).cast("double"))
-    }
-    decorated.select(
-      col("chain_id"), col("token_address"),
-      col("from_address"), col("to_address"),
-      col("value"),
-      col("value_usd"), col("operator"),
-      col("token_ids"), col("token_values"),
-      col("transaction_hash"), col("log_index"),
-      col("block_timestamp"), col("block_number"), col("block_hash"),
-      col("transfer_type"))
+    val spark = combined.sparkSession
+    val toks = tokenDecimals.getOrElse(
+      Dump.emptyFrame(spark, "token_address string, decimals int"))
+    graft.analytics.PriceSeries.withAsOfIntervals(
+        unioned.withColumn("asset", col("token_address")),
+        usd.getOrElse(Dump.UsdDims.empty(spark)).index,
+        tsCol = "block_timestamp")
+      .join(broadcast(toks.select(col("token_address"),
+        col("decimals"))), Seq("token_address"), "left")
+      .withColumn("value_usd",
+        when(col("transfer_type") === "ERC20",
+          col("raw_value").cast("double") /
+            pow(lit(10.0), col("decimals")) * col("price_usd")))
+      .select(
+        col("chain_id"), col("token_address"),
+        col("from_address"), col("to_address"),
+        col("value"),
+        col("value_usd"), col("operator"),
+        col("token_ids"), col("token_values"),
+        col("transaction_hash"), col("log_index"),
+        col("block_timestamp"), col("block_number"), col("block_hash"),
+        col("transfer_type"))
       .withColumn("log_dt", lit(logDT))
   }
 
-  /** Write the day's two EVM tables as idempotent date partitions and
-    * return schema-supplied read-backs of the written layout (empty
-    * days carry no parquet footers — the dumpAccountsDay contract). */
-  /** `evm.logs` export (schema substrateetl/evm/logs.json — the
-    * eth-etl-style flattened log stream): one row per receipt log with
-    * tx/block placement, topic0 resolved against an optional broadcast
-    * event-signature registry (topic0, signature — deduped to one
-    * deterministic row per topic like the evmtxs selector registry).
-    * The `events` column (per-log ABI-decoded params JSON) exports
-    * null: decoding it needs the per-contract ABI repo
-    * (`evm.abirepo`), which is outside the substrate decode path — the
-    * transfer families the engine DOES decode land in evmtransfers /
-    * token_transfers. Pending txs (null logs) yield no rows: the log
-    * stream is mined-only by construction. */
   /** Exploded log rows with BOTH indexes: `tx_log_pos` (position in
     * the receipt's own list) and the eth-etl `log_index`, which is
     * BLOCK-scoped — (block_number, log_index) is the uniqueness key
@@ -287,6 +271,17 @@ object EvmDump {
       .withColumn("log_index", row_number().over(w) - 1)
   }
 
+  /** `evm.logs` export (schema substrateetl/evm/logs.json — the
+    * eth-etl-style flattened log stream): one row per receipt log with
+    * tx/block placement, topic0 resolved against an optional broadcast
+    * event-signature registry (topic0, signature — deduped to one
+    * deterministic row per topic like the evmtxs selector registry).
+    * The `events` column (per-log ABI-decoded params JSON) exports
+    * null: decoding it needs the per-contract ABI repo
+    * (`evm.abirepo`), which is outside the substrate decode path — the
+    * transfer families the engine DOES decode land in evmtransfers /
+    * token_transfers. Pending txs (null logs) yield no rows: the log
+    * stream is mined-only by construction. */
   private[etl] def evmLogsOf(combined: DataFrame, logDT: String,
       chains: Option[DataFrame] = None,
       eventSigs: Option[DataFrame] = None): DataFrame = {
@@ -464,6 +459,9 @@ object EvmDump {
     "evmtransfers" -> evmtransfersOfCombined(combined, logDT, usd,
       tokenDecimals))
 
+  /** Write the day's two EVM tables as idempotent date partitions and
+    * return schema-supplied read-backs of the written layout (empty
+    * days carry no parquet footers — the dumpAccountsDay contract). */
   def dumpEvmDay(txs: DataFrame, receipts: DataFrame, logDT: String,
       outRoot: String, usd: Option[Dump.UsdDims] = None,
       tokenDecimals: Option[DataFrame] = None,

@@ -252,14 +252,4 @@ object Snapshot {
       .option("header", "true").save(outDir)
     out
   }
-
-  /** Idempotent snapshot write: partitioned by `snapshot_at`, dynamic
-    * partition overwrite — re-running a snapshot replaces exactly its
-    * own partition and leaves every other block's snapshot untouched
-    * (the reference's per-(chain, block) file overwrite, expressed as
-    * partition semantics). The mode is a per-write option, so the
-    * session conf and any overwrite running beside this one are
-    * untouched. */
-  def writeSnapshot(state: DataFrame, outDir: String): Unit =
-    Writers.overwritePartitions(state, outDir, Seq("snapshot_at"))
 }

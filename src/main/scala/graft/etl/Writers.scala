@@ -19,10 +19,8 @@ import org.apache.spark.sql.functions._
   *    batch_id) for the day dumps — so a replayed `foreachBatch`
   *    micro-batch (at-least-once) replaces its own partition instead
   *    of appending duplicates; readers drop batch_id or read the
-  *    directory whole. Every etl table sink goes through it, bar
-  *    `Snapshot.writeSnapshot`, whose caller names the directory and
-  *    which calls the write under it, [[Writers.overwritePartitions]].
-  *    Only file exports (single-file CSV hand-offs) and [[Layout]]'s
+  *    directory whole. Every etl table sink goes through it. Only
+  *    file exports (single-file CSV hand-offs) and [[Layout]]'s
   *    bucketed and sorted rewrites write on their own.
   *  - S9: merge-style upsert (ref polkaholicDB.js `on duplicate key
   *    update`) expressed as a key-resolved union — the plain-parquet

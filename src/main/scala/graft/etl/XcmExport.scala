@@ -41,18 +41,12 @@ object XcmExport {
     // USD valuation (ref xcmtransfers.json price_usd /
     // origination_amount_sent_usd / destination_amount_received_usd;
     // the reference stamps ONE priceUSD per transfer record): as-of at
-    // the origination time on the symbol's asset key. Null-emitted
-    // without dims — partition-invariant schema, like Dump's tables.
-    val priced = usd match {
-      case Some(u) =>
-        graft.analytics.PriceSeries.withAsOfIntervals(
-          joined.withColumn("asset",
-            expr("asset_chain(symbol, chain_id)")),
-          u.index, tsCol = "source_ts").drop("asset")
-      case None =>
-        joined.withColumn("price_usd", lit(null).cast("double"))
-    }
-    priced
+    // the origination time on the symbol's asset key; without dims it
+    // prices against the empty ones, null
+    graft.analytics.PriceSeries.withAsOfIntervals(
+        joined.withColumn("asset", expr("asset_chain(symbol, chain_id)")),
+        usd.getOrElse(Dump.UsdDims.empty(transfers.sparkSession)).index,
+        tsCol = "source_ts")
       .select(
         col("symbol"),
         col("price_usd"),

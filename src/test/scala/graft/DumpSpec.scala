@@ -3,7 +3,9 @@ package graft
 import graft.etl.Dump
 import graft.functions.Codec
 import graft.model._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -553,18 +555,54 @@ class DumpSpec extends AnyFunSuite {
     }
     // the columns only the price-interval dim carries
     val priceCols = Set("index_ts", "px_until", "_px_from", "_px_until")
+    // the columns the chain-registry and token-decimals dims join in
+    val dimCols = Set("native_asset", "asset", "decimals")
     val dims = Dump.UsdDims(
       Seq(("DOT~0", 0, ts("2024-03-01 00:00:00"), 7.0))
         .toDF("asset", "chain_id", "index_ts", "price_usd"),
       Seq((0, "DOT~0", 10)).toDF("chain_id", "native_asset", "decimals"))
     val day = raw.unionByName(rewardRaw)
-    for (usd <- Seq(None, Some(dims));
-         (name, df) <- Seq(
-           "extrinsics" -> Dump.extrinsics(day, "2024-03-01", usd),
-           "transfers" -> Dump.transfers(day, "2024-03-01", usd),
-           "calls" -> Dump.calls(day, "2024-03-01", usd),
-           "rewards" -> Dump.rewards(day, "2024-03-01", usd),
-           "crowdloan" -> Dump.crowdloan(day, "2024-03-01"))) {
+    // one ERC-20 transfer, and one XCM transfer with its match
+    val evmTxs = Seq((2006, "0xt1", 7L, "0xb7", ts("2024-03-01 10:00:00")))
+      .toDF("chain_id", "transaction_hash", "block_number", "block_hash",
+        "block_timestamp")
+    val evmReceipts = Seq(("0xt1", 1, 21000L, BigDecimal(10),
+        Seq(EvmLog("0xtok", Seq(graft.decode.EvmDecode.TransferTopic,
+          EvmWire.pad32("0x" + "aa" * 20), EvmWire.pad32("0x" + "bb" * 20)),
+          "0x" + EvmWire.wordOf(500)))))
+      .toDF("transaction_hash", "status", "gas_used",
+        "effective_gas_price", "logs")
+    val toks = Seq(("0xtok", 2)).toDF("token_address", "decimals")
+    val xcm = Seq(("5-1", 0, 0, 0, 2004, "DOT", 10.0,
+        ts("2024-03-01 10:00:00"), "0xm1", 10L, alice))
+      .toDF("extrinsic_id", "transfer_index", "xcm_index", "chain_id",
+        "chain_id_dest", "symbol", "amount_sent", "source_ts",
+        "msg_hash", "sent_at", "sender_pub")
+    val xcmMatched = graft.etl.XcmMatcher.matchTransfers(xcm,
+      Seq((2004, "0xm1", ts("2024-03-01 10:00:30"), 900L, 10.0, 0.0,
+          "900-1-1", 0))
+        .toDF("chain_id_dest", "msg_hash", "dest_ts", "block_number_dest",
+          "amount_received", "xcm_teleport_fees", "event_id", "reaped"))
+    def tables(usd: Option[Dump.UsdDims]): Seq[(String, DataFrame)] = Seq(
+      "extrinsics" -> Dump.extrinsics(day, "2024-03-01", usd),
+      "transfers" -> Dump.transfers(day, "2024-03-01", usd),
+      "calls" -> Dump.calls(day, "2024-03-01", usd),
+      "rewards" -> Dump.rewards(day, "2024-03-01", usd),
+      "crowdloan" -> Dump.crowdloan(day, "2024-03-01"),
+      "relay crowdloan" -> Dump.relayCrowdloan(day, "2024-03-01", usd = usd),
+      "evmtransfers" -> graft.etl.EvmDump.evmtransfersOf(evmTxs,
+        evmReceipts, "2024-03-01", usd, usd.map(_ => toks)),
+      "xcmtransfers" -> graft.etl.XcmExport.xcmTransfers(xcm, xcmMatched,
+        "2024-03-01", usd))
+    // the EVM and XCM exports join their inputs; only the day tables
+    // are row-local
+    val joined = Set("evmtransfers", "xcmtransfers")
+    // a dims-less projection prices against the empty dims, whose index
+    // is built without a Spark job
+    assert(SparkTestBase.jobsDuring(spark)(tables(None)) == 0)
+    val schemas = scala.collection.mutable.Map[(String, Boolean), StructType]()
+    for (usd <- Seq(None, Some(dims)); (name, df) <- tables(usd)) {
+      schemas((name, usd.isDefined)) = df.schema
       assert(df.collect().nonEmpty, s"$name: empty, the plan is vacuous")
       val ops = operators(df.queryExecution.executedPlan)
       val bad = ops.collect {
@@ -572,7 +610,8 @@ class DumpSpec extends AnyFunSuite {
         case w: WindowExec => w.nodeName
         case j: SortMergeJoinExec => j.nodeName
       }
-      assert(bad.isEmpty, s"$name (usd=${usd.isDefined}): $bad in\n" +
+      assert(joined(name) || bad.isEmpty,
+        s"$name (usd=${usd.isDefined}): $bad in\n" +
         df.queryExecution.executedPlan)
       // the as-of price is a row-local probe: no operator broadcasts
       // the price intervals or joins against them; the chain-registry
@@ -587,6 +626,21 @@ class DumpSpec extends AnyFunSuite {
       }
       assert(priced.isEmpty, s"$name (usd=${usd.isDefined}): $priced in\n" +
         df.queryExecution.executedPlan)
+      // without dims the empty registry and token dims fold away in the
+      // optimizer, before AQE could run a broadcast stage to find them
+      // empty: the planned (pre-AQE) plan neither broadcasts them nor
+      // joins against them
+      if (usd.isEmpty) {
+        val dimOps = operators(df.queryExecution.sparkPlan).collect {
+          case b: BroadcastExchangeLike if b.output.exists(a => dimCols(a.name)) =>
+            b.nodeName
+          case j: BaseJoinExec if (j.left.output ++ j.right.output)
+              .exists(a => dimCols(a.name)) =>
+            j.nodeName
+        }
+        assert(dimOps.isEmpty, s"$name (usd=None): $dimOps in\n" +
+          df.queryExecution.sparkPlan)
+      }
       if (usd.isDefined && Set("extrinsics", "calls", "rewards")(name))
         assert(ops.exists {
           case b: BroadcastExchangeLike => b.output.exists(_.name == "chain_id")
@@ -594,5 +648,10 @@ class DumpSpec extends AnyFunSuite {
         }, s"$name: no chain-registry broadcast in\n" +
           df.queryExecution.executedPlan)
     }
+    // one schema with and without dims: names, order, types, nullability
+    for ((name, _) <- tables(None))
+      assert(schemas((name, false)) == schemas((name, true)),
+        s"$name: ${schemas((name, false)).treeString} without dims, " +
+          s"${schemas((name, true)).treeString} with dims")
   }
 }

@@ -55,15 +55,17 @@ class EtlSpec extends AnyFunSuite {
     assert(batches == Set(("2024-01-01", 0L, 1L), ("2024-01-02", 0L, 2L),
       ("2024-01-01", 1L, 4L)))
 
-    // writeSnapshot sets its overwrite mode per write: the session conf
-    // is left exactly as found (a session-wide set-and-restore would
-    // leak into overwrites running beside it, and leaves the key set)
+    // overwritePartitions sets its overwrite mode per write: the
+    // session conf is left exactly as found (a session-wide
+    // set-and-restore would leak into overwrites running beside it,
+    // and leaves the key set)
     val fresh = spark.newSession()
     val key = "spark.sql.sources.partitionOverwriteMode"
     val before = fresh.conf.getAll.get(key)
-    graft.etl.Snapshot.writeSnapshot(
+    Writers.overwritePartitions(
       fresh.range(2).toDF("account").withColumn("snapshot_at",
-        org.apache.spark.sql.functions.lit(7L)), s"$root/snap")
+        org.apache.spark.sql.functions.lit(7L)), s"$root/snap",
+      Seq("snapshot_at"))
     assert(fresh.conf.getAll.get(key) == before)
     assert(fresh.read.parquet(s"$root/snap").count() == 2L)
   }
@@ -83,10 +85,12 @@ class EtlSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
       Set((1L, 20L, 150.0)))
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
-    Snapshot.writeSnapshot(snap(22L), dir)
-    Snapshot.writeSnapshot(snap(30L), dir)
+    def write(at: Long): Unit =
+      Writers.overwritePartitions(snap(at), dir, Seq("snapshot_at"))
+    write(22L)
+    write(30L)
     // re-running snapshot 30 must replace ONLY its own partition
-    Snapshot.writeSnapshot(snap(30L), dir)
+    write(30L)
     val out = spark.read.parquet(dir)
       .select("snapshot_at", "account", "block", "free")
       .collect().map(r => (r.get(0).toString.toLong, r.getLong(1),

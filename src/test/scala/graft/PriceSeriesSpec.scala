@@ -59,8 +59,10 @@ class PriceSeriesSpec extends AnyFunSuite {
       ("DOT", 0, ts(4 * H), "e3", 1.0), // after hour-3 point → 20
       ("DOT", 1, ts(4 * H), "e4", 1.0)  // other chain: no prices → null
     ).toDF("asset", "chain_id", "ts", "event_id", "amount")
-    val out = PriceSeries.decorateUsd(events,
-        PriceSeries.mostLiquid(priceLog))
+    val index = PriceSeries.asOfIndex(
+      PriceSeries.asOfIntervals(PriceSeries.mostLiquid(priceLog)))
+    val out = PriceSeries.withAsOfIntervals(events, index, tsCol = "ts")
+      .withColumn("amount_usd", $"amount" * $"price_usd")
       .select("event_id", "price_usd", "amount_usd").collect()
       .map(r => r.getString(0) ->
         (Option(r.get(1)), Option(r.get(2)))).toMap

@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The declared-schema table catalog: the declared schemas match the
   * committed test data, a drifted input fails at `Tables.load` (not at
@@ -20,32 +16,6 @@ class TablesCatalogSpec extends AnyFunSuite {
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Spark jobs started on this thread while `body` runs, counted from
-    * the job-start events; a marker job in its own group flushes the
-    * listener bus, which delivers events in order. */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-catalog-body", "loads under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("tables-catalog-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("tables-catalog-marker") &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains("tables-catalog-marker"),
-        "the marker job's start event never arrived")
-      groups.asScala.count(_ == "tables-catalog-body")
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the declared catalog equals the footers of all ten tables at " +
       "every committed scale") {
@@ -95,8 +65,8 @@ class TablesCatalogSpec extends AnyFunSuite {
     val s = Tables.configure(spark.newSession())
     val d = SparkTestBase.sf
     // the first loads read the footers on the driver: no job either
-    assert(jobsDuring(s)(Names.foreach(Tables.load(s, d, _))) == 0)
-    assert(jobsDuring(s)(Names.foreach(Tables.load(s, d, _))) == 0)
+    assert(SparkTestBase.jobsDuring(s)(Names.foreach(Tables.load(s, d, _))) == 0)
+    assert(SparkTestBase.jobsDuring(s)(Names.foreach(Tables.load(s, d, _))) == 0)
   }
 
   test("a <name>.parquet directory of part files validates, and a drifted " +
