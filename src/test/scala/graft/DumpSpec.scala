@@ -649,7 +649,7 @@ class DumpSpec extends AnyFunSuite {
           df.queryExecution.executedPlan)
     }
     // one schema with and without dims: names, order, types, nullability
-    for ((name, _) <- tables(None))
+    for (name <- schemas.keySet.map(_._1))
       assert(schemas((name, false)) == schemas((name, true)),
         s"$name: ${schemas((name, false)).treeString} without dims, " +
           s"${schemas((name, true)).treeString} with dims")
