@@ -1,21 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan + cold/warm timings for
-  * one query. Usage: Explain <queryName> <sfDir> [cpus] */
+  * one query, on the bench's session ([[Bench.benchSession]]).
+  * Usage: Explain <queryName> <sfDir> [cpus] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val cpus = if (args.length > 2) args(2) else "16"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.benchSession(sfDir, cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     var t0 = System.nanoTime()

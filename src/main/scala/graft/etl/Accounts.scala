@@ -79,29 +79,22 @@ object Accounts {
     * rows for a table (no new accounts, nothing passive), and an
     * empty partitioned write carries no parquet footers to infer a
     * schema from, so a bare read would throw; supplying the schema
-    * makes empty days first-class for every consumer. (The persist on
-    * `active` serves the two writes that consume it; the returned
-    * frames are plain scans, so nothing recomputes downstream.) */
+    * makes empty days first-class for every consumer. (`active` is
+    * shared by the two writes that consume it; the returned frames
+    * are plain scans, so nothing recomputes downstream.) */
   def dumpAccountsDay(extrinsics: DataFrame, blocks: DataFrame,
       transfers: DataFrame, balancesToday: DataFrame,
       balancesPrev: DataFrame, logDT: String,
       outRoot: String): Map[String, DataFrame] = {
-    // materialized BEFORE the concurrent writes: the aggregation in
-    // active's lineage must not be first-computed by racing jobs
-    // (Writers.materialize — the round-19 anti-scaling rule; two of
-    // the four writes consume it, one as an anti-join build side)
-    val active = Writers.materialize(activeAccounts(extrinsics, blocks)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val tables = Map(
-        "accountsactive" -> active,
-        "accountspassive" -> passiveAccounts(transfers, active),
-        "accountsnew" -> newAccounts(balancesToday, balancesPrev),
-        "accountsreaped" -> reapedAccounts(balancesToday, balancesPrev))
-        .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
-      Writers.publish(outRoot, Seq("log_dt"), None, tables)
-      Writers.readBack(outRoot, tables)
-    } finally active.unpersist(): Unit
+    val active = activeAccounts(extrinsics, blocks)
+    val tables = Map(
+      "accountsactive" -> active,
+      "accountspassive" -> passiveAccounts(transfers, active),
+      "accountsnew" -> newAccounts(balancesToday, balancesPrev),
+      "accountsreaped" -> reapedAccounts(balancesToday, balancesPrev))
+      .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
+    Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(active))
+    Writers.readBack(outRoot, tables)
   }
 
   /** `full_users` — the exchange/known-address attribution table (ref

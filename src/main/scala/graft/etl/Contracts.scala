@@ -392,34 +392,16 @@ object Contracts {
       calls: DataFrame, contractInfo: DataFrame, chains: DataFrame,
       outRoot: String, specs: Option[DataFrame] = None,
       verified: Option[DataFrame] = None): Map[String, DataFrame] = {
-    val spark = events.sparkSession
     val dim = chainDimOf(chains)
-    // both frames cross shuffles (the latest-wins groupBys) and feed
-    // the three writes both as scan inputs AND as broadcast builds —
-    // materialize them BEFORE the concurrent pool so the jobs read
-    // warm cache blocks instead of racing the first computation
-    // (Writers.materialize — the 32-core anti-scaling fix)
     val code = wasmCodeRows(events, extrinsics)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val contract = contractRows(contractInfo, events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the two frames are independent - their cache builds overlap in
-    // the same bounded pool the writes use (each build is still a
-    // barrier BEFORE any write can race its first computation)
-    Writers.concurrently(spark, Seq(code, contract))(Writers.materialize)
-    try {
-      val tables = Map(
-        "contractscode" -> contractsCode(code, dim, verified),
-        "contracts" -> contracts(contract, code, dim, verified),
-        "contractscall" -> contractsCalls(
-          contractCallRows(calls, extrinsics), contract, code, dim,
-          specs, verified))
-      // three independent whole-table writes off the two persisted
-      // frames
-      Writers.publish(outRoot, Nil, None, tables)
-      Writers.readBack(outRoot, tables)
-    } finally {
-      code.unpersist(); contract.unpersist(): Unit
-    }
+    val tables = Map(
+      "contractscode" -> contractsCode(code, dim, verified),
+      "contracts" -> contracts(contract, code, dim, verified),
+      "contractscall" -> contractsCalls(
+        contractCallRows(calls, extrinsics), contract, code, dim,
+        specs, verified))
+    Writers.publish(outRoot, Nil, None, tables, Seq(code, contract))
+    Writers.readBack(outRoot, tables)
   }
 }

@@ -110,7 +110,7 @@ object Dump {
     * (ref substrateetl.js:6271-6288: fork/date-mismatch checks —
     * finalized-only, matching logDT). Applied exactly once per input:
     * the public projections call it on raw input; dumpDay applies it
-    * once, persists, and feeds the day frame to the *Of variants. */
+    * once and feeds the shared day frame to the *Of variants. */
   private def dayBlocks(raw: DataFrame, logDT: String): DataFrame = {
     raw.filter(col("finalized") &&
       date_format(col("block_time"), "yyyy-MM-dd") === logDT)
@@ -617,7 +617,7 @@ object Dump {
   /** The trace-side daily dump: `traces` + `balances` as idempotent
     * date partitions next to [[dumpDay]]'s eight tables (ref
     * substrateetl.js:6936 backfill_trace* writes the same pair). One
-    * persisted day slice feeds both writes, like dumpDay's. */
+    * shared day slice feeds both writes, like dumpDay's. */
   def dumpTracesDay(rawTraces: DataFrame, dim: DataFrame, logDT: String,
       outRoot: String, decimals: Int = 10,
       ss58Network: Int = 42): Map[String, DataFrame] =
@@ -641,23 +641,21 @@ object Dump {
       logDT: String, outRoot: String, decimals: Int, ss58Network: Int,
       batchId: Option[Long]): Map[String, DataFrame] = {
     val day = dayTraces(rawTraces, logDT)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val tables = Map(
-        "traces" -> tracesOf(day, dim, logDT),
-        "balances" -> balancesOf(day, dim, logDT, decimals, ss58Network))
-      Writers.publish(outRoot, Seq("log_dt"), batchId, tables)
-      tables
-    } finally day.unpersist()
+    val tables = Map(
+      "traces" -> tracesOf(day, dim, logDT),
+      "balances" -> balancesOf(day, dim, logDT, decimals, ss58Network))
+    Writers.publish(outRoot, Seq("log_dt"), batchId, tables, Seq(day))
+    tables
   }
 
   /** The whole §3.2 entry point: validate (timestamp-presence check,
     * ref substrateetl.js:6451-6455), project all eight tables, write each
     * as an idempotent date partition. Returns the table map.
     *
-    * The day-filtered raw scan is persisted for the duration of the eight
-    * writes — each write is its own job, and without the persist the
-    * (at scale, enormous) raw table would be re-scanned eight times.
+    * The day-filtered raw scan is shared by the eight writes (the
+    * shared-frame rule of [[Writers]]): each write is its own job, and
+    * without the cache the (at scale, enormous) raw table would be
+    * re-scanned eight times.
     *
     * Precondition: `raw` holds each finalized block of the day ONCE.
     * Every projection is row-local per block (transfers dedup and
@@ -672,18 +670,10 @@ object Dump {
   private def publishDay(raw: DataFrame, logDT: String, outRoot: String,
       usd: Option[UsdDims], batchId: Option[Long]): Map[String, DataFrame] = {
     val day = dayBlocks(raw, logDT)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val tables = projections(day, logDT,
-        usd.getOrElse(UsdDims.empty(raw.sparkSession)))
-      // the eight writes are independent jobs off the ONE persisted day
-      // scan — submitted concurrently (guide §2.6) each write's task
-      // tail back-fills with the next table's tasks instead of idling
-      // the cluster eight times; cache-block locks keep the persisted
-      // day computed once even under concurrent first readers
-      Writers.publish(outRoot, Seq("log_dt"), batchId, tables)
-      tables
-    } finally day.unpersist()
+    val tables = projections(day, logDT,
+      usd.getOrElse(UsdDims.empty(raw.sparkSession)))
+    Writers.publish(outRoot, Seq("log_dt"), batchId, tables, Seq(day))
+    tables
   }
 
   /** The eight entity projections over an already-day-filtered frame

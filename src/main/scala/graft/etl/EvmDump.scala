@@ -431,21 +431,14 @@ object EvmDump {
       signatures: Option[DataFrame] = None): Map[String, DataFrame] = {
     require(receipts.columns.contains("logs"),
       "dumpEvmDataset needs receipt logs — both tables project them")
-    // materialize BEFORE the concurrent writes: the join in the
-    // lineage must not be first-computed by three racing jobs
-    // (Writers.materialize — the 32-core anti-scaling fix)
-    val combined = Writers.materialize(
-      EvmDecode.combineTxReceipt(txs, receipts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val tables = Map(
-        "transactions" -> evmTransactionsOf(combined, logDT, chains,
-          signatures),
-        "logs" -> evmLogsOf(combined, logDT, chains, eventSigs),
-        "token_transfers" -> evmTokenTransfersOf(combined, logDT, chains))
-      Writers.publish(outRoot, Seq("log_dt"), None, tables)
-      Writers.readBack(outRoot, tables)
-    } finally combined.unpersist(): Unit
+    val combined = EvmDecode.combineTxReceipt(txs, receipts)
+    val tables = Map(
+      "transactions" -> evmTransactionsOf(combined, logDT, chains,
+        signatures),
+      "logs" -> evmLogsOf(combined, logDT, chains, eventSigs),
+      "token_transfers" -> evmTokenTransfersOf(combined, logDT, chains))
+    Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(combined))
+    Writers.readBack(outRoot, tables)
   }
 
   /** The day's two projections off ONE combined frame — the single
@@ -473,19 +466,14 @@ object EvmDump {
     require(receipts.columns.contains("logs"),
       "dumpEvmDay needs receipt logs — a logs-less frame would " +
         "silently export an empty evmtransfers table")
-    // ONE tx⋈receipt join for the day, persisted across the two write
-    // actions — the evmtxs projection and the transfer extraction both
-    // consume it (the header's shuffle claim, made true structurally)
-    // materialized before the pool, like dumpEvmDataset (join lineage)
-    val combined = Writers.materialize(
-      EvmDecode.combineTxReceipt(txs, receipts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val tables =
-        evmProjections(combined, logDT, usd, tokenDecimals, signatures)
-      Writers.publish(outRoot, Seq("log_dt"), None, tables)
-      Writers.readBack(outRoot, tables)
-    } finally combined.unpersist(): Unit
+    // ONE tx⋈receipt join for the day, shared by the two writes — the
+    // evmtxs projection and the transfer extraction both consume it
+    // (the header's shuffle claim, made true structurally)
+    val combined = EvmDecode.combineTxReceipt(txs, receipts)
+    val tables =
+      evmProjections(combined, logDT, usd, tokenDecimals, signatures)
+    Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(combined))
+    Writers.readBack(outRoot, tables)
   }
 
   /** Streaming twin of [[dumpEvmDay]] for `foreachBatch`: the realtime
@@ -511,10 +499,9 @@ object EvmDump {
       tokenDecimals: Option[DataFrame] = None,
       signatures: Option[DataFrame] = None): Unit = {
     val combined = EvmDecode.combineNested(txsWithReceipt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Writers.publish(outRoot, Seq("log_dt"), Some(batchId),
-      evmProjections(combined, logDT, usd, tokenDecimals, signatures))
-    finally combined.unpersist(): Unit
+    Writers.publish(outRoot, Seq("log_dt"), Some(batchId),
+      evmProjections(combined, logDT, usd, tokenDecimals, signatures),
+      Seq(combined))
   }
 
   /** The EVM account rollups over the dumped tables (schemas

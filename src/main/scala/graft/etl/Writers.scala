@@ -1,8 +1,11 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, classic}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Sink-side operators — SURVEY.md §2.1 (S7-S9):
   *
@@ -22,26 +25,31 @@ import org.apache.spark.sql.functions._
   *    directory whole. Every etl table sink goes through it. Only
   *    file exports (single-file CSV hand-offs) and [[Layout]]'s
   *    bucketed and sorted rewrites write on their own.
+  *  - S7/S8 shared frames: a frame that several of one publish's
+  *    tables read (a day's filtered scan, or a join or an aggregate
+  *    they all project) is passed to [[Writers.publish]] as `shared`,
+  *    never persisted at the call site. The publish persists it at
+  *    MEMORY_AND_DISK, so the source is computed once however many
+  *    tables read it, and unpersists it after the writes, on failure
+  *    too. The tables may be built before the publish: Spark
+  *    substitutes the cache when a plan runs, not when it is built.
+  *    When more than one table is written, each shared frame whose
+  *    physical plan holds an exchange (a shuffle or a broadcast) is
+  *    computed into the cache first, the frames concurrently, before
+  *    any write starts. Concurrent first readers of such a frame race
+  *    to compute the same uncached partitions: the losers' tasks sit
+  *    in block-lock waits holding task slots, broadcast builds off the
+  *    frame contend too, and the contention grows with the slot count
+  *    (measured: the evm and contracts dumps anti-scaled 32-core vs
+  *    8-core until this barrier). A narrow frame (a filtered scan) is
+  *    not computed first, as a concurrent first reader there only
+  *    waits out one partition's scan; nor is any frame of a
+  *    single-table publish, which has no concurrent readers.
   *  - S9: merge-style upsert (ref polkaholicDB.js `on duplicate key
   *    update`) expressed as a key-resolved union — the plain-parquet
   *    stand-in for Delta `MERGE INTO`.
   */
 object Writers {
-
-  /** Materialize a persisted frame BEFORE submitting concurrent jobs
-    * over it. A persisted frame whose lineage crosses a SHUFFLE (a
-    * join or aggregation) must not meet its first readers
-    * concurrently: every job races to compute the same uncached
-    * partitions, the losers' tasks sit in block-lock waits occupying
-    * task slots, and a broadcast build off the same frame contends
-    * too — the contention grows with the slot count (measured: the
-    * evm/contracts dumps anti-scaled 32-core vs 8-core until this
-    * barrier). One count() populates the cache as a single
-    * fully-parallel job; the concurrent writes then read warm blocks.
-    * Narrow-lineage persists (a filtered scan) don't need this — a
-    * concurrent first reader there only waits out one partition's
-    * scan — so the barrier is opt-in, not part of [[concurrently]]. */
-  def materialize(df: DataFrame): DataFrame = { df.count(); df }
 
   /** Run independent Spark actions CONCURRENTLY from a bounded driver
     * thread pool — the idle-capacity overlap shape (spark_optimization
@@ -90,15 +98,34 @@ object Writers {
     * `(name, df)` of `tables` lands as parquet at `$outRoot/$name`,
     * overwriting the partitions of `partitionCols` it holds (the whole
     * table when there are none); `batchId` makes it a micro-batch
-    * publish. Several tables are written [[concurrently]]. */
+    * publish. Several tables are written [[concurrently]]. `shared`
+    * holds the frames the tables read in common, cached for the
+    * writes by the shared-frame rule. */
   def publish(outRoot: String, partitionCols: Seq[String],
-      batchId: Option[Long], tables: Iterable[(String, DataFrame)]): Unit = {
+      batchId: Option[Long], tables: Iterable[(String, DataFrame)],
+      shared: Seq[DataFrame] = Nil): Unit = {
     val cols = partitionCols ++ batchId.map(_ => "batch_id")
-    eachTable(tables) { (name, df) =>
-      val out = batchId.fold(df)(id => df.withColumn("batch_id", lit(id)))
-      overwritePartitions(out, s"$outRoot/$name", cols)
-    }: Unit
+    shared.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      val first = if (tables.size > 1) shared.filter(crossesExchange)
+        else Nil
+      first.headOption.foreach(df =>
+        concurrently(df.sparkSession, first)(_.count()))
+      eachTable(tables) { (name, df) =>
+        val out = batchId.fold(df)(id => df.withColumn("batch_id", lit(id)))
+        overwritePartitions(out, s"$outRoot/$name", cols)
+      }: Unit
+    } finally shared.foreach(_.unpersist())
   }
+
+  /** Whether the cached plan of the persisted `df` holds an exchange. */
+  private def crossesExchange(df: DataFrame): Boolean =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .exists(c => PlanWalk.find(c.cachedRepresentation.cacheBuilder
+        .cachedPlan)(_.isInstanceOf[Exchange]).isDefined)
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** Schema-supplied read-backs of tables [[publish]] wrote, so a table
     * with no rows stays readable. Each lists its table's directory; the
@@ -297,16 +324,19 @@ object WriterQueries {
         lit(0L).as("ver"))
     // the standing table lives as parquet between waves — each merge
     // reads the CURRENT table back (a lazy self-overwrite would read
-    // the files it is replacing), upserts, and publishes the next
-    val t0 = s"$root/t0"; base.write.parquet(t0)
-    val after1 = Writers.upsert(s.read.parquet(t0),
-      wave("1995-01-01", "1995-07-01", 1L), keyCols, "ver")
-    val t1 = s"$root/t1"; after1.write.parquet(t1)
+    // the files it is replacing), upserts, and publishes the next as
+    // a whole-table replace
+    def published(name: String, df: DataFrame): DataFrame = {
+      Writers.publish(root, Nil, None, Seq(name -> df))
+      s.read.parquet(s"$root/$name")
+    }
+    val t0 = published("t0", base)
+    val t1 = published("t1", Writers.upsert(t0,
+      wave("1995-01-01", "1995-07-01", 1L), keyCols, "ver"))
     val wave2 = wave("1996-01-01", "1996-04-01", 2L)
       .unionByName(wave("1996-01-01", "1996-07-01", 3L))
-    val after2 = Writers.upsert(s.read.parquet(t1), wave2, keyCols, "ver")
-    val t2 = s"$root/t2"; after2.write.parquet(t2)
-    s.read.parquet(t2).orderBy(col("c_custkey"))
+    published("t2", Writers.upsert(t1, wave2, keyCols, "ver"))
+      .orderBy(col("c_custkey"))
   }
 
   private val j15Sql =

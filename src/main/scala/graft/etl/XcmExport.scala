@@ -119,13 +119,11 @@ object XcmExport {
     * idempotent date partition next to [[dumpXcmDay]]'s transfers. */
   def dumpXcmMessagesDay(messages: DataFrame, logDT: String,
       outRoot: String): DataFrame = {
-    val ms = messages
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val out = xcmMessages(ms, XcmMatcher.matchMessages(ms), logDT)
-      Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcm" -> out))
-      out
-    } finally ms.unpersist(): Unit
+    val out = xcmMessages(messages, XcmMatcher.matchMessages(messages),
+      logDT)
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcm" -> out),
+      Seq(messages))
+    out
   }
 
   /** The Dune hand-off projection of xcmtransfer rows (ref
@@ -186,16 +184,12 @@ object XcmExport {
       logDT: String, outRoot: String,
       usd: Option[Dump.UsdDims] = None): DataFrame = {
     // the transfer slice feeds BOTH the matcher join and the export
-    // re-join — persist it for the write's duration so the (at scale,
-    // expensive) source is scanned once, like dumpDay's day persist
-    val tr = transfers
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val matched = XcmMatcher.matchTransfers(tr, candidates)
-      val out = xcmTransfers(tr, matched, logDT, usd)
-      Writers.publish(outRoot, Seq("log_dt"), None,
-        Seq("xcmtransfers" -> out))
-      out
-    } finally tr.unpersist(): Unit
+    // re-join: shared, so the (at scale, expensive) source is scanned
+    // once, like dumpDay's day
+    val out = xcmTransfers(transfers,
+      XcmMatcher.matchTransfers(transfers, candidates), logDT, usd)
+    Writers.publish(outRoot, Seq("log_dt"), None,
+      Seq("xcmtransfers" -> out), Seq(transfers))
+    out
   }
 }

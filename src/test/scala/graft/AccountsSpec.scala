@@ -53,9 +53,11 @@ class AccountsSpec extends AnyFunSuite {
       .map(_.getAs[String]("address_pubkey")).toSeq == Seq("0xnew"))
     assert(t("accountsreaped").collect()
       .map(_.getAs[String]("address_pubkey")).toSeq == Seq("0xgone"))
-    // a second day replaces only its own partition
-    Accounts.dumpAccountsDay(extrinsics, blocks, transfers,
-      balToday, balPrev, "2024-03-02", dir)
+    // a second day replaces only its own partition; the aggregated
+    // active frame is computed ahead of the four writes
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      Accounts.dumpAccountsDay(extrinsics, blocks, transfers,
+        balToday, balPrev, "2024-03-02", dir)) == 1)
     val all = spark.read.parquet(s"$dir/accountsactive")
     assert(all.count() == 4 &&
       all.select("log_dt").distinct().count() == 2)

@@ -362,8 +362,10 @@ class ContractsSpec extends AnyFunSuite {
     val counts1 = t1.map { case (n, df) => n -> df.count() }
     assert(counts1 == Map("contractscode" -> 2L, "contracts" -> 1L,
       "contractscall" -> 2L))
-    // whole-table replace: a second publish replaces, never appends
-    val t2 = run()
+    // whole-table replace: a second publish replaces, never appends;
+    // both latest-wins frames are computed ahead of the three writes
+    var t2 = t1
+    assert(SparkTestBase.framesComputedFirst(spark) { t2 = run() } == 2)
     assert(t2.map { case (n, df) => n -> df.count() } == counts1)
     // published schema field check against contracts.json essentials
     val cols = t1("contracts").columns.toSet

@@ -348,8 +348,10 @@ class DumpSpec extends AnyFunSuite {
     assert(b.getAs[Double]("free") == 5.0)
     // partition-column read-back infers DATE — compare by render
     assert(String.valueOf(b.getAs[Any]("log_dt")) == "2024-03-01")
-    // day-2 re-dump replaces only its own partition (idempotent)
-    Dump.dumpTracesDay(rows, dim, "2024-03-02", dir)
+    // day-2 re-dump replaces only its own partition (idempotent); the
+    // narrow day slice is not computed ahead of the two writes
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      Dump.dumpTracesDay(rows, dim, "2024-03-02", dir)) == 0)
     val both = spark.read.parquet(s"$dir/balances")
     assert(both.count() == 2)
     assert(both.select("log_dt").distinct().count() == 2)
@@ -439,7 +441,9 @@ class DumpSpec extends AnyFunSuite {
 
   test("idempotent partition overwrite: re-dump day 1, then dump day 2") {
     Dump.dumpDay(raw, "2024-03-01", outRoot) // replay same day
-    Dump.dumpDay(raw, "2024-03-02", outRoot)
+    // the day is a narrow filtered scan: no count job before the writes
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      Dump.dumpDay(raw, "2024-03-02", outRoot)) == 0)
     val blocks = spark.read.parquet(s"$outRoot/blocks")
     // day 1 not duplicated by the replay; day 2 appended
     assert(blocks.filter(col("log_dt") === "2024-03-01").count() == 2)

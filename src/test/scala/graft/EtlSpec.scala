@@ -3,7 +3,10 @@ package graft
 import graft.decode.{AcalaParser, ChainParser, GenericParser, InterlayParser, ParallelParser}
 import graft.etl.{Dump, Writers}
 import graft.model._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Writer semantics (S7 dynamic partition overwrite, S9 upsert) and the
   * per-chain parser dispatch seam (P13). */
@@ -227,19 +230,122 @@ class EtlSpec extends AnyFunSuite {
     assert(done.get(), "in-flight sibling was orphaned, not drained")
   }
 
-  test("materialize populates every cached partition before returning " +
-      "(the barrier concurrent dump writes rely on)") {
-    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-      .repartition(3).persist()
-    try {
-      Writers.materialize(df)
-      val info = spark.sparkContext.getRDDStorageInfo
-        .find(_.numCachedPartitions > 0)
-      assert(info.exists(i => i.numCachedPartitions == i.numPartitions),
-        "materialize must leave the persisted frame fully cached so " +
-          "concurrent first readers never race its computation")
-      assert(df.count() == 3L)
-    } finally df.unpersist(): Unit
+  // shared frames for the publish tests: a repartitioned frame (its
+  // plan holds a shuffle) and a narrow range, with distinct value
+  // columns so a write plan's cached relation names its frame
+  private def wideFrame = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    .toDF("k", "v").repartition(3)
+  private def narrowFrame = spark.range(0, 6, 1, 3)
+    .select(col("id").as("k"), (col("id") * 10).as("w"))
+  private def tmpRoot() =
+    java.nio.file.Files.createTempDirectory("graft_shared").toString
+
+  test("publish: every table reads each shared frame through its " +
+      "cache, and a shuffled frame is fully cached before any write") {
+    val (wide, narrow) = (wideFrame, narrowFrame)
+    // the tables are built BEFORE publish persists the frames
+    val tables = Seq(
+      "joined" -> wide.join(narrow, "k"),
+      "unmatched" -> narrow.join(wide, Seq("k"), "left_anti"))
+    object Walk extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long) =
+        if (Walk.find(qe.executedPlan)(_.isInstanceOf[
+            org.apache.spark.sql.execution.command.DataWritingCommandExec])
+            .isDefined) writePlans.add(qe.executedPlan): Unit
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception) = ()
+    }
+    spark.listenerManager.register(qel)
+    val events = try SparkTestBase.eventsDuring(spark)(
+      Writers.publish(tmpRoot(), Nil, None, tables, Seq(wide, narrow)))
+    finally spark.listenerManager.unregister(qel)
+    // (a) each write plan scans both frames' cached relations
+    val cached = writePlans.asScala.toSeq.map(p => Walk.collect(p) {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s.relation.output.map(_.name)
+    })
+    assert(cached.size == 2, s"expected two write plans, got ${cached.size}")
+    assert(cached.forall(c => c.exists(_.contains("v")) &&
+      c.exists(_.contains("w"))),
+      s"a write read a shared frame around its cache: $cached")
+    // (c) every partition of the shuffled frame's cache is stored before
+    // the first write job starts, and none after: the writes never race
+    // its first computation (the narrow frame fills during the writes)
+    val firstWrite = events.indexWhere {
+      case j: org.apache.spark.scheduler.SparkListenerJobStart =>
+        j.stageInfos.exists(_.name.startsWith("save at Writers.scala"))
+      case _ => false
+    }
+    assert(firstWrite > 0, "no write job seen")
+    def stored(es: Seq[org.apache.spark.scheduler.SparkListenerEvent]) =
+      es.collect {
+        case b: org.apache.spark.scheduler.SparkListenerBlockUpdated
+            if b.blockUpdatedInfo.storageLevel.isValid =>
+          b.blockUpdatedInfo.blockId.asRDDId
+      }.flatten.map(id => (id.rddId, id.splitIndex)).toSet
+    val before = stored(events.take(firstWrite))
+    val rdds = before.map(_._1)
+    assert(rdds.size == 1, s"cached before the writes: $before")
+    val parts = SparkTestBase.bodyJobs(events).flatMap(_.stageInfos)
+      .flatMap(_.rddInfos).find(_.id == rdds.head).map(_.numPartitions)
+    assert(parts.contains(before.size),
+      s"the shuffled frame was cached partly before the writes: " +
+        s"${before.size} of $parts partitions")
+    assert(!stored(events.drop(firstWrite)).exists(_._1 == rdds.head),
+      "a write computed a partition of the shuffled frame")
+  }
+
+  test("publish releases its shared frames after the writes, also " +
+      "when a write throws, and the original exception surfaces") {
+    val (wide, narrow) = (wideFrame, narrowFrame)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    Writers.publish(tmpRoot(), Nil, None,
+      Seq("joined" -> wide.join(narrow, "k"), "narrow" -> narrow),
+      Seq(wide, narrow))
+    assert(wide.storageLevel == none && narrow.storageLevel == none)
+    // a table without the partition column fails its write on the driver
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      Writers.publish(tmpRoot(), Seq("log_dt"), None,
+        Seq("dated" -> wide.withColumn("log_dt", lit("2024-03-01")),
+          "undated" -> narrow),
+        Seq(wide, narrow))
+    }
+    assert(ex.getMessage.contains("log_dt"))
+    assert(wide.storageLevel == none && narrow.storageLevel == none,
+      "a failed publish left its shared frames cached")
+  }
+
+  test("publish computes first only the shuffled frames of a " +
+      "multi-table publish") {
+    import SparkTestBase.{framesComputedFirst, jobsDuring}
+    def two(df: DataFrame, shared: DataFrame*) =
+      Writers.publish(tmpRoot(), Nil, None,
+        Seq("a" -> df.select(col("k")), "b" -> df.select(col("k") + 1)),
+        shared)
+    def one(df: DataFrame, shared: DataFrame*) =
+      Writers.publish(tmpRoot(), Nil, None, Seq("a" -> df.select(col("k"))),
+        shared)
+    // the frame's lifetime hand-rolled around a publish, no barrier
+    def persisted(df: DataFrame)(body: => Unit) = {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try body finally df.unpersist()
+    }
+    val (wide, narrow) = (wideFrame, narrowFrame)
+    assert(framesComputedFirst(spark)(two(wide, wide)) == 1)
+    assert(framesComputedFirst(spark)(two(wide, wide, narrow)) == 1)
+    // (d) a narrow frame, or a single table, runs no count job: the
+    // publish runs the jobs of the hand-rolled lifetime
+    assert(framesComputedFirst(spark)(two(narrow, narrow)) == 0)
+    assert(jobsDuring(spark)(two(narrow, narrow)) ==
+      jobsDuring(spark)(persisted(narrow)(two(narrow))))
+    assert(framesComputedFirst(spark)(one(wide, wide)) == 0)
+    assert(jobsDuring(spark)(one(wide, wide)) ==
+      jobsDuring(spark)(persisted(wide)(one(wide))))
   }
 
   test("upsert: updates win on key, inserts appended") {
@@ -676,9 +782,11 @@ class EtlSpec extends AnyFunSuite {
     // table schema is partition-invariant
     assert(m1.isNullAt(m1.fieldIndex("price_usd")) &&
       m1.isNullAt(m1.fieldIndex("origination_amount_sent_usd")))
-    // re-dumping another day leaves this partition untouched
-    graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
-      "2024-03-02", dir)
+    // re-dumping another day leaves this partition untouched; a
+    // single-table publish computes no shared frame ahead of its write
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
+        "2024-03-02", dir)) == 0)
     val all = spark.read.parquet(s"$dir/xcmtransfers")
     assert(all.count() == 4 &&
       all.select("log_dt").distinct().count() == 2)
@@ -779,7 +887,10 @@ class EtlSpec extends AnyFunSuite {
         "version")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_xcmmsg_spec").toString
-    graft.etl.XcmExport.dumpXcmMessagesDay(messages, "2024-03-01", dir)
+    // one table: no shared frame is computed ahead of the write
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      graft.etl.XcmExport.dumpXcmMessagesDay(messages, "2024-03-01",
+        dir)) == 0)
     val out = spark.read.parquet(s"$dir/xcm").collect()
     assert(out.length == 1)
     val r = out.head

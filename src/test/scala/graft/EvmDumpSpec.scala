@@ -96,8 +96,11 @@ class EvmDumpSpec extends AnyFunSuite {
       Option.empty[String], Seq(lg))).toDF(rxCols: _*)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_evmds").toString
-    val out = graft.etl.EvmDump.dumpEvmDataset(txs, rx, "2024-03-01",
-      dir)
+    var out = Map.empty[String, org.apache.spark.sql.DataFrame]
+    // the tx⋈receipt join is computed ahead of the three writes
+    assert(SparkTestBase.framesComputedFirst(spark) {
+      out = graft.etl.EvmDump.dumpEvmDataset(txs, rx, "2024-03-01", dir)
+    } == 1)
     val logs = out("logs").collect()
     assert(logs.length == 1, "pending tx must yield no log rows")
     // no chains/signature registries: typed-null id + signature

@@ -6,8 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * through `Writers.publish`, so no `graft/etl` source except the sink
   * itself (Writers) and the layout policy (Layout's bucketed and sorted
   * rewrites) may call `.write` — bar the two single-file CSV hand-offs,
-  * which are file exports, not tables. A new inline write fails here,
-  * naming its file, line and enclosing `def`. */
+  * which are file exports, not tables. Frames that several tables
+  * share are passed to the publish, which owns their cache, so no
+  * source but Writers may call `.persist(`, `.unpersist(` or
+  * `materialize(` (a `localCheckpoint` is not a persist). A new inline
+  * write or hand-rolled shared-frame lifetime fails here, naming its
+  * file, line and enclosing `def`. */
 class SinkAuditSpec extends AnyFunSuite {
   private val etlDir = new java.io.File("src/main/scala/graft/etl")
   private val SinkFiles = Set("Writers.scala", "Layout.scala")
@@ -15,8 +19,17 @@ class SinkAuditSpec extends AnyFunSuite {
     ("XcmExport.scala", "dumpDuneXcmTransfers"),
     ("Snapshot.scala", "transformBalancesFeed"))
 
-  /** (file, line, enclosing def) of each `.write` call outside comments. */
-  private def writeSites(f: java.io.File): Seq[(String, Int, String)] = {
+  private lazy val etlSources = {
+    val files = Option(etlDir.listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    assert(files.size > 10, s"no etl sources under ${etlDir.getAbsolutePath}")
+    files
+  }
+
+  /** (file, line, enclosing def) of each match of `call` outside
+    * comments. */
+  private def sites(call: scala.util.matching.Regex)(
+      f: java.io.File): Seq[(String, Int, String)] = {
     val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     // blank comments out character for character, so offsets and line
     // numbers stay those of the source
@@ -25,24 +38,29 @@ class SinkAuditSpec extends AnyFunSuite {
         m.matched.map(c => if (c == '\n') c else ' ')))
     val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(code)
       .map(m => (m.start, m.group(1))).toSeq
-    """\.write\b""".r.findAllMatchIn(code).map { m =>
+    call.findAllMatchIn(code).map { m =>
       (f.getName, code.take(m.start).count(_ == '\n') + 1,
         defs.takeWhile(_._1 < m.start).lastOption.fold("")(_._2))
     }.toSeq
   }
 
   test("only Writers and Layout write in graft/etl, bar the CSV hand-offs") {
-    val files = Option(etlDir.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
-    assert(files.size > 10, s"no etl sources under ${etlDir.getAbsolutePath}")
-    val sites = files.filterNot(f => SinkFiles(f.getName))
-      .flatMap(writeSites)
-    val stray = sites.filterNot { case (f, _, d) => FileExports((f, d)) }
+    val writes = etlSources.filterNot(f => SinkFiles(f.getName))
+      .flatMap(sites("""\.write\b""".r))
+    val stray = writes.filterNot { case (f, _, d) => FileExports((f, d)) }
     assert(stray.isEmpty, stray.map { case (f, l, d) => s"$f:$l in $d" }
       .mkString("writes that bypass Writers.publish: ", ", ", ""))
     // an exemption whose function no longer writes would let a later
     // write under that name through unseen
-    assert(FileExports.forall(e => sites.exists(s => (s._1, s._3) == e)),
-      s"stale exemption: ${FileExports -- sites.map(s => (s._1, s._3))}")
+    assert(FileExports.forall(e => writes.exists(s => (s._1, s._3) == e)),
+      s"stale exemption: ${FileExports -- writes.map(s => (s._1, s._3))}")
+  }
+
+  test("only Writers persists, unpersists or materializes in graft/etl") {
+    val stray = etlSources.filterNot(_.getName == "Writers.scala")
+      .flatMap(sites("""\.(persist|unpersist)\(|\bmaterialize\(""".r))
+    assert(stray.isEmpty, stray.map { case (f, l, d) => s"$f:$l in $d" }
+      .mkString("shared-frame lifetimes outside Writers.publish: ", ", ",
+        ""))
   }
 }

@@ -85,10 +85,12 @@ class StreamingEvmSpec extends AnyFunSuite {
 
     // batch truth: split the nested shape back into the two frames
     val flat = ds.toDF()
-    EvmDump.dumpEvmDay(flat.drop("receipt"),
-      flat.filter(col("receipt").isNotNull)
-        .select(col("transaction_hash"), col("receipt.*")),
-      "2024-03-01", batchRoot, signatures = Some(sigs))
+    // the day's tx⋈receipt join is computed ahead of the two writes
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      EvmDump.dumpEvmDay(flat.drop("receipt"),
+        flat.filter(col("receipt").isNotNull)
+          .select(col("transaction_hash"), col("receipt.*")),
+        "2024-03-01", batchRoot, signatures = Some(sigs))) == 1)
 
     val q = spark.readStream
       .schema(ds.schema)
@@ -129,8 +131,10 @@ class StreamingEvmSpec extends AnyFunSuite {
     // batchId replaces its own (log_dt, batch_id) partition — no
     // duplicates (the foreachBatch restart contract)
     val replay = corpus.take(2).toDS().toDF() // = batch 0 (part0)
-    EvmDump.dumpEvmMicroBatch(replay, 0L, "2024-03-01", streamRoot,
-      signatures = Some(sigs))
+    // the micro-batch projects row-locally: nothing computed first
+    assert(SparkTestBase.framesComputedFirst(spark)(
+      EvmDump.dumpEvmMicroBatch(replay, 0L, "2024-03-01", streamRoot,
+        signatures = Some(sigs))) == 0)
     assert(spark.read.parquet(s"$streamRoot/evmtxs").count() == 4)
     assert(spark.read.parquet(s"$streamRoot/evmtransfers").count() == 2)
   }
