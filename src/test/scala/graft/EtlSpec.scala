@@ -242,23 +242,24 @@ class EtlSpec extends AnyFunSuite {
 
   test("publish: every table reads each shared frame through its " +
       "cache, and a shuffled frame is fully cached before any write") {
+    import org.apache.spark.scheduler.{SparkListenerBlockUpdated,
+      SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    object Walk extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
     val (wide, narrow) = (wideFrame, narrowFrame)
     // the tables are built BEFORE publish persists the frames
     val tables = Seq(
       "joined" -> wide.join(narrow, "k"),
       "unmatched" -> narrow.join(wide, Seq("k"), "left_anti"))
-    object Walk extends org.apache.spark.sql.execution.adaptive
-      .AdaptiveSparkPlanHelper
-    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
+    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long) =
-        if (Walk.find(qe.executedPlan)(_.isInstanceOf[
-            org.apache.spark.sql.execution.command.DataWritingCommandExec])
+      def onSuccess(f: String, qe: QueryExecution, ns: Long) =
+        if (Walk.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec])
             .isDefined) writePlans.add(qe.executedPlan): Unit
-      def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception) = ()
+      def onFailure(f: String, qe: QueryExecution, e: Exception) = ()
     }
     spark.listenerManager.register(qel)
     val events = try SparkTestBase.eventsDuring(spark)(
@@ -266,8 +267,7 @@ class EtlSpec extends AnyFunSuite {
     finally spark.listenerManager.unregister(qel)
     // (a) each write plan scans both frames' cached relations
     val cached = writePlans.asScala.toSeq.map(p => Walk.collect(p) {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s.relation.output.map(_.name)
+      case s: InMemoryTableScanExec => s.relation.output.map(_.name)
     })
     assert(cached.size == 2, s"expected two write plans, got ${cached.size}")
     assert(cached.forall(c => c.exists(_.contains("v")) &&
@@ -277,17 +277,16 @@ class EtlSpec extends AnyFunSuite {
     // the first write job starts, and none after: the writes never race
     // its first computation (the narrow frame fills during the writes)
     val firstWrite = events.indexWhere {
-      case j: org.apache.spark.scheduler.SparkListenerJobStart =>
+      case j: SparkListenerJobStart =>
         j.stageInfos.exists(_.name.startsWith("save at Writers.scala"))
       case _ => false
     }
     assert(firstWrite > 0, "no write job seen")
-    def stored(es: Seq[org.apache.spark.scheduler.SparkListenerEvent]) =
-      es.collect {
-        case b: org.apache.spark.scheduler.SparkListenerBlockUpdated
-            if b.blockUpdatedInfo.storageLevel.isValid =>
-          b.blockUpdatedInfo.blockId.asRDDId
-      }.flatten.map(id => (id.rddId, id.splitIndex)).toSet
+    def stored(es: Seq[SparkListenerEvent]) = es.collect {
+      case b: SparkListenerBlockUpdated
+          if b.blockUpdatedInfo.storageLevel.isValid =>
+        b.blockUpdatedInfo.blockId.asRDDId
+    }.flatten.map(id => (id.rddId, id.splitIndex)).toSet
     val before = stored(events.take(firstWrite))
     val rdds = before.map(_._1)
     assert(rdds.size == 1, s"cached before the writes: $before")
