@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** Account-relation tables and the related-accounts serve face (ref
   * polkaholic.sql:3736 `proxyaccount`, :3776 `multisigaccount`; serve
   * lookup query.js:3542). The reference maintains these as MySQL rows
@@ -93,13 +95,10 @@ object AccountRelations {
     * decoded day tables — replay-idempotent, partition-overwrite per
     * chain like the date dumps). */
   def writeTables(calls: DataFrame, extrinsics: DataFrame,
-      outRoot: String): Map[String, DataFrame] = {
-    val tables = Map(
+      outRoot: String): MapView[String, DataFrame] =
+    Writers.publish(outRoot, Seq("chain_id"), None, Map(
       "proxyaccount" -> proxyAccounts(calls, extrinsics),
-      "multisigaccount" -> multisigAccounts(calls, extrinsics))
-    Writers.publish(outRoot, Seq("chain_id"), None, tables)
-    tables
-  }
+      "multisigaccount" -> multisigAccounts(calls, extrinsics)))
 
   /** Related-accounts lookup (ref query.js:3542): every account related
     * to `accountPub` with the relation kind — proxies in both

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The account-metrics daily tables — the reference's DEFINITIONS.md
   * BigQuery surface composed over the DUMP LAYOUT and landed as
   * date-partitioned tables like every other export (ref
@@ -72,20 +74,14 @@ object Accounts {
 
   /** Compose and write all four account tables as idempotent date
     * partitions (ref: the DEFINITIONS queries load
-    * `accounts{active,passive,new,reaped}{paraID}$date` daily).
-    *
-    * Returns READ-BACK frames over the written layout with the
-    * composed schema SUPPLIED — a day can legitimately produce zero
-    * rows for a table (no new accounts, nothing passive), and an
-    * empty partitioned write carries no parquet footers to infer a
-    * schema from, so a bare read would throw; supplying the schema
-    * makes empty days first-class for every consumer. (`active` is
-    * shared by the two writes that consume it; the returned frames
-    * are plain scans, so nothing recomputes downstream.) */
+    * `accounts{active,passive,new,reaped}{paraID}$date` daily). A day
+    * can legitimately produce zero rows for a table (no new accounts,
+    * nothing passive); its read-back still carries the schema.
+    * (`active` is shared by the two writes that consume it.) */
   def dumpAccountsDay(extrinsics: DataFrame, blocks: DataFrame,
       transfers: DataFrame, balancesToday: DataFrame,
       balancesPrev: DataFrame, logDT: String,
-      outRoot: String): Map[String, DataFrame] = {
+      outRoot: String): MapView[String, DataFrame] = {
     val active = activeAccounts(extrinsics, blocks)
     val tables = Map(
       "accountsactive" -> active,
@@ -94,7 +90,6 @@ object Accounts {
       "accountsreaped" -> reapedAccounts(balancesToday, balancesPrev))
       .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
     Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(active))
-    Writers.readBack(outRoot, tables)
   }
 
   /** `full_users` — the exchange/known-address attribution table (ref
@@ -205,9 +200,7 @@ object Accounts {
     * re-derives the full membership per run and upserts, so replace
     * is the batch-equivalent). */
   def dumpAccountLabels(roleFrames: Seq[(String, DataFrame)],
-      outRoot: String): DataFrame = {
-    val table = Seq("account_labels" -> accountLabels(roleFrames))
-    Writers.publish(outRoot, Nil, None, table)
-    Writers.readBack(outRoot, table)("account_labels")
-  }
+      outRoot: String): DataFrame =
+    Writers.publish(outRoot, Nil, None, Seq("account_labels" ->
+      accountLabels(roleFrames)))("account_labels")
 }

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The `assets` / `xcmassets` dimension export — the reference's
   * per-relay asset registry tables (builders substrateetl.js:3378
   * xcmgar_assets / :3403 xcmgar_xcmassets; schemas
@@ -219,16 +221,12 @@ object Assets {
   /** Publish both dimension snapshots for one relay as idempotent
     * relay_chain-partition overwrites (the dimension twin of the daily
     * dump's log_dt contract — re-publishing a relay replaces exactly
-    * that relay's rows) and return schema-supplied read-backs of the
-    * written layout. */
+    * that relay's rows). */
   def dumpAssets(chainAssets: DataFrame, registry: DataFrame,
-      relayChain: String, outRoot: String): Map[String, DataFrame] = {
-    val tables = Map(
+      relayChain: String, outRoot: String): MapView[String, DataFrame] =
+    Writers.publish(outRoot, Seq("relay_chain"), None, Map(
       "assets" -> assets(chainAssets, registry, relayChain),
-      "xcmassets" -> xcmassets(registry, relayChain))
-    Writers.publish(outRoot, Seq("relay_chain"), None, tables)
-    Writers.readBack(outRoot, tables)
-  }
+      "xcmassets" -> xcmassets(registry, relayChain)))
 
   /** Per-token `totalIssuance` snapshot recs — the shared shape of the
     * per-chain snapshot extractors (ref snapshot/bifrost.js:45-108:

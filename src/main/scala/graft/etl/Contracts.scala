@@ -4,6 +4,8 @@ import graft.decode.WasmDecode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The WASM `contracts` dataset — the three contracts-parachain export
   * tables (ref substrateetl.js:2520-2645 updateContracts composes them
   * from events/calls/state; :2646-2780 dumpContracts publishes; schemas
@@ -387,11 +389,11 @@ object Contracts {
 
   /** Publish all three tables as whole-table replaces (`bq load
     * --replace`, substrateetl.js:2773 — the reference notes they are
-    * deliberately NOT date-partitioned) and return the read-backs. */
+    * deliberately NOT date-partitioned). */
   def dumpContracts(events: DataFrame, extrinsics: DataFrame,
       calls: DataFrame, contractInfo: DataFrame, chains: DataFrame,
       outRoot: String, specs: Option[DataFrame] = None,
-      verified: Option[DataFrame] = None): Map[String, DataFrame] = {
+      verified: Option[DataFrame] = None): MapView[String, DataFrame] = {
     val dim = chainDimOf(chains)
     val code = wasmCodeRows(events, extrinsics)
     val contract = contractRows(contractInfo, events)
@@ -402,6 +404,5 @@ object Contracts {
         contractCallRows(calls, extrinsics), contract, code, dim,
         specs, verified))
     Writers.publish(outRoot, Nil, None, tables, Seq(code, contract))
-    Writers.readBack(outRoot, tables)
   }
 }

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The OpenGov democracy export — `votes` + `delegation` tables off the
   * `convictionVoting.votingFor` state walk (ref substrateetl.js:2141
   * dump_democracy: one state read at the finalized block, Casting
@@ -252,11 +254,8 @@ object Democracy {
     * into per-chain MySQL tables `votes{chainID}` / `delegation
     * {chainID}` with full-value replace — same semantics, one table). */
   def dumpDemocracy(casting: DataFrame, delegating: DataFrame,
-      outRoot: String, decimals: Int = 10): Map[String, DataFrame] = {
-    val tables = Map(
+      outRoot: String, decimals: Int = 10): MapView[String, DataFrame] =
+    Writers.publish(outRoot, Seq("chain_id"), None, Map(
       "votes" -> votes(casting, decimals),
-      "delegation" -> delegations(delegating, decimals))
-    Writers.publish(outRoot, Seq("chain_id"), None, tables)
-    Writers.readBack(outRoot, tables)
-  }
+      "delegation" -> delegations(delegating, decimals)))
 }

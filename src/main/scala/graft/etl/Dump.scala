@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.MapView
+
 /** The core batch ETL entry point — SURVEY §3.2 (`substrate-etl dump`,
   * ref substrateetl.js:6171 dump_substrateetl) as ONE DataFrame job:
   *
@@ -296,11 +298,9 @@ object Dump {
 
   /** Write the specversions dimension (whole-table overwrite — the
     * dimension is tiny and cumulative, ref substrateetl.js:148). */
-  def dumpSpecVersions(raw: DataFrame, outRoot: String): DataFrame = {
-    val dim = specVersions(raw)
-    Writers.publish(outRoot, Nil, None, Seq("specversions" -> dim))
-    dim
-  }
+  def dumpSpecVersions(raw: DataFrame, outRoot: String): DataFrame =
+    Writers.publish(outRoot, Nil, None,
+      Seq("specversions" -> specVersions(raw)))("specversions")
 
   /** Flat event grain of the events projection: one row per event
     * with block + extrinsic identity and the raw `event_idx`. */
@@ -529,11 +529,9 @@ object Dump {
   def dumpRelayCrowdloanDay(raw: DataFrame, logDT: String,
       outRoot: String, relayChainId: Int = 0,
       usd: Option[UsdDims] = None,
-      projects: Option[DataFrame] = None): DataFrame = {
-    val out = relayCrowdloan(raw, logDT, relayChainId, usd, projects)
-    Writers.publish(outRoot, Seq("log_dt"), None, Seq("crowdloan" -> out))
-    out
-  }
+      projects: Option[DataFrame] = None): DataFrame =
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("crowdloan" ->
+      relayCrowdloan(raw, logDT, relayChainId, usd, projects)))("crowdloan")
 
   /** logs projection: digest-log posexplode with log ids (P8,
     * ref substrateetl.js:6462-6473). */
@@ -620,7 +618,7 @@ object Dump {
     * shared day slice feeds both writes, like dumpDay's. */
   def dumpTracesDay(rawTraces: DataFrame, dim: DataFrame, logDT: String,
       outRoot: String, decimals: Int = 10,
-      ss58Network: Int = 42): Map[String, DataFrame] =
+      ss58Network: Int = 42): MapView[String, DataFrame] =
     publishTraces(rawTraces, dim, logDT, outRoot, decimals, ss58Network,
       None)
 
@@ -639,18 +637,17 @@ object Dump {
 
   private def publishTraces(rawTraces: DataFrame, dim: DataFrame,
       logDT: String, outRoot: String, decimals: Int, ss58Network: Int,
-      batchId: Option[Long]): Map[String, DataFrame] = {
+      batchId: Option[Long]): MapView[String, DataFrame] = {
     val day = dayTraces(rawTraces, logDT)
     val tables = Map(
       "traces" -> tracesOf(day, dim, logDT),
       "balances" -> balancesOf(day, dim, logDT, decimals, ss58Network))
     Writers.publish(outRoot, Seq("log_dt"), batchId, tables, Seq(day))
-    tables
   }
 
   /** The whole §3.2 entry point: validate (timestamp-presence check,
     * ref substrateetl.js:6451-6455), project all eight tables, write each
-    * as an idempotent date partition. Returns the table map.
+    * as an idempotent date partition.
     *
     * The day-filtered raw scan is shared by the eight writes (the
     * shared-frame rule of [[Writers]]): each write is its own job, and
@@ -664,16 +661,16 @@ object Dump {
     * all eight tables twice. The streaming path removes re-deliveries
     * before the dump ([[graft.streaming.EventStream.dedupExactStream]]). */
   def dumpDay(raw: DataFrame, logDT: String, outRoot: String,
-      usd: Option[UsdDims] = None): Map[String, DataFrame] =
+      usd: Option[UsdDims] = None): MapView[String, DataFrame] =
     publishDay(raw, logDT, outRoot, usd, None)
 
   private def publishDay(raw: DataFrame, logDT: String, outRoot: String,
-      usd: Option[UsdDims], batchId: Option[Long]): Map[String, DataFrame] = {
+      usd: Option[UsdDims],
+      batchId: Option[Long]): MapView[String, DataFrame] = {
     val day = dayBlocks(raw, logDT)
     val tables = projections(day, logDT,
       usd.getOrElse(UsdDims.empty(raw.sparkSession)))
     Writers.publish(outRoot, Seq("log_dt"), batchId, tables, Seq(day))
-    tables
   }
 
   /** The eight entity projections over an already-day-filtered frame
@@ -851,12 +848,13 @@ object Dump {
     val out = java.nio.file.Files
       .createTempDirectory("graft_bench_dump").toString
     try {
-      dumpDay(raw, "2024-03-01", out, Some(UsdDims(priceLog, chains)))
+      val landed =
+        dumpDay(raw, "2024-03-01", out, Some(UsdDims(priceLog, chains)))
       // read-back counts (tiny parquet reads): the caller can assert
       // the synthesized day actually flowed — an empty dump must fail
       // the smoke test, not "measure" a no-op
       Seq("blocks", "rewards", "crowdloan").map(t =>
-        t -> s.read.parquet(s"$out/$t").count()).toMap
+        t -> landed(t).count()).toMap
     } finally {
       // the stage leaves no disk residue behind on the bench host
       val pth = new org.apache.hadoop.fs.Path(out)

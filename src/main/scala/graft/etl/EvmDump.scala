@@ -4,6 +4,8 @@ import graft.decode.EvmDecode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The EVM-side daily export — the reference's `evmtxs` and
   * `evmtransfers` BigQuery tables plus the `accountsevm{active,passive}`
   * account rollups (table registry substrateetl.js:154-155; schemas
@@ -15,8 +17,7 @@ import org.apache.spark.sql.functions._
   * [[graft.decode.EvmDecode]]'s tx⋈receipt merge and ERC-20/721/1155
   * log extractors routed through the same
   * [[Writers.publish]] date-partition contract as the
-  * substrate-side dump, with schema-supplied read-backs so a day with
-  * no token transfers stays readable (the Accounts convention).
+  * substrate-side dump.
   *
   * 100 TB shape: ONE shuffle joins transactions to receipts on the tx
   * hash; every downstream projection (fee math, log explode, transfer
@@ -428,7 +429,7 @@ object EvmDump {
       logDT: String, outRoot: String,
       chains: Option[DataFrame] = None,
       eventSigs: Option[DataFrame] = None,
-      signatures: Option[DataFrame] = None): Map[String, DataFrame] = {
+      signatures: Option[DataFrame] = None): MapView[String, DataFrame] = {
     require(receipts.columns.contains("logs"),
       "dumpEvmDataset needs receipt logs — both tables project them")
     val combined = EvmDecode.combineTxReceipt(txs, receipts)
@@ -438,7 +439,6 @@ object EvmDump {
       "logs" -> evmLogsOf(combined, logDT, chains, eventSigs),
       "token_transfers" -> evmTokenTransfersOf(combined, logDT, chains))
     Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(combined))
-    Writers.readBack(outRoot, tables)
   }
 
   /** The day's two projections off ONE combined frame — the single
@@ -452,13 +452,11 @@ object EvmDump {
     "evmtransfers" -> evmtransfersOfCombined(combined, logDT, usd,
       tokenDecimals))
 
-  /** Write the day's two EVM tables as idempotent date partitions and
-    * return schema-supplied read-backs of the written layout (empty
-    * days carry no parquet footers — the dumpAccountsDay contract). */
+  /** Write the day's two EVM tables as idempotent date partitions. */
   def dumpEvmDay(txs: DataFrame, receipts: DataFrame, logDT: String,
       outRoot: String, usd: Option[Dump.UsdDims] = None,
       tokenDecimals: Option[DataFrame] = None,
-      signatures: Option[DataFrame] = None): Map[String, DataFrame] = {
+      signatures: Option[DataFrame] = None): MapView[String, DataFrame] = {
     // a receipts frame without logs would null the column through
     // combineTxReceipt's slim-frame tolerance and write an EMPTY
     // evmtransfers partition with no error — the day dump demands the
@@ -473,7 +471,6 @@ object EvmDump {
     val tables =
       evmProjections(combined, logDT, usd, tokenDecimals, signatures)
     Writers.publish(outRoot, Seq("log_dt"), None, tables, Seq(combined))
-    Writers.readBack(outRoot, tables)
   }
 
   /** Streaming twin of [[dumpEvmDay]] for `foreachBatch`: the realtime
@@ -520,7 +517,7 @@ object EvmDump {
     * magnitude as the passive side, so no broadcast assumption). */
   def dumpEvmAccountsDay(evmtxs: DataFrame, evmtransfers: DataFrame,
       paraId: String, relayChain: String, logDT: String,
-      outRoot: String): Map[String, DataFrame] = {
+      outRoot: String): MapView[String, DataFrame] = {
     val active = evmtxs
       .groupBy(col("from_address"))
       .agg(max(col("block_timestamp")).as("ts"),
@@ -537,6 +534,5 @@ object EvmDump {
       "accountsevmpassive" -> passive)
       .map { case (name, df) => name -> df.withColumn("log_dt", lit(logDT)) }
     Writers.publish(outRoot, Seq("log_dt"), None, tables)
-    Writers.readBack(outRoot, tables)
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** The hourly Dune-integration export — the reference's
   * `dump_dune_hour` (substrateetl.js:3455-3620: per (chain, day, hour),
   * export blocks/extrinsics/calls/events/transfers into HOUR-decorated
@@ -79,13 +81,12 @@ object Hourly {
     * (log_dt, hr) partition overwrite — the Spark twin of the
     * reference's per-hour `bq load --replace` into the HOUR-partitioned
     * `polkadot_hourly.*` tables. Each frame filters on its own time
-    * column pushed to the scan; the returned read-backs are
-    * schema-supplied (empty hours stay readable). `tsCols` maps a
-    * table to its partition time column when it is not `block_time`
-    * (the reference's partitioned_table switch, :150-164). */
+    * column pushed to the scan. `tsCols` maps a table to its partition
+    * time column when it is not `block_time` (the reference's
+    * partitioned_table switch, :150-164). */
   def dumpDuneHour(tables: Map[String, DataFrame], logDT: String,
-      hr: Int, outRoot: String,
-      tsCols: Map[String, String] = Map.empty): Map[String, DataFrame] = {
+      hr: Int, outRoot: String, tsCols: Map[String, String] = Map.empty)
+      : MapView[String, DataFrame] = {
     val hrKey = f"$logDT $hr%02d"
     val outs = tables.map { case (name, df) =>
       name -> df
@@ -94,6 +95,5 @@ object Hourly {
         .withColumn("hr", lit(hr))
     }
     Writers.publish(outRoot, Seq("log_dt", "hr"), None, outs)
-    Writers.readBack(outRoot, outs)
   }
 }

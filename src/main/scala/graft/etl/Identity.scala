@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** On-chain identity dimension (ref identityManager.js:40 dump_identity;
   * registrar decode feeding the `account`/`subaccount` tables the
   * reference joins into its serving faces). Built purely from decoded
@@ -247,16 +249,13 @@ object Identity {
 
   /** Publish the three dims as whole-table replaces (`bq load
     * --replace`, identityManager.js:185 / substrateetl.js:712 — none
-    * is date-partitioned) and return the read-backs. */
+    * is date-partitioned). */
   def dumpIdentityDims(identity: DataFrame, accounts: DataFrame,
-      outRoot: String): Map[String, DataFrame] = {
-    val tables = Map(
+      outRoot: String): MapView[String, DataFrame] =
+    Writers.publish(outRoot, Nil, None, Map(
       "identity" -> identity,
       "exchanges" -> exchanges(accounts),
-      "knownpubs" -> knownpubs(accounts))
-    Writers.publish(outRoot, Nil, None, tables)
-    Writers.readBack(outRoot, tables)
-  }
+      "knownpubs" -> knownpubs(accounts)))
 
   /** Serve-face decoration: left-join identity display/verified onto
     * any account-keyed result (the reference decorates related-account

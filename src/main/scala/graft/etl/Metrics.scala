@@ -50,18 +50,13 @@ object Metrics {
   }
 
   /** Write the day's blocklog rows as an idempotent date partition
-    * (the reference upserts one MySQL row per (chain, day)). Returns
-    * a schema-supplied read-back of the written layout — empty days
-    * stay readable (the Accounts convention). */
+    * (the reference upserts one MySQL row per (chain, day)). */
   def dumpBlocklogDay(blocks: DataFrame, extrinsics: DataFrame,
       events: DataFrame, transfers: DataFrame, active: DataFrame,
-      logDT: String, outRoot: String): DataFrame = {
-    val table = Seq("blocklog" ->
+      logDT: String, outRoot: String): DataFrame =
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("blocklog" ->
       blocklogDay(blocks, extrinsics, events, transfers, active)
-        .withColumn("log_dt", lit(logDT)))
-    Writers.publish(outRoot, Seq("log_dt"), None, table)
-    Writers.readBack(outRoot, table)("blocklog")
-  }
+        .withColumn("log_dt", lit(logDT))))("blocklog")
 
   /** `blocklogstats` — the monthly descriptive-stats rollup over the
     * daily blocklog table (ref substrateetl.js:3970-4000
@@ -115,11 +110,9 @@ object Metrics {
     * reference upserts one MySQL row per (chain, month); a re-roll of
     * a month replaces exactly that month). */
   def dumpBlocklogStats(blocklog: DataFrame, metrics: Seq[String],
-      outRoot: String): DataFrame = {
-    val table = Seq("blocklogstats" -> blocklogStats(blocklog, metrics))
-    Writers.publish(outRoot, Seq("month_dt"), None, table)
-    Writers.readBack(outRoot, table)("blocklogstats")
-  }
+      outRoot: String): DataFrame =
+    Writers.publish(outRoot, Seq("month_dt"), None, Seq("blocklogstats" ->
+      blocklogStats(blocklog, metrics)))("blocklogstats")
 
   /** The `chains` system table — one of the reference's two
     * non-date-partitioned BigQuery tables (substrateetl.js:157-159;
@@ -139,11 +132,9 @@ object Metrics {
     * partition decorator — the system-table contract; specversions,
     * the other non-partitioned table, ships the same way off
     * XcmMatcher.specVersions). */
-  def dumpChains(chainReg: DataFrame, outRoot: String): DataFrame = {
-    val table = Seq("chains" -> chainsTable(chainReg))
-    Writers.publish(outRoot, Nil, None, table)
-    Writers.readBack(outRoot, table)("chains")
-  }
+  def dumpChains(chainReg: DataFrame, outRoot: String): DataFrame =
+    Writers.publish(outRoot, Nil, None,
+      Seq("chains" -> chainsTable(chainReg)))("chains")
 
   /** paraID → chainID under a relay (ref paraTool.js
     * getChainIDFromParaIDAndRelayChain — the inverse of

@@ -221,9 +221,8 @@ object Snapshot {
       .withColumn("hr",
         (pmod(unix_timestamp(col("ts")), lit(86400L)) / 3600L)
           .cast("int"))
-    val table = Seq("snapshots" -> out)
-    Writers.publish(outRoot, Seq("log_dt", "chain_name", "hr"), None, table)
-    Writers.readBack(outRoot, table)("snapshots")
+    Writers.publish(outRoot, Seq("log_dt", "chain_name", "hr"), None,
+      Seq("snapshots" -> out))("snapshots")
   }
 
   /** The external balances-feed transform (ref substrateetl.js:544

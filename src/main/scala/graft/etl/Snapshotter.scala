@@ -245,8 +245,7 @@ object Snapshotter {
 
   /** One call = one chain placement landed: compose the catalog and
     * write through [[Snapshot.dumpSnapshots]]'s idempotent
-    * (log_dt, chain_name, hr) partition overwrite. Returns the
-    * read-back of the written layout. */
+    * (log_dt, chain_name, hr) partition overwrite. */
   def dumpChainSnapshot(chainName: String, frames: Frames,
       p: Placement, logDT: String, outRoot: String): DataFrame = {
     val recs = handleSnapshot(chainName, frames, p)

@@ -323,7 +323,7 @@ object Stakings {
       logDT: String, outRoot: String): DataFrame = {
     val out = stakingsAtEras(updates, eraEnds)
       .withColumn("log_dt", lit(logDT))
-    Writers.publish(outRoot, Seq("log_dt"), None, Seq("stakings" -> out))
-    out
+    Writers.publish(outRoot, Seq("log_dt"), None,
+      Seq("stakings" -> out))("stakings")
   }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.MapView
+
 /** Sink-side operators — SURVEY.md §2.1 (S7-S9):
   *
   *  - S7/S8: ONE publish path, [[Writers.publish]] — the Spark twin of
@@ -45,6 +47,17 @@ import org.apache.spark.storage.StorageLevel
   *    not computed first, as a concurrent first reader there only
   *    waits out one partition's scan; nor is any frame of a
   *    single-table publish, which has no concurrent readers.
+  *  - S7/S8 read-backs: [[Writers.publish]] returns what it landed, a
+  *    view from table name to a read of `$outRoot/$name` with the
+  *    published schema (an empty table stays readable, a partition
+  *    column keeps its published type, the read covers every
+  *    partition). The view holds each table's name and schema only and
+  *    builds a read when it is accessed, so a caller that drops it
+  *    lists nothing. Every publishing entry returns it: the view for
+  *    several tables, the one table's read for one, `Unit` for a
+  *    micro-batch. A table a publish just landed is read through that
+  *    return value, never re-read from its path (the reference's
+  *    consumers read the loaded table, not the loader's rows).
   *  - S9: merge-style upsert (ref polkaholicDB.js `on duplicate key
   *    update`) expressed as a key-resolved union — the plain-parquet
   *    stand-in for Delta `MERGE INTO`.
@@ -100,22 +113,32 @@ object Writers {
     * table when there are none); `batchId` makes it a micro-batch
     * publish. Several tables are written [[concurrently]]. `shared`
     * holds the frames the tables read in common, cached for the
-    * writes by the shared-frame rule. */
+    * writes by the shared-frame rule. Returns the landed tables'
+    * read-backs, built on access. */
   def publish(outRoot: String, partitionCols: Seq[String],
       batchId: Option[Long], tables: Iterable[(String, DataFrame)],
-      shared: Seq[DataFrame] = Nil): Unit = {
+      shared: Seq[DataFrame] = Nil): MapView[String, DataFrame] = {
     val cols = partitionCols ++ batchId.map(_ => "batch_id")
+    val outs = tables.toSeq.map { case (name, df) =>
+      name -> batchId.fold(df)(id => df.withColumn("batch_id", lit(id)))
+    }
+    val spark = outs.headOption.map(_._2.sparkSession)
     shared.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      val first = if (tables.size > 1) shared.filter(crossesExchange)
+      val first = if (outs.size > 1) shared.filter(crossesExchange)
         else Nil
       first.headOption.foreach(df =>
         concurrently(df.sparkSession, first)(_.count()))
-      eachTable(tables) { (name, df) =>
-        val out = batchId.fold(df)(id => df.withColumn("batch_id", lit(id)))
-        overwritePartitions(out, s"$outRoot/$name", cols)
-      }: Unit
+      spark.foreach(concurrently(_, outs) { case (name, df) =>
+        overwritePartitions(df, s"$outRoot/$name", cols)
+      }): Unit
     } finally shared.foreach(_.unpersist())
+    // the view's reads capture the session, paths and schemas only
+    spark.fold(MapView.empty[String, DataFrame])(s => outs
+      .map { case (name, df) => name -> (s"$outRoot/$name", df.schema) }
+      .toMap.view.mapValues { case (path, schema) =>
+        s.read.schema(schema).parquet(path)
+      })
   }
 
   /** Whether the cached plan of the persisted `df` holds an exchange. */
@@ -126,21 +149,6 @@ object Writers {
         .cachedPlan)(_.isInstanceOf[Exchange]).isDefined)
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
-
-  /** Schema-supplied read-backs of tables [[publish]] wrote, so a table
-    * with no rows stays readable. Each lists its table's directory; the
-    * listings run concurrently, like the writes. */
-  def readBack(outRoot: String,
-      tables: Iterable[(String, DataFrame)]): Map[String, DataFrame] =
-    eachTable(tables) { (name, df) =>
-      name -> df.sparkSession.read.schema(df.schema)
-        .parquet(s"$outRoot/$name")
-    }.toMap
-
-  private def eachTable[B](tables: Iterable[(String, DataFrame)])(
-      f: (String, DataFrame) => B): Seq[B] =
-    tables.headOption.fold(Seq.empty[B])(first =>
-      concurrently(first._2.sparkSession, tables.toSeq)(f.tupled))
 
   /** S7 — write `df` partitioned by `partitionCols`, replacing only the
     * partitions contained in the batch; with no partition columns
@@ -326,10 +334,8 @@ object WriterQueries {
     // reads the CURRENT table back (a lazy self-overwrite would read
     // the files it is replacing), upserts, and publishes the next as
     // a whole-table replace
-    def published(name: String, df: DataFrame): DataFrame = {
-      Writers.publish(root, Nil, None, Seq(name -> df))
-      s.read.parquet(s"$root/$name")
-    }
+    def published(name: String, df: DataFrame): DataFrame =
+      Writers.publish(root, Nil, None, Seq(name -> df))(name)
     val t0 = published("t0", base)
     val t1 = published("t1", Writers.upsert(t0,
       wave("1995-01-01", "1995-07-01", 1L), keyCols, "ver"))

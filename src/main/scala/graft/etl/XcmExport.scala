@@ -118,13 +118,10 @@ object XcmExport {
   /** Run the message matcher and write the `xcm` export as an
     * idempotent date partition next to [[dumpXcmDay]]'s transfers. */
   def dumpXcmMessagesDay(messages: DataFrame, logDT: String,
-      outRoot: String): DataFrame = {
-    val out = xcmMessages(messages, XcmMatcher.matchMessages(messages),
-      logDT)
-    Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcm" -> out),
-      Seq(messages))
-    out
-  }
+      outRoot: String): DataFrame =
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcm" ->
+      xcmMessages(messages, XcmMatcher.matchMessages(messages), logDT)),
+      Seq(messages))("xcm")
 
   /** The Dune hand-off projection of xcmtransfer rows (ref
     * substrateetl.js:526-541 dump_dune_xcmtransfer): exactly five
@@ -179,17 +176,15 @@ object XcmExport {
 
   /** Run the matcher and write the export as an idempotent date
     * partition (ref dump_xcm writes `xcmtransfers-{relay}-{logDT}`
-    * into a date-decorated table). Returns the exported frame. */
+    * into a date-decorated table). */
   def dumpXcmDay(transfers: DataFrame, candidates: DataFrame,
       logDT: String, outRoot: String,
-      usd: Option[Dump.UsdDims] = None): DataFrame = {
+      usd: Option[Dump.UsdDims] = None): DataFrame =
     // the transfer slice feeds BOTH the matcher join and the export
     // re-join: shared, so the (at scale, expensive) source is scanned
     // once, like dumpDay's day
-    val out = xcmTransfers(transfers,
-      XcmMatcher.matchTransfers(transfers, candidates), logDT, usd)
-    Writers.publish(outRoot, Seq("log_dt"), None,
-      Seq("xcmtransfers" -> out), Seq(transfers))
-    out
-  }
+    Writers.publish(outRoot, Seq("log_dt"), None, Seq("xcmtransfers" ->
+      xcmTransfers(transfers,
+        XcmMatcher.matchTransfers(transfers, candidates), logDT, usd)),
+      Seq(transfers))("xcmtransfers")
 }

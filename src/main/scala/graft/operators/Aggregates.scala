@@ -832,7 +832,6 @@ object Aggregates {
     val dir = queryDumpDir("graft_blocklog_dump")
     graft.etl.Metrics.dumpBlocklogDay(blocks, extrinsics, events,
       transfers, active, "2024-03-01", dir)
-    s.read.parquet(s"$dir/blocklog")
       .drop("log_dt").orderBy(col("chain_id"))
   }
 
@@ -1250,7 +1249,6 @@ object Aggregates {
     graft.etl.Accounts.dumpAccountLabels(Seq(
       "validator0" -> validator, "nominator0" -> nominator,
       "poolmember0" -> poolmember, "voter0" -> voter), dir)
-    s.read.parquet(s"$dir/account_labels")
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_accounts"),
         min(col("address_pubkey")).as("min_pub"),

@@ -150,7 +150,7 @@ object ContractOps {
     val specs = Seq(("0xc2", "0x633aa551", "flip", Seq.empty[String]))
       .toDF("code_hash", "selector", "method", "arg_types")
     graft.etl.Contracts.dumpContracts(events, extrinsics, calls,
-      contractInfo, chains, outRoot, specs = Some(specs))
+      contractInfo, chains, outRoot, specs = Some(specs)).toMap
   }
 
   // K18 — contractscode: last store per code hash wins, storer from

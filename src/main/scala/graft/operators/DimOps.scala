@@ -4,6 +4,8 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** I1–I3 — the published account dimensions THROUGH THE WRITER
   * (`identity` / `exchanges` / `knownpubs`; ref identityManager.js:41
   * dump_identity, substrateetl.js:671 publishExchangeAddress, schemas
@@ -71,7 +73,7 @@ object DimOps {
   /** The three dims through ONE dumpIdentityDims writer pass (i1 runs
     * its own because it also synthesizes the relay frames). */
   private def dumpedDims(s: SparkSession, d: String)
-      : Map[String, DataFrame] =
+      : MapView[String, DataFrame] =
     graft.etl.Identity.dumpIdentityDims(
       emptyIdent(s).limit(0)
         .select(col("pubkey")), // placeholder identity — the i2/i3

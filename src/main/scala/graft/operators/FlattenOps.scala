@@ -474,7 +474,6 @@ object FlattenOps {
     graft.etl.Dump.dumpRelayCrowdloanDay(raw, "2024-03-01", dir,
       usd = Some(graft.etl.Dump.UsdDims(priceLog, chains)),
       projects = Some(projects))
-    s.read.parquet(s"$dir/crowdloan")
       .select(col("event_id"), col("extrinsic_id"),
         col("extrinsic_hash"), col("extrinsic_section_method"),
         col("event_section_method"), col("contributor_pubkey"),

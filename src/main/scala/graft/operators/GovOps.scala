@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.MapView
+
 /** Governance (OpenGov conviction-voting) query face — the
   * testConviction.js capability as a relational tally. The fixture set
   * has no votes table, so the query derives a deterministic electorate
@@ -143,7 +145,7 @@ object GovOps {
   // and reads back; the DuckDB twin re-derives every exported column
   // from the synthesis arithmetic.
   private def demoDump(s: SparkSession, d: String)
-      : Map[String, DataFrame] = {
+      : MapView[String, DataFrame] = {
     val e = Tables.events(s, d).filter(col("event_id") < 900)
       .select(col("event_id"))
     val raw = (c: org.apache.spark.sql.Column) =>

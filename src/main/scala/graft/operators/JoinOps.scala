@@ -1029,7 +1029,6 @@ object JoinOps {
     graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
       "2024-03-01", dir,
       Some(graft.etl.Dump.UsdDims(priceLog, chains)))
-    s.read.parquet(s"$dir/xcmtransfers")
       .groupBy(col("destination_para_id"))
       .agg(
         count(lit(1)).as("n_matched"),
@@ -1155,7 +1154,6 @@ object JoinOps {
     val dir = queryDumpDir("graft_xcmmsg_dump")
     graft.etl.XcmExport.dumpXcmMessagesDay(src.unionByName(dst),
       "2024-03-01", dir)
-    s.read.parquet(s"$dir/xcm")
       .groupBy(col("msg_type"))
       .agg(
         count(lit(1)).as("n_messages"),

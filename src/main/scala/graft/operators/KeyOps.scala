@@ -534,8 +534,8 @@ object KeyOps {
           leU128Small(free), leU128Small(reserved),
           leU128Small(lit(0))))
     val out = queryDumpDir("graft_traces_dump")
-    graft.etl.Dump.dumpTracesDay(rawTraces, dim, "2024-03-01", out)
-    s.read.parquet(s"$out/balances")
+    graft.etl.Dump.dumpTracesDay(rawTraces, dim, "2024-03-01", out)(
+      "balances")
       .groupBy(col("address_pubkey"))
       .agg(
         count(lit(1)).as("n_touches"),
@@ -786,7 +786,8 @@ object KeyOps {
 
   /** Bench hooks: build + write the shared evm.* dataset dump / drop
     * the memo so the bench times the stage cold (nothing cached to
-    * release: the memo holds parquet read-backs). */
+    * release: the memo holds the dump's read-backs, forced so a
+    * memo-warm consumer lists nothing). */
   def warmEvmDataset(s: SparkSession, d: String): Unit = {
     evmDsStage(s, d); ()
   }
@@ -863,7 +864,7 @@ object KeyOps {
     val chains = Seq((0, "moonbeam")).toDF("chain_id", "id")
     graft.etl.EvmDump.dumpEvmDataset(txs, rec, "2024-03-01",
       queryDumpDir("graft_evmds_dump"), Some(chains), Some(sigs),
-      Some(callSigs))
+      Some(callSigs)).toMap
   }
 
   private def k21(s: SparkSession, d: String): DataFrame =

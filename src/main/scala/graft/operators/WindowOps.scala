@@ -373,9 +373,8 @@ object WindowOps {
     val eraEnds = Seq((0L, 500L), (1L, 1500L), (2L, 4500L),
       (3L, 4000000000L))
     val dir = queryDumpDir("graft_stakings_dump")
-    graft.etl.Stakings.dumpStakingsDay(updates, eraEnds,
+    val dumped = graft.etl.Stakings.dumpStakingsDay(updates, eraEnds,
       "2024-03-01", dir)
-    val dumped = s.read.parquet(s"$dir/stakings")
     graft.analytics.StakingAnalytics.eraAggregates(dumped)
       .select(col("era"),
         col("n_validators"),
@@ -440,9 +439,8 @@ object WindowOps {
       lit(null).cast("string").as("targets"))
     val eraEnds = Seq((0L, 500L), (1L, 1500L), (2L, 4500L))
     val dir = queryDumpDir("graft_stakinfo_dump")
-    graft.etl.Stakings.dumpStakingsDay(updates, eraEnds,
+    val dumped = graft.etl.Stakings.dumpStakingsDay(updates, eraEnds,
       "2024-03-01", dir)
-    val dumped = s.read.parquet(s"$dir/stakings")
     import graft.etl.Stakings
     val recs = Seq(
       Stakings.stakingInfoSnapshot(dumped, era = 1L,

@@ -130,16 +130,16 @@ class AccountRelationsSpec extends AnyFunSuite {
   test("writeTables materializes chain-partitioned relation tables") {
     val outRoot =
       java.nio.file.Files.createTempDirectory("graft_rel").toString
-    AccountRelations.writeTables(callsDf, exDf, outRoot)
-    val proxy = spark.read.parquet(s"$outRoot/proxyaccount")
+    val landed = AccountRelations.writeTables(callsDf, exDf, outRoot)
+    val proxy = landed("proxyaccount")
     assert(proxy.count() == 1) // only the surviving (alice, charlie) edge
     assert(proxy.columns.contains("chain_id"))
-    val ms = spark.read.parquet(s"$outRoot/multisigaccount")
+    val ms = landed("multisigaccount")
     assert(ms.count() == 4)
     // idempotent re-dump: same content, no duplication
-    AccountRelations.writeTables(callsDf, exDf, outRoot)
-    assert(spark.read.parquet(s"$outRoot/proxyaccount").count() == 1)
-    assert(spark.read.parquet(s"$outRoot/multisigaccount").count() == 4)
+    val again = AccountRelations.writeTables(callsDf, exDf, outRoot)
+    assert(again("proxyaccount").count() == 1)
+    assert(again("multisigaccount").count() == 4)
   }
 
   test("crowdloan standard pallet decodes contribute calls and events") {

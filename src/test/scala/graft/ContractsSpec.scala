@@ -359,14 +359,14 @@ class ContractsSpec extends AnyFunSuite {
     def run() = Contracts.dumpContracts(events, extrinsics, calls,
       contractInfo, chains, root, specs = Some(specs))
     val t1 = run()
-    val counts1 = t1.map { case (n, df) => n -> df.count() }
+    val counts1 = t1.mapValues(_.count()).toMap
     assert(counts1 == Map("contractscode" -> 2L, "contracts" -> 1L,
       "contractscall" -> 2L))
     // whole-table replace: a second publish replaces, never appends;
     // both latest-wins frames are computed ahead of the three writes
     var t2 = t1
     assert(SparkTestBase.framesComputedFirst(spark) { t2 = run() } == 2)
-    assert(t2.map { case (n, df) => n -> df.count() } == counts1)
+    assert(t2.mapValues(_.count()).toMap == counts1)
     // published schema field check against contracts.json essentials
     val cols = t1("contracts").columns.toSet
     for (c <- Seq("relay_chain", "id", "para_id", "address_pub_key",

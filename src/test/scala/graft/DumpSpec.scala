@@ -72,7 +72,9 @@ class DumpSpec extends AnyFunSuite {
 
   private lazy val outRoot =
     java.nio.file.Files.createTempDirectory("graft_dump").toString
+  // the idempotency case later lands 2024-03-02 in the same root
   private lazy val out = Dump.dumpDay(raw, "2024-03-01", outRoot)
+    .mapValues(_.filter(col("log_dt") === "2024-03-01"))
 
   test("blocks: finalized-only, per-block stats, ss58 author") {
     val b = out("blocks").orderBy("number").collect()
@@ -296,8 +298,7 @@ class DumpSpec extends AnyFunSuite {
     // whole-table overwrite writer round-trips
     val root = java.nio.file.Files
       .createTempDirectory("graft_specv").toString
-    Dump.dumpSpecVersions(raw, root)
-    assert(spark.read.parquet(s"$root/specversions").count() == 2)
+    assert(Dump.dumpSpecVersions(raw, root).count() == 2)
   }
 
   test("dumpTracesDay: traces + balances date partitions from wire rows") {
@@ -329,15 +330,15 @@ class DumpSpec extends AnyFunSuite {
       ("System", "Account", "blake2_128concat", 32)))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_traces_spec").toString
-    Dump.dumpTracesDay(rows, dim, "2024-03-01", dir)
-    val tr = spark.read.parquet(s"$dir/traces").collect()
+    val day1 = Dump.dumpTracesDay(rows, dim, "2024-03-01", dir)
+    val tr = day1("traces").collect()
       .map(r => r.getAs[String]("trace_id") ->
         (r.getAs[String]("section"), r.getAs[String]("storage"),
           r.getAs[String]("pk_extra"))).toMap
     assert(tr.keySet == Set("300-0", "300-1")) // day + finalized only
     assert(tr("300-0") == ("System", "Account", whoHex))
     assert(tr("300-1") == ("unknown", "unknown", null)) // kept, flagged
-    val bal = spark.read.parquet(s"$dir/balances").collect()
+    val bal = day1("balances").collect()
     assert(bal.length == 1) // only the System.Account row decodes
     val b = bal.head
     assert(b.getAs[String]("trace_id") == "300-0")
@@ -346,13 +347,15 @@ class DumpSpec extends AnyFunSuite {
     assert(b.getAs[java.math.BigDecimal]("free_raw").longValueExact
       == 50000000000L)
     assert(b.getAs[Double]("free") == 5.0)
-    // partition-column read-back infers DATE — compare by render
-    assert(String.valueOf(b.getAs[Any]("log_dt")) == "2024-03-01")
+    // the read-back keeps the published string partition column
+    assert(b.getAs[String]("log_dt") == "2024-03-01")
     // day-2 re-dump replaces only its own partition (idempotent); the
     // narrow day slice is not computed ahead of the two writes
-    assert(SparkTestBase.framesComputedFirst(spark)(
-      Dump.dumpTracesDay(rows, dim, "2024-03-02", dir)) == 0)
-    val both = spark.read.parquet(s"$dir/balances")
+    var day2 = scala.collection.MapView.empty[String, DataFrame]
+    assert(SparkTestBase.framesComputedFirst(spark) {
+      day2 = Dump.dumpTracesDay(rows, dim, "2024-03-02", dir)
+    } == 0)
+    val both = day2("balances")
     assert(both.count() == 2)
     assert(both.select("log_dt").distinct().count() == 2)
   }
@@ -423,7 +426,7 @@ class DumpSpec extends AnyFunSuite {
     assert(rw.head.getAs[Double]("price_usd") == 7.0)
     assert(rw.head.getAs[Double]("amount_usd") == expAmt * 7.0)
     // the written layout carries the decorated columns too
-    assert(spark.read.parquet(s"$dir/transfers").columns
+    assert(t("transfers").columns
       .count(Set("price_usd", "amount_usd")) == 2)
   }
 
@@ -442,9 +445,11 @@ class DumpSpec extends AnyFunSuite {
   test("idempotent partition overwrite: re-dump day 1, then dump day 2") {
     Dump.dumpDay(raw, "2024-03-01", outRoot) // replay same day
     // the day is a narrow filtered scan: no count job before the writes
-    assert(SparkTestBase.framesComputedFirst(spark)(
-      Dump.dumpDay(raw, "2024-03-02", outRoot)) == 0)
-    val blocks = spark.read.parquet(s"$outRoot/blocks")
+    var landed = scala.collection.MapView.empty[String, DataFrame]
+    assert(SparkTestBase.framesComputedFirst(spark) {
+      landed = Dump.dumpDay(raw, "2024-03-02", outRoot)
+    } == 0)
+    val blocks = landed("blocks")
     // day 1 not duplicated by the replay; day 2 appended
     assert(blocks.filter(col("log_dt") === "2024-03-01").count() == 2)
     assert(blocks.filter(col("log_dt") === "2024-03-02").count() == 1)
@@ -513,10 +518,9 @@ class DumpSpec extends AnyFunSuite {
     assert(out(0).getAs[String]("project_name") == "Acala" &&
       out(1).getAs[String]("project_name") == "Moonbeam")
     // replace semantics: re-dumping the day does not duplicate it
-    Dump.dumpRelayCrowdloanDay(rewardRaw, "2024-03-01", dir,
+    val back = Dump.dumpRelayCrowdloanDay(rewardRaw, "2024-03-01", dir,
       usd = Some(Dump.UsdDims(priceLog, chains)),
       projects = Some(projects))
-    val back = spark.read.parquet(s"$dir/crowdloan")
     assert(back.count() == 2)
     assert(back.columns.contains("log_dt"))
   }

@@ -347,6 +347,44 @@ class EtlSpec extends AnyFunSuite {
       jobsDuring(spark)(persisted(wide)(one(wide))))
   }
 
+  test("publish returns its landed tables: a dropped result lists " +
+      "nothing, a read covers the whole table with the published types") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import org.apache.spark.sql.types.{DateType, StringType}
+    def discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    def day(dt: String, ids: Long*) =
+      ids.map(i => (i, s"v$i", dt)).toDF("id", "v", "log_dt")
+    def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val root = tmpRoot()
+    // (a) neither the writes nor the dropped result list a directory
+    val before = discovered
+    Writers.publish(root, Seq("log_dt"), None,
+      Seq("t" -> day("2024-03-01", 1L, 2L)))
+    assert(discovered == before, "a dropped publish result listed files")
+    // (b) an accessed read-back scans $root/t with the published names
+    // and types: log_dt stays a string, where an inferring read of the
+    // same directory gives a DATE
+    val published = day("2024-03-02", 3L)
+    val t = Writers.publish(root, Seq("log_dt"), None,
+      Seq("t" -> published))("t")
+    assert(discovered > before, "the accessed read-back listed nothing")
+    assert(t.inputFiles.nonEmpty &&
+      t.inputFiles.forall(_.contains(s"$root/t/log_dt=")), t.inputFiles)
+    assert(types(t) == types(published))
+    assert(t.schema("log_dt").dataType == StringType)
+    assert(spark.read.parquet(s"$root/t").schema("log_dt").dataType ==
+      DateType)
+    // (c) the read-back is the whole table, the earlier day included
+    assert(t.select("log_dt", "id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet ==
+      Set(("2024-03-01", 1L), ("2024-03-01", 2L), ("2024-03-02", 3L)))
+    // and an empty partitioned day reads back as zero rows, full schema
+    val empty = Writers.publish(tmpRoot(), Seq("log_dt"), None,
+      Seq("t" -> published.limit(0)))("t")
+    assert(empty.count() == 0)
+    assert(types(empty) == types(published))
+  }
+
   test("upsert: updates win on key, inserts appended") {
     val base = Seq((1L, "old", 1L), (2L, "keep", 1L))
       .toDF("k", "v", "ver")
@@ -756,9 +794,8 @@ class EtlSpec extends AnyFunSuite {
         "amount_received", "xcm_teleport_fees", "event_id", "reaped")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_xcm_spec").toString
-    graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
-      "2024-03-01", dir)
-    val out = spark.read.parquet(s"$dir/xcmtransfers").collect()
+    val out = graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
+      "2024-03-01", dir).collect()
       .map(r => r.getAs[String]("origination_extrinsic_id") -> r).toMap
     assert(out.keySet == Set("5-1", "6-1")) // 7-1 unmatched, not exported
     val m1 = out("5-1")
@@ -781,12 +818,14 @@ class EtlSpec extends AnyFunSuite {
     // table schema is partition-invariant
     assert(m1.isNullAt(m1.fieldIndex("price_usd")) &&
       m1.isNullAt(m1.fieldIndex("origination_amount_sent_usd")))
-    // re-dumping another day leaves this partition untouched; a
-    // single-table publish computes no shared frame ahead of its write
-    assert(SparkTestBase.framesComputedFirst(spark)(
-      graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
-        "2024-03-02", dir)) == 0)
-    val all = spark.read.parquet(s"$dir/xcmtransfers")
+    // re-dumping another day leaves this partition untouched (the
+    // read-back covers the whole table); a single-table publish
+    // computes no shared frame ahead of its write
+    var all: DataFrame = null
+    assert(SparkTestBase.framesComputedFirst(spark) {
+      all = graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
+        "2024-03-02", dir)
+    } == 0)
     assert(all.count() == 4 &&
       all.select("log_dt").distinct().count() == 2)
     // with price dims the export values at the as-of price; chain
@@ -798,19 +837,18 @@ class EtlSpec extends AnyFunSuite {
       .toDF("asset", "chain_id", "index_ts", "price_usd")
     val chains = Seq((22000, ksmKey, 12))
       .toDF("chain_id", "native_asset", "decimals")
-    graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
+    val day1 = graft.etl.XcmExport.dumpXcmDay(transfers, candidates,
       "2024-03-01", dir, Some(Dump.UsdDims(priceLog, chains)))
-    val priced = spark.read.parquet(s"$dir/xcmtransfers")
-      .filter(col("log_dt") === "2024-03-01" &&
+      .filter(col("log_dt") === "2024-03-01")
+    val priced = day1.filter(
         col("origination_extrinsic_id") === "5-1").head
     assert(priced.getAs[Double]("price_usd") == 6.0)
     assert(priced.getAs[Double]("origination_amount_sent_usd") == 6000.0)
     assert(priced.getAs[Double]("destination_amount_received_usd")
       == 5940.0)
     // the DOT transfer's asset key has no price point → stays null
-    val unpriced = spark.read.parquet(s"$dir/xcmtransfers")
-      .filter(col("log_dt") === "2024-03-01" &&
-        col("origination_extrinsic_id") === "6-1").head
+    val unpriced = day1.filter(
+      col("origination_extrinsic_id") === "6-1").head
     assert(unpriced.isNullAt(unpriced.fieldIndex("price_usd")))
     // the serving-view tier covers the export table (trailing window
     // over origination_ts; fixture timestamps live near the epoch, so
@@ -887,10 +925,12 @@ class EtlSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_xcmmsg_spec").toString
     // one table: no shared frame is computed ahead of the write
-    assert(SparkTestBase.framesComputedFirst(spark)(
-      graft.etl.XcmExport.dumpXcmMessagesDay(messages, "2024-03-01",
-        dir)) == 0)
-    val out = spark.read.parquet(s"$dir/xcm").collect()
+    var landed: DataFrame = null
+    assert(SparkTestBase.framesComputedFirst(spark) {
+      landed = graft.etl.XcmExport.dumpXcmMessagesDay(messages,
+        "2024-03-01", dir)
+    } == 0)
+    val out = landed.collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[String]("msg_hash") == "0xm1")

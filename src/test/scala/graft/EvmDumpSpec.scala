@@ -96,7 +96,8 @@ class EvmDumpSpec extends AnyFunSuite {
       Option.empty[String], Seq(lg))).toDF(rxCols: _*)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_evmds").toString
-    var out = Map.empty[String, org.apache.spark.sql.DataFrame]
+    var out =
+      scala.collection.MapView.empty[String, org.apache.spark.sql.DataFrame]
     // the tx⋈receipt join is computed ahead of the three writes
     assert(SparkTestBase.framesComputedFirst(spark) {
       out = graft.etl.EvmDump.dumpEvmDataset(txs, rx, "2024-03-01", dir)

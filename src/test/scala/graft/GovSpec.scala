@@ -243,9 +243,9 @@ class GovSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_democracy").toString
     val c1 = Democracy.dumpDemocracy(casting, deleg, dir)
-      .map { case (n, df) => n -> df.count() }
+      .mapValues(_.count()).toMap
     val c2 = Democracy.dumpDemocracy(casting, deleg, dir)
-      .map { case (n, df) => n -> df.count() }
+      .mapValues(_.count()).toMap
     assert(c1 == Map("votes" -> 1L, "delegation" -> 2L) && c2 == c1)
   }
 }

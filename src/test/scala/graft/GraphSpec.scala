@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.GraphOps
+import graft.operators.{DedupOps, GraphOps}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -138,5 +139,22 @@ class GraphSpec extends AnyFunSuite {
     // dangling mass leaks each round (6 of 23 nodes are sinks), so the
     // total sits well below 1 — but never above it
     assert(total <= 1.0 + 1e-9 && total > 0.2)
+  }
+
+  test("pageRank and labelPropagation keep only their result's " +
+      "checkpoint: edge and superseded round blocks are released") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    def holdsOnlyResult(run: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run
+      val held = out.queryExecution.analyzed
+        .collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert((sc.getPersistentRDDs.keySet -- before) === held)
+      assert(held.size === 1)
+      DedupOps.releaseCheckpoint(out)
+    }
+    holdsOnlyResult(GraphOps.pageRank(edges, 3))
+    holdsOnlyResult(GraphOps.labelPropagation(edges, rounds = 3))
   }
 }

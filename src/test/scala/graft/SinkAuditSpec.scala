@@ -9,9 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * which are file exports, not tables. Frames that several tables
   * share are passed to the publish, which owns their cache, so no
   * source but Writers may call `.persist(`, `.unpersist(` or
-  * `materialize(` (a `localCheckpoint` is not a persist). A new inline
-  * write or hand-rolled shared-frame lifetime fails here, naming its
-  * file, line and enclosing `def`. */
+  * `materialize(` (a `localCheckpoint` is not a persist). A table a
+  * publish just landed is read through the publish's return value, so
+  * no `graft/etl` or `graft/operators` source may call
+  * `.read.parquet(` but Layout (its compaction input) and Views (the
+  * view catalog). A new inline write, hand-rolled shared-frame
+  * lifetime or re-read of a dump fails here, naming its file, line and
+  * enclosing `def`. */
 class SinkAuditSpec extends AnyFunSuite {
   private val etlDir = new java.io.File("src/main/scala/graft/etl")
   private val SinkFiles = Set("Writers.scala", "Layout.scala")
@@ -19,12 +23,16 @@ class SinkAuditSpec extends AnyFunSuite {
     ("XcmExport.scala", "dumpDuneXcmTransfers"),
     ("Snapshot.scala", "transformBalancesFeed"))
 
-  private lazy val etlSources = {
-    val files = Option(etlDir.listFiles()).toSeq.flatten
+  private val ParquetReaders = Set("Layout.scala", "Views.scala")
+
+  private def sources(dir: java.io.File): Seq[java.io.File] = {
+    val files = Option(dir.listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
-    assert(files.size > 10, s"no etl sources under ${etlDir.getAbsolutePath}")
+    assert(files.size > 10, s"no sources under ${dir.getAbsolutePath}")
     files
   }
+
+  private lazy val etlSources = sources(etlDir)
 
   /** (file, line, enclosing def) of each match of `call` outside
     * comments. */
@@ -62,5 +70,18 @@ class SinkAuditSpec extends AnyFunSuite {
     assert(stray.isEmpty, stray.map { case (f, l, d) => s"$f:$l in $d" }
       .mkString("shared-frame lifetimes outside Writers.publish: ", ", ",
         ""))
+  }
+
+  test("no graft/etl or graft/operators source re-reads parquet, bar " +
+      "Layout's compaction input and the Views catalog") {
+    val reads = (etlSources ++
+      sources(new java.io.File("src/main/scala/graft/operators")))
+      .flatMap(sites("""\.read\s*\.parquet\(""".r))
+    val stray = reads.filterNot(r => ParquetReaders(r._1))
+    assert(stray.isEmpty, stray.map { case (f, l, d) => s"$f:$l in $d" }
+      .mkString("parquet re-reads (read a landed table through the " +
+        "publish's return value): ", ", ", ""))
+    assert(ParquetReaders.forall(f => reads.exists(_._1 == f)),
+      s"stale exemption: ${ParquetReaders -- reads.map(_._1)}")
   }
 }

@@ -129,9 +129,8 @@ class StakingSpec extends AnyFunSuite {
       .withColumn("nominationpools_commission", lit(null).cast("double"))
     val dir = java.nio.file.Files
       .createTempDirectory("graft_stakings_spec").toString
-    graft.etl.Stakings.dumpStakingsDay(updates,
+    val dumped = graft.etl.Stakings.dumpStakingsDay(updates,
       Seq((0L, 100L), (1L, 200L)), "2024-03-01", dir)
-    val dumped = spark.read.parquet(s"$dir/stakings")
     val rows = dumped.collect().map(r =>
       (r.getAs[Long]("era"), r.getAs[String]("storage"),
         r.getAs[String]("address_pubkey")) ->
